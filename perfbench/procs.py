@@ -99,6 +99,14 @@ def tree_cpu_seconds(root: int) -> float:
     return ticks / _CLK_TCK
 
 
+def host_steal_seconds() -> float:
+    """CPU time this machine's virtual CPUs were ready to run while the
+    hypervisor ran other guests (``steal`` in ``/proc/stat``), summed
+    over CPUs."""
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8]) / _CLK_TCK
+
+
 def peak_rss_mb(pid: int) -> float:
     """VmHWM (peak resident set) of ``pid`` in MiB, 0 if it is gone."""
     try:

@@ -2,7 +2,7 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload window_frames --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload window_frames --seed 1 --seconds 18 --trace 0
 
 Prints a human-readable report, then one JSON line:
 ``{"correct", "attempted", "failed", "metrics"}``.  With ``--trace 0``
@@ -15,8 +15,8 @@ of its own; this process is a child subreaper, so it can kill and wait
 for the whole tree on success, failure, timeout, SIGINT or SIGTERM, and
 it exits non-zero if any descendant survives.  Scratch files (Spark
 local dirs, ``tempfile`` dirs, checkpoints) live in a per-run directory
-under ``.perfbench/`` that is removed at exit; input tables and oracle
-hashes are cached there across runs.
+under ``.perfbench/`` that is removed at exit; oracle hashes are cached
+there across runs.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 sys.path[:0] = [str(ROOT), str(ROOT / "scripts")]
 
-import datagen  # noqa: E402
+import data  # noqa: E402
 import procs  # noqa: E402
 import tracing  # noqa: E402
 from workloads import WORKLOADS, input_rows  # noqa: E402
@@ -73,16 +73,24 @@ def unit_of(metric: str) -> str:
     return "count"
 
 
-def oracle_refs(names: list[str], data: Path) -> dict[str, dict]:
-    """Canonical hash, row count and columns of each entry's DuckDB oracle
-    output, cached per (board source, input tables, DuckDB version)."""
+def _oracle_key(tables: Path) -> str:
+    """Digest of everything an oracle hash depends on: the board, the
+    library (some oracles' SQL is generated by library code), the hash
+    function, the input tables and the DuckDB version."""
     import duckdb
 
-    key = hashlib.sha256(
-        (ROOT / "__spark_entry__.py").read_bytes()
-        + json.dumps(datagen.manifest(data), sort_keys=True).encode()
-        + duckdb.__version__.encode()
-    ).hexdigest()[:16]
+    h = hashlib.sha256(data.digest(tables) + duckdb.__version__.encode())
+    sources = [ROOT / "__spark_entry__.py", ROOT / "scripts" / "check_entry.py",
+               *sorted((ROOT / "tidier_spark").rglob("*.py"))]
+    for p in sources:
+        h.update(str(p.relative_to(ROOT)).encode() + p.read_bytes())
+    return h.hexdigest()[:16]
+
+
+def oracle_refs(names: list[str], tables: Path) -> dict[str, dict]:
+    """Canonical hash, row count and columns of each entry's DuckDB oracle
+    output, cached under ``_oracle_key``."""
+    key = _oracle_key(tables)
     cache = CACHE / "oracle" / key
     cache.mkdir(parents=True, exist_ok=True)
     missing = [n for n in names if not (cache / f"{n}.json").exists()]
@@ -92,7 +100,7 @@ def oracle_refs(names: list[str], data: Path) -> dict[str, dict]:
         import __spark_entry__ as board
 
         sqls = board.oracle_sql()
-        con = datagen.duckdb_views(data)
+        con = data.duckdb_views(tables)
         try:
             for name in missing:
                 df = con.execute(sqls[name]).df()
@@ -156,7 +164,7 @@ def measure(args) -> tuple[list[str], dict]:
         (rundir / sub).mkdir(parents=True, exist_ok=True)
     deadline = time.monotonic() + DEADLINE_S - 5.0
     try:
-        args.data = datagen.ensure_data(CACHE / "data", args.sf)
+        args.data = data.data_dir(args.sf)
         refs = oracle_refs(list(workload.entries), args.data)
         (rundir / "oracle.json").write_text(json.dumps(refs))
         extra = ["--oracle", str(rundir / "oracle.json")]
@@ -171,7 +179,7 @@ def measure(args) -> tuple[list[str], dict]:
 
 
 def report(args, workload, refs, res, spans_path) -> tuple[list[str], dict]:
-    rows = {t: v["rows"] for t, v in datagen.manifest(args.data).items()}
+    rows = data.table_rows(args.data)
     passes = [p for p in res["passes"] if not p["traced"]]
     entry_s = [t for p in passes for t in p["entry_s"].values()]
     start_s, warm_s = res["start_s"], res["warm_s"]
@@ -187,6 +195,9 @@ def report(args, workload, refs, res, spans_path) -> tuple[list[str], dict]:
         "timed passes: " + " ".join(
             f"{p['s']:.3f}{'*' if p['traced'] else ''}" for p in res["passes"]
         ) + " s" + (" (* traced)" if args.trace else ""),
+        f"host: {res['steal_s']:.2f} CPU-s stolen by the hypervisor during the "
+        f"timed passes ({100 * res['steal_s'] / (args.cpus * sum(p['s'] for p in res['passes'])):.1f}%"
+        f" of {args.cpus} CPUs)",
         "entry medians: " + " ".join(
             f"{k}={statistics.median(p['entry_s'][k] for p in passes):.3f}"
             for k in workload.entries
@@ -251,7 +262,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=0.01, help="input scale factor")
+    ap.add_argument("--sf", type=float, choices=(0.01, 0.001), default=0.01,
+                    help="input scale factor (the tables under perfbench/data)")
     args = ap.parse_args(argv)
     args.cpus = len(os.sched_getaffinity(0))
 

@@ -64,6 +64,10 @@ def test_traced_run_prints_every_per_layer_metric():
     assert metrics["exec.jobs"]["value"] >= 1
     assert metrics["pandas_tier.calls"]["value"] >= 1  # frame_apply_median
     assert metrics["operators.dedup.calls"]["value"] == 0
+    # stream_sessions: one micro-batch through a session-window state store
+    assert metrics["streaming.calls"]["value"] >= 1
+    assert metrics["streaming.batches"]["value"] >= 1
+    assert metrics["streaming.state_rows"]["value"] >= 1
     assert "dominant layer:" in out.stdout and "tracing overhead:" in out.stdout
 
 

@@ -32,23 +32,29 @@ HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 sys.path[:0] = [str(ROOT), str(ROOT / "scripts")]
 
-import datagen  # noqa: E402
+import data  # noqa: E402
 import procs  # noqa: E402
 import tracing  # noqa: E402
 from workloads import WORKLOADS, pass_orders  # noqa: E402
 
 DRIVER_MEMORY = "2g"
+YOUNG_GEN = "256m"
 WARM_PASSES = 2  # untimed noop passes after the oracle pass
 
 
 def spark_conf(rundir: Path) -> dict[str, str]:
     """Harness settings on top of the library's ``recommended_conf()``:
     no UI, a driver that fits a 15 GB box, and Spark's scratch files
-    (local dirs, warehouse) inside ``rundir``."""
+    (local dirs, warehouse) inside ``rundir``.  The heap starts at its
+    full size and the young generation is fixed: a heap grown on demand
+    kept growing through the timed passes, which then sped up pass by
+    pass, and a full heap alone lets G1 grow the young generation over
+    most of it, so the whole heap is touched."""
     return {
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
         "spark.driver.memory": DRIVER_MEMORY,
+        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY} -Xmn{YOUNG_GEN}",
         "spark.local.dir": str(rundir / "local"),
         "spark.sql.warehouse.dir": str(rundir / "warehouse"),
     }
@@ -136,17 +142,17 @@ def _check_output(pdf, ref: dict, oracle_df) -> str | None:
     return "; ".join(problems) or None
 
 
-def _oracle_df(data: Path, name: str):
+def _oracle_df(tables: Path, name: str):
     import __spark_entry__ as board
 
-    con = datagen.duckdb_views(data)
+    con = data.duckdb_views(tables)
     try:
         return con.execute(board.oracle_sql()[name]).df()
     finally:
         con.close()
 
 
-def _oracle_pass(spark, fns, order, data: Path, refs) -> tuple[dict, dict]:
+def _oracle_pass(spark, fns, order, tables: Path, refs) -> tuple[dict, dict]:
     """Run each entry once, collecting its output and checking it against
     the oracle.  Returns (entry -> seconds excluding hashing, failures)."""
     times, failures = {}, {}
@@ -154,14 +160,14 @@ def _oracle_pass(spark, fns, order, data: Path, refs) -> tuple[dict, dict]:
         t0 = time.perf_counter()
         pdf = None
         try:
-            pdf = fns[name](spark, str(data)).toPandas()
+            pdf = fns[name](spark, str(tables)).toPandas()
         except Exception as exc:
             failures[name] = f"warm pass raised {type(exc).__name__}: {exc}"[:500]
         finally:
             spark.catalog.clearCache()
         times[name] = time.perf_counter() - t0
         if pdf is not None:
-            bad = _check_output(pdf, refs[name], lambda: _oracle_df(data, name))
+            bad = _check_output(pdf, refs[name], lambda: _oracle_df(tables, name))
             if bad:
                 failures[name] = bad
     return times, failures
@@ -175,7 +181,7 @@ def measure(spark, args, tracer: tracing.Tracer | None) -> dict:
     refs = json.loads(args.oracle.read_text())
     orders = pass_orders(list(fns), args.seed)
     sc = spark.sparkContext
-    data = str(args.data)
+    sf_dir = str(args.data)
     me = os.getpid()
     warm_entry_s, failures = _oracle_pass(spark, fns, next(orders), args.data, refs)
     attempted, failed = len(fns), len(failures)
@@ -199,10 +205,10 @@ def measure(spark, args, tracer: tracing.Tracer | None) -> dict:
             attempted += 1
             try:
                 if traced:
-                    _traced_execution(spark, tracer, probe, name, fns[name], data)
+                    _traced_execution(spark, tracer, probe, name, fns[name], sf_dir)
                 else:
                     try:
-                        fns[name](spark, data).write.mode("overwrite").format("noop").save()
+                        fns[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
                     finally:
                         spark.catalog.clearCache()
             except Exception as exc:
@@ -225,6 +231,7 @@ def measure(spark, args, tracer: tracing.Tracer | None) -> dict:
     # every entry, so untimed noop passes follow the oracle pass
     warm = [run_pass(False) for _ in range(WARM_PASSES)]
     passes: list[dict] = []
+    steal0 = procs.host_steal_seconds()
     deadline = time.perf_counter() + args.seconds
     while len(passes) < (2 if tracer else 1) or (
         time.perf_counter() + statistics.median(p["s"] for p in passes) <= deadline
@@ -239,6 +246,7 @@ def measure(spark, args, tracer: tracing.Tracer | None) -> dict:
         "attempted": attempted,
         "failed": failed,
         "passes": passes,
+        "steal_s": procs.host_steal_seconds() - steal0,
         "peak_rss_mb": procs.peak_rss_mb(me) + (procs.peak_rss_mb(jvm) if jvm else 0.0),
     }
     if tracer:
@@ -256,13 +264,13 @@ def measure(spark, args, tracer: tracing.Tracer | None) -> dict:
     return result
 
 
-def _traced_execution(spark, tracer, probe, name, fn, data) -> None:
+def _traced_execution(spark, tracer, probe, name, fn, sf_dir) -> None:
     tracer.entry = name
     alive = spark.sparkContext._jsc.getPersistentRDDs().size()
     with tracer.span(name, "entry"):
         try:
             with tracer.span("build", "build"):
-                df = fn(spark, data)
+                df = fn(spark, sf_dir)
             with tracer.span("write", "exec"):
                 df.write.mode("overwrite").format("noop").save()
             probe.before_clear()
