@@ -2,7 +2,7 @@
 
 Usage (from the repository root):
 
-    python3 perfbench/run.py --workload window_frames --seed 1 --seconds 18 --trace 0
+    python3 perfbench/run.py --workload window_frames --seed 1 --seconds 24 --trace 0
 
 Prints a human-readable report, then one JSON line:
 ``{"correct", "attempted", "failed", "metrics"}``.  With ``--trace 0``
@@ -186,7 +186,7 @@ def report(args, workload, refs, res, spans_path) -> tuple[list[str], dict]:
     failures = res["failures"]
     lines = [
         f"perfbench workload={args.workload} seed={args.seed} trace={args.trace} "
-        f"sf={args.sf:g} cpus={args.cpus} entries={len(workload.entries)} "
+        f"sf={args.sf:g} task_slots={args.cpus}/{args.nproc} entries={len(workload.entries)} "
         f"input_rows/pass={input_rows(workload, rows)}",
         f"oracle: {len(refs) - len(failures)}/{len(refs)} entries match DuckDB",
         *(f"  FAILED {name}: {why}" for name, why in failures.items()),
@@ -196,8 +196,8 @@ def report(args, workload, refs, res, spans_path) -> tuple[list[str], dict]:
             f"{p['s']:.3f}{'*' if p['traced'] else ''}" for p in res["passes"]
         ) + " s" + (" (* traced)" if args.trace else ""),
         f"host: {res['steal_s']:.2f} CPU-s stolen by the hypervisor during the "
-        f"timed passes ({100 * res['steal_s'] / (args.cpus * sum(p['s'] for p in res['passes'])):.1f}%"
-        f" of {args.cpus} CPUs)",
+        f"timed passes ({100 * res['steal_s'] / (args.nproc * sum(p['s'] for p in res['passes'])):.1f}%"
+        f" of {args.nproc} CPUs)",
         "entry medians: " + " ".join(
             f"{k}={statistics.median(p['entry_s'][k] for p in passes):.3f}"
             for k in workload.entries
@@ -265,7 +265,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--sf", type=float, choices=(0.01, 0.001), default=0.01,
                     help="input scale factor (the tables under perfbench/data)")
     args = ap.parse_args(argv)
-    args.cpus = len(os.sched_getaffinity(0))
+    args.nproc = len(os.sched_getaffinity(0))
+    # half the CPUs run Spark tasks; the other half is left to the JVM's
+    # JIT and GC threads, the Python driver and the Python workers, which
+    # on a fully booked local[nproc] made the runs disagree (README, Sizing)
+    args.cpus = max(1, args.nproc // 2)
 
     missing = [p for p in ("__spark_entry__.py", "tidier_spark", "scripts/check_entry.py")
                if not (ROOT / p).exists()]

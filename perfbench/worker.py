@@ -7,9 +7,10 @@ parent spawned this process, then runs the workload:
    entry's output is collected and its canonical hash compared with the
    DuckDB oracle's; hashing time is excluded from ``warm_s``), then
    ``WARM_PASSES`` untimed passes of the timed kind;
-2. timed passes, each entry once per pass in a seeded order, until the
-   next pass would overrun ``--seconds``.  One entry execution is
-   ``fn(spark, sf_dir)``, a ``noop`` write, then ``clearCache()``.
+2. timed passes, each entry once per pass in a seeded order, started
+   until ``--seconds`` have passed; the last one runs to its end.  One
+   entry execution is ``fn(spark, sf_dir)``, a ``noop`` write, then
+   ``clearCache()``.
 
 With ``--trace 1`` the wrappers from ``tracing.py`` are installed before
 ``__spark_entry__`` is imported and passes alternate untraced / traced,
@@ -22,7 +23,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import statistics
 import sys
 import time
 import warnings
@@ -39,7 +39,7 @@ from workloads import WORKLOADS, pass_orders  # noqa: E402
 
 DRIVER_MEMORY = "2g"
 YOUNG_GEN = "256m"
-WARM_PASSES = 2  # untimed noop passes after the oracle pass
+WARM_PASSES = 1  # untimed noop passes after the oracle pass
 
 
 def spark_conf(rundir: Path) -> dict[str, str]:
@@ -233,9 +233,10 @@ def measure(spark, args, tracer: tracing.Tracer | None) -> dict:
     passes: list[dict] = []
     steal0 = procs.host_steal_seconds()
     deadline = time.perf_counter() + args.seconds
-    while len(passes) < (2 if tracer else 1) or (
-        time.perf_counter() + statistics.median(p["s"] for p in passes) <= deadline
-    ):
+    # the last pass starts before the deadline and runs to its end: a slow
+    # run stopped before a pass that would overrun kept two or three passes
+    # of a workload, too few for a median
+    while len(passes) < (2 if tracer else 1) or time.perf_counter() < deadline:
         passes.append(run_pass(traced=tracer is not None and len(passes) % 2 == 1))
 
     jvm = procs.child_named(me, "java")
