@@ -4415,138 +4415,116 @@ def _q_rolling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The driver's correctness run covers the FIRST 50 queries() keys.
-# Round-13 rotation (verdict r12 task #3): the rotation policy is now
-# "touched-since-last-driver-row OUTRANKS stale" — positions 1-42 are
-# the 42 entries whose LAST hash-green driver row is r09 (the stalest
-# cohort on the board), positions 43-50 the 8 entries whose
-# semantics-adjacent code was REWRITTEN in the r12 optimization round
-# without landing in the r12 driver window (_R12_REWRITTEN below):
-# their correctness currently rests on builder-run strict checks only,
-# so they jump the staleness queue for an independent driver hash.
-# The rotation pin test (tests/test_extensions.py) DERIVES the stale
-# cohort from the recorded CORRECTNESS_r01..r12 files and asserts the
-# head matches, so this list cannot silently drift from the ledger
-# (SURVEY.md section 7.5a).  Every entry regardless of position is
-# hash-verified each round by scripts/check_entry.py.
-
-# r12-rewritten entries not driver-verified since their rewrite
-# (VERDICT r12, correctness-gate caveat): sketch_theta's one-pass
-# exact side, lm_bigram/lm_surprisal's shared vocab persists,
-# contamination/repeated_spans' materialized probe sets, skew_join's
-# hot-key persist, robust_outliers' median persist, dedup_against's
-# candidate-pair persist.
-_R12_REWRITTEN = [
-    "sketch_theta", "lm_bigram", "lm_surprisal", "contamination",
-    "repeated_spans", "skew_join", "robust_outliers", "dedup_against",
-]
-
-_DRIVER_WINDOW_HEAD = [
-    # 1-42: last driver row r09 (stalest cohort after the r12 run)
-    "calibration_bins", "classifier_score", "compound_expr",
-    "corpus_clean", "cosine_topk", "dedup_embedding",
-    "dedup_embedding_lsh", "dedup_exact", "dedup_minhash",
-    "dedup_ngram_jaccard", "dedup_simhash", "diff_pct", "eval_auc",
-    "fill_up", "inf_frame", "locf_fill", "median_frame",
-    "multimodal_features", "nest_roundtrip", "o1_project", "o2_cumsum",
-    "o2_desc_rank", "o3_group_broadcast", "o4_complete",
-    "o4_rows_frame", "o5_range_flagship", "o6_grouped_rows",
-    "o7_calendar_frame", "o8_overwrite", "o9_sql_window",
-    "pivot_wider", "pricing_decimal", "props_json", "r_semantics",
-    "rollup_agg", "simhash_pairs", "star_join", "summarise_pricing",
-    "temperature_mix", "text_analysis", "topk_per_group",
-    "windowed_rollup",
-    # 43-50: the r12-rewritten entries (touched outranks stale)
-    *_R12_REWRITTEN,
-]
-
-# Positions 51-100: the planned ROUND-14 window — the 47 remaining
-# entries whose LAST driver row is r10 (the 50-entry r10 cohort minus
-# the three of it taken into the r13 head via _R12_REWRITTEN), then
-# the 3 alphabetically-first entries last re-confirmed r11.  If the
-# driver window ever widens past 50 this round, these are reached
-# first.
-_DRIVER_WINDOW_NEXT = [
-    # last driver row r10 (47 remaining after _R12_REWRITTEN took 3)
-    "dup_regions", "ewma_smooth", "frame_apply_median",
-    "frame_apply_wmean", "gapfill_rollup", "grouped_apply_demean",
-    "grouping_sets", "hard_negatives", "ivf_topk", "ivfpq_topk",
-    "kmeans_clusters", "knn_join", "lsh_topk", "perceptron",
-    "pipeline_e2e", "pq_topk_full", "quantile_prune", "salted_agg",
-    "scd2_history", "semantic_dedup", "sessionize", "sketch_cms",
-    "sketch_distinct", "sketch_kll", "sketch_quantiles", "sketch_topk",
-    "slice_prop", "srp_embedding", "stream_attribution",
-    "stream_enrich", "stream_funnel", "stream_rollup",
-    "stream_sessions", "stream_upsert", "text_tokens_bpe", "tpch_q1",
-    "tpch_q10", "tpch_q11", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5",
-    "tpch_q6", "tpch_q7", "tpch_q8", "tpch_q9", "udtf_sentences",
-    # alphabetically-first entries last re-confirmed r11
-    "across_agg", "asof_forward", "asof_tolerance",
-]
-
-
+# Key order is part of the board contract: an external harness may hash
+# only a prefix of queries(), so entries keep their order as new ones land.
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    base = _queries_registry()
-    head = {k: base[k] for k in _DRIVER_WINDOW_HEAD}
-    head.update((k, base[k]) for k in _DRIVER_WINDOW_NEXT)
-    head.update((k, v) for k, v in base.items() if k not in head)
-    return head
-
-
-def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # -- r06 driver window: the 50 r3-vintage entries, re-confirmed
-        "repeated_spans": _q_repeated_spans,
+        "calibration_bins": _q_calibration_bins,
         "classifier_score": _q_classifier_score,
+        "compound_expr": _q_compound_expr,
+        "corpus_clean": _q_corpus_clean,
+        "cosine_topk": _q_cosine_topk,
+        "dedup_embedding": _q_dedup_embedding,
+        "dedup_embedding_lsh": _q_dedup_embedding_lsh,
+        "dedup_exact": _q_dedup_exact,
+        "dedup_minhash": _q_dedup_minhash,
+        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
+        "dedup_simhash": _q_dedup_simhash,
+        "diff_pct": _q_diff_pct,
+        "eval_auc": _q_eval_auc,
+        "fill_up": _q_fill_up,
+        "inf_frame": _q_inf_frame,
+        "locf_fill": _q_locf_fill,
+        "median_frame": _q_median_frame,
+        "multimodal_features": _q_multimodal_features,
+        "nest_roundtrip": _q_nest_roundtrip,
+        "o1_project": _q_o1_project,
+        "o2_cumsum": _q_o2_cumsum,
+        "o2_desc_rank": _q_o2_desc_rank,
+        "o3_group_broadcast": _q_o3_group_broadcast,
+        "o4_complete": _q_o4_complete,
+        "o4_rows_frame": _q_o4_rows_frame,
+        "o5_range_flagship": _q_o5_range_flagship,
+        "o6_grouped_rows": _q_o6_grouped_rows,
+        "o7_calendar_frame": _q_o7_calendar_frame,
+        "o8_overwrite": _q_o8_overwrite,
+        "o9_sql_window": _q_o9_sql_window,
+        "pivot_wider": _q_pivot_wider,
+        "pricing_decimal": _q_pricing_decimal,
+        "props_json": _q_props_json,
+        "r_semantics": _q_r_semantics,
+        "rollup_agg": _q_rollup,
+        "simhash_pairs": _q_simhash_pairs,
+        "star_join": _q_star_join,
+        "summarise_pricing": _q_summarise_pricing,
+        "temperature_mix": _q_temperature_mix,
+        "text_analysis": _q_text_analysis,
+        "topk_per_group": _q_topk_per_group,
+        "windowed_rollup": _q_windowed_rollup,
+        "sketch_theta": _q_sketch_theta,
+        "lm_bigram": _q_lm_bigram,
+        "lm_surprisal": _q_lm_surprisal,
+        "contamination": _q_contamination,
+        "repeated_spans": _q_repeated_spans,
+        "skew_join": _q_skew_join,
+        "robust_outliers": _q_robust_outliers,
+        "dedup_against": _q_dedup_against,
+        "dup_regions": _q_dup_regions,
+        "ewma_smooth": _q_ewma_smooth,
+        "frame_apply_median": _q_frame_apply_median,
+        "frame_apply_wmean": _q_frame_apply_wmean,
+        "gapfill_rollup": _q_gapfill_rollup,
+        "grouped_apply_demean": _q_grouped_apply_demean,
+        "grouping_sets": _q_grouping_sets,
+        "hard_negatives": _q_hard_negatives,
+        "ivf_topk": _q_ivf_topk,
+        "ivfpq_topk": _q_ivfpq_topk,
+        "kmeans_clusters": _q_kmeans_clusters,
+        "knn_join": _q_knn_join,
+        "lsh_topk": _q_lsh_topk,
+        "perceptron": _q_perceptron,
+        "pipeline_e2e": _q_pipeline_e2e,
+        "pq_topk_full": _q_pq_topk_full,
         "quantile_prune": _q_quantile_prune,
+        "salted_agg": _q_salted_agg,
+        "scd2_history": _q_scd2_history,
+        "semantic_dedup": _q_semantic_dedup,
+        "sessionize": _q_sessionize,
+        "sketch_cms": _q_sketch_cms,
+        "sketch_distinct": _q_sketch_distinct,
+        "sketch_kll": _q_sketch_kll,
+        "sketch_quantiles": _q_sketch_quantiles,
+        "sketch_topk": _q_sketch_topk,
+        "slice_prop": _q_slice_prop,
+        "srp_embedding": _q_srp_embedding,
+        "stream_attribution": _q_stream_attribution,
+        "stream_enrich": _q_stream_enrich,
+        "stream_funnel": _q_stream_funnel,
+        "stream_rollup": _q_stream_rollup,
+        "stream_sessions": _q_stream_sessions,
+        "stream_upsert": _q_stream_upsert,
+        "text_tokens_bpe": _q_text_tokens_bpe,
+        "tpch_q1": _q_tpch_q1,
+        "tpch_q10": _q_tpch_q10,
+        "tpch_q11": _q_tpch_q11,
+        "tpch_q2": _q_tpch_q2,
+        "tpch_q3": _q_tpch_q3,
+        "tpch_q4": _q_tpch_q4,
+        "tpch_q5": _q_tpch_q5,
+        "tpch_q6": _q_tpch_q6,
+        "tpch_q7": _q_tpch_q7,
+        "tpch_q8": _q_tpch_q8,
+        "tpch_q9": _q_tpch_q9,
+        "udtf_sentences": _q_udtf_sentences,
+        "across_agg": _q_across_agg,
+        "asof_forward": _q_asof_forward,
+        "asof_tolerance": _q_asof_tolerance,
         "bpe_train": _q_bpe_train,
         "bpe_subwords": _q_bpe_subwords,
         "budget_mix": _q_budget_mix,
-        "dup_regions": _q_dup_regions,
-        "pipeline_e2e": _q_pipeline_e2e,
-        "srp_embedding": _q_srp_embedding,
-        "gapfill_rollup": _q_gapfill_rollup,
-        "sessionize": _q_sessionize,
-        "text_tokens_bpe": _q_text_tokens_bpe,
-        "lsh_topk": _q_lsh_topk,
-        "ivf_topk": _q_ivf_topk,
-        "dedup_embedding_lsh": _q_dedup_embedding_lsh,
-        "semantic_dedup": _q_semantic_dedup,
-        "stream_sessions": _q_stream_sessions,
-        "stream_attribution": _q_stream_attribution,
-        "stream_upsert": _q_stream_upsert,
-        "stream_rollup": _q_stream_rollup,
-        "stream_enrich": _q_stream_enrich,
         "asof_nearest": _q_asof_nearest,
-        "sketch_cms": _q_sketch_cms,
-        "knn_join": _q_knn_join,
-        "hard_negatives": _q_hard_negatives,
-        "frame_apply_median": _q_frame_apply_median,
-        "frame_apply_wmean": _q_frame_apply_wmean,
-        "grouped_apply_demean": _q_grouped_apply_demean,
-        "udtf_sentences": _q_udtf_sentences,
-        "salted_agg": _q_salted_agg,
-        "skew_join": _q_skew_join,
-        "grouping_sets": _q_grouping_sets,
-        "slice_prop": _q_slice_prop,
-        "sketch_distinct": _q_sketch_distinct,
-        "sketch_quantiles": _q_sketch_quantiles,
-        "sketch_kll": _q_sketch_kll,
-        "sketch_theta": _q_sketch_theta,
-        "sketch_topk": _q_sketch_topk,
-        "pq_topk_full": _q_pq_topk_full,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "kmeans_clusters": _q_kmeans_clusters,
-        "perceptron": _q_perceptron,
         "bpe_encode": _q_bpe_encode,
-        "scd2_history": _q_scd2_history,
-        "ewma_smooth": _q_ewma_smooth,
         "bm25_topk": _q_bm25_topk,
-        "stream_funnel": _q_stream_funnel,
-        "tpch_q1": _q_tpch_q1,
-        "tpch_q2": _q_tpch_q2,
-        "tpch_q3": _q_tpch_q3,
-        # -- r05 window (drove CORRECTNESS_r05; 21 first-evers + 29 oldest)
         "shuffle_rows": _q_shuffle_rows,
         "boilerplate_ngrams": _q_boilerplate_ngrams,
         "repetition_signals": _q_repetition_signals,
@@ -4562,51 +4540,14 @@ def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel": _q_funnel,
         "complete_grid": _q_complete_grid,
         "scale_features": _q_scale_features,
-        "across_agg": _q_across_agg,
         "chunk_docs": _q_chunk_docs,
         "weighted_sample": _q_weighted_sample,
         "cohort_retention": _q_cohort_retention,
         "hashed_features": _q_hashed_features,
         "separate_unite": _q_separate_unite,
-        # -- r05 window back-fill: oldest r02-vintage greens incl. O1-O9 (29)
-        "o1_project": _q_o1_project,
-        "o2_cumsum": _q_o2_cumsum,
-        "o2_desc_rank": _q_o2_desc_rank,
-        "o3_group_broadcast": _q_o3_group_broadcast,
-        "o4_rows_frame": _q_o4_rows_frame,
-        "o4_complete": _q_o4_complete,
-        "o5_range_flagship": _q_o5_range_flagship,
-        "o6_grouped_rows": _q_o6_grouped_rows,
-        "o7_calendar_frame": _q_o7_calendar_frame,
         "o7_calendar_complete": _q_o7_calendar_complete,
-        "o8_overwrite": _q_o8_overwrite,
-        "o9_sql_window": _q_o9_sql_window,
-        "inf_frame": _q_inf_frame,
-        "compound_expr": _q_compound_expr,
-        "r_semantics": _q_r_semantics,
         "asof_join": _q_asof_join,
-        "asof_forward": _q_asof_forward,
         "interval_join": _q_interval_join,
-        "locf_fill": _q_locf_fill,
-        "text_analysis": _q_text_analysis,
-        "corpus_clean": _q_corpus_clean,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_minhash": _q_dedup_minhash,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "dedup_embedding": _q_dedup_embedding,
-        "dedup_simhash": _q_dedup_simhash,
-        "simhash_pairs": _q_simhash_pairs,
-        "cosine_topk": _q_cosine_topk,
-        "multimodal_features": _q_multimodal_features,
-        # -- driver-green r03/r04 (regression backstop, 116)
-        "tpch_q4": _q_tpch_q4,
-        "tpch_q5": _q_tpch_q5,
-        "tpch_q6": _q_tpch_q6,
-        "tpch_q7": _q_tpch_q7,
-        "tpch_q8": _q_tpch_q8,
-        "tpch_q9": _q_tpch_q9,
-        "tpch_q10": _q_tpch_q10,
-        "tpch_q11": _q_tpch_q11,
         "tpch_q12": _q_tpch_q12,
         "tpch_q13": _q_tpch_q13,
         "tpch_q14": _q_tpch_q14,
@@ -4631,41 +4572,23 @@ def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "overlap_join": _q_overlap_join,
         "time_weighted": _q_time_weighted,
         "gapfill_interp": _q_gapfill_interp,
-        "asof_tolerance": _q_asof_tolerance,
         "event_transitions": _q_event_transitions,
-        "dedup_against": _q_dedup_against,
         "dup_clusters": _q_dup_clusters,
-        "contamination": _q_contamination,
         "pack_sequences": _q_pack_sequences,
         "label_centroids": _q_label_centroids,
-        "lm_bigram": _q_lm_bigram,
-        "lm_surprisal": _q_lm_surprisal,
         "funnel_windowed": _q_funnel_windowed,
         "attribution_linear": _q_attribution_linear,
         "incremental_rollup": _q_incremental_rollup,
         "winsorize": _q_winsorize,
-        "robust_outliers": _q_robust_outliers,
         "skew_report": _q_skew_report,
         "length_buckets": _q_length_buckets,
         "stratified_mix": _q_stratified_mix,
         "validate_events": _q_validate_events,
         "ivf_topk_full": _q_ivf_topk_full,
-        "props_json": _q_props_json,
-        "rollup_agg": _q_rollup,
         "analytic_fns": _q_analytic_fns,
-        "median_frame": _q_median_frame,
-        "star_join": _q_star_join,
-        "pivot_wider": _q_pivot_wider,
-        "summarise_pricing": _q_summarise_pricing,
-        "topk_per_group": _q_topk_per_group,
-        "windowed_rollup": _q_windowed_rollup,
         "join_full": _q_join_full,
         "join_right": _q_join_right,
         "pivot_longer": _q_pivot_longer,
-        "fill_up": _q_fill_up,
-        "diff_pct": _q_diff_pct,
-        "nest_roundtrip": _q_nest_roundtrip,
-        # -- added r06 (position >50: outside the driver window head)
         "dup_clusters_star": _q_dup_clusters_star,
         "quantiles_global_coarse": _q_quantiles_global_coarse,
         "hybrid_rrf": _q_hybrid_rrf,
@@ -4681,7 +4604,6 @@ def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "regr_by_key": _q_regr_by_key,
         "triangle_count": _q_triangle_count,
         "cube_agg": _q_cube_agg,
-        # -- round 7: scale-safe ungrouped frames + corpus-drift family
         "o4_frame_scale": _q_o4_frame_scale,
         "o5_range_scale": _q_o5_range_scale,
         "o7_range_scale": _q_o7_range_scale,
@@ -4694,11 +4616,6 @@ def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_jaccard": _q_vocab_jaccard,
         "rolling_hll": _q_rolling_hll,
         "stream_hll": _q_stream_hll,
-        # -- round-8 additions
-        "pricing_decimal": _q_pricing_decimal,
-        "temperature_mix": _q_temperature_mix,
-        "eval_auc": _q_eval_auc,
-        "calibration_bins": _q_calibration_bins,
     }
 
 

@@ -19,29 +19,20 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-    from pyspark.sql import SparkSession
+    # The session config comes from the library surface, so the benched
+    # engine and the shipped engine are the same engine; only harness
+    # mechanics (app name, UI off, heap size) are passed here.
+    from tidier_spark.session import session
 
-    # Perf-relevant session config comes from the LIBRARY surface
-    # (tidier_spark.session.recommended_conf — VERDICT r12 task #1: the
-    # benched engine and the shipped engine must be the same engine).
-    # Only harness mechanics stay inline: master/app-name, UI off,
-    # driver sizing, and the local shuffle width derived from the same
-    # env contract as cores.
-    from tidier_spark.session import recommended_conf, shuffle_partitions
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tidier-spark-bench")
-        .config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions(int(cpus)))
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
+    spark = session(
+        cpus=int(cpus),
+        app_name="tidier-spark-bench",
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "16g",
+        },
     )
-    for k, v in recommended_conf().items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

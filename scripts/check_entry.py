@@ -3,13 +3,17 @@
 Strict comparison (row count, schema, order-insensitive value hash over
 stringified values) — tougher than the pytest tolerance-based rig, to catch
 anything the real t2 gate would flag.
+:func:`verdict` holds the checks; ``tests/test_board_oracle.py`` applies
+the same function to every entry.
 
 Usage: python scripts/check_entry.py [sf_dir] [query ...]
+(runs on ``local[$SPARK_GRAFT_CPUS]``, default every core)
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -44,22 +48,59 @@ def canon_hash(df: pd.DataFrame) -> tuple[str, list[str]]:
     return h, [f"{c}:{df[c].dtype}" for c in df.columns]
 
 
+def _kind(spec: str) -> str:
+    d = spec.split(":", 1)[1]
+    if d.startswith("float"):
+        return "f"
+    if d.startswith(("int", "uint")):
+        return "i"
+    if d.startswith("datetime64"):
+        return "t"  # ns-vs-us is normalized before hashing
+    return d
+
+
+def verdict(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[str, list[str]]:
+    """Strict check of an entry's Spark output against its oracle's: row
+    count, column names, dtype kind and ``canon_hash``.  Returns the Spark
+    side's hash and the failures found (empty when the two match)."""
+    sh, sschema = canon_hash(sdf)
+    oh, oschema = canon_hash(odf)
+    status = []
+    if len(sdf) != len(odf):
+        status.append(f"rows {len(sdf)}!={len(odf)}")
+    if [s.split(":")[0] for s in sschema] != [s.split(":")[0] for s in oschema]:
+        status.append(f"cols {sschema} != {oschema}")
+    else:
+        # dtype-KIND drift (int vs float) fails the hash even when
+        # names match — surface it explicitly.
+        kinds_s = [(_s.split(":")[0], _kind(_s)) for _s in sschema]
+        kinds_o = [(_s.split(":")[0], _kind(_s)) for _s in oschema]
+        if kinds_s != kinds_o:
+            status.append(f"dtype-kind {sschema} != {oschema}")
+    if sh != oh:
+        status.append(f"hash {sh}!={oh}")
+        # locate first mismatch for debugging
+        merged = _first_diff(sdf, odf)
+        if merged:
+            status.append(merged)
+    return sh, status
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     sf_dir = args.pop(0) if args and "/" in args[0] else "/root/testdata/sf0.01"
     only = set(args)
 
-    from pyspark.sql import SparkSession
+    from tidier_spark.session import session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-entry")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
+    spark = session(
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
+        app_name="check-entry",
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "8g",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -92,35 +133,7 @@ def main() -> int:
             print(f"FAIL  {name}: oracle error: {exc}")
             n_bad += 1
             continue
-        sh, sschema = canon_hash(sdf)
-        oh, oschema = canon_hash(odf)
-        status = []
-        if len(sdf) != len(odf):
-            status.append(f"rows {len(sdf)}!={len(odf)}")
-        if [s.split(":")[0] for s in sschema] != [s.split(":")[0] for s in oschema]:
-            status.append(f"cols {sschema} != {oschema}")
-        else:
-            # dtype-KIND drift (int vs float) is a driver hash failure even
-            # when names match — surface it explicitly.
-            def _kind(spec: str) -> str:
-                d = spec.split(":", 1)[1]
-                if d.startswith("float"):
-                    return "f"
-                if d.startswith(("int", "uint")):
-                    return "i"
-                if d.startswith("datetime64"):
-                    return "t"  # ns-vs-us is normalized before hashing
-                return d
-            kinds_s = [(_s.split(":")[0], _kind(_s)) for _s in sschema]
-            kinds_o = [(_s.split(":")[0], _kind(_s)) for _s in oschema]
-            if kinds_s != kinds_o:
-                status.append(f"dtype-kind {sschema} != {oschema}")
-        if sh != oh:
-            status.append(f"hash {sh}!={oh}")
-            # locate first mismatch for debugging
-            merged = _first_diff(sdf, odf)
-            if merged:
-                status.append(merged)
+        sh, status = verdict(sdf, odf)
         if status:
             print(f"FAIL  {name}: " + "; ".join(status))
             n_bad += 1

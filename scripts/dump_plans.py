@@ -134,8 +134,6 @@ HEADLINE = [
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
     from tidier_spark.plans import (
         codegen_stage_count,
@@ -143,18 +141,18 @@ def main() -> int:
         explain_str,
         read_schema,
     )
+    from tidier_spark.session import session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        # AQE re-plans at runtime (and is ON in prod configs); for the
-        # SNAPSHOT we want the static plan with visible codegen spans.
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    spark = session(
+        cpus=8,
+        app_name="dump-plans",
+        extra_conf={
+            # AQE re-plans at runtime (and is ON in prod configs); for the
+            # SNAPSHOT we want the static plan with visible codegen spans.
+            "spark.sql.adaptive.enabled": "false",
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

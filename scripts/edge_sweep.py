@@ -1158,42 +1158,29 @@ def main() -> int:
         os.environ["SPARK_GRAFT_STREAM_TIMEOUT"] = "900"
     sf_dir = build_fixture(kind)
 
-    from pyspark.sql import SparkSession
+    from tidier_spark.session import session
 
-    # sfjump runs the bench profile (local[32]/32) — the whole point is
+    # sfjump runs the bench profile (local[32]) — the whole point is
     # the plan at realistic parallelism and data size; the small axes
-    # keep 8/8 so 22 sweeps stay cheap
-    cores, parts, mem = (
-        ("32", "32", "24g") if kind == "sfjump" else ("8", "8", "8g")
-    )
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName("edge-sweep")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", mem)
+    # keep 8 cores so 22 sweeps stay cheap
+    cores, mem = (32, "24g") if kind == "sfjump" else (8, "8g")
+    conf = {
+        "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": mem,
         # the sweep COLLECTS full results to compare them — at sfjump
         # size a per-row entry's toPandas legitimately exceeds the 1g
         # default (a harness need, not a product path: the engine
         # itself never collects O(n) results)
-        .config("spark.driver.maxResultSize", "8g")
-    )
+        "spark.driver.maxResultSize": "8g",
+    }
     if kind == "tz":
-        builder = (
-            builder.config("spark.sql.session.timeZone", "Asia/Kolkata")
-            .config(
-                "spark.driver.extraJavaOptions",
-                "-Duser.timezone=Asia/Kolkata",
-            )
-            .config(
-                "spark.executor.extraJavaOptions",
-                "-Duser.timezone=Asia/Kolkata",
-            )
-        )
-    else:
-        builder = builder.config("spark.sql.session.timeZone", "UTC")
-    spark = builder.getOrCreate()
+        conf.update({
+            "spark.sql.session.timeZone": "Asia/Kolkata",
+            "spark.driver.extraJavaOptions": "-Duser.timezone=Asia/Kolkata",
+            "spark.executor.extraJavaOptions": "-Duser.timezone=Asia/Kolkata",
+        })
+    spark = session(cpus=cores, app_name="edge-sweep", extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     if kind == "tz":
         # getOrCreate may have reused a live UTC session (same-process

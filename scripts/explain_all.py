@@ -28,26 +28,19 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    # bench.py parity: the same library session, so the captured plan is
+    # the benched plan by construction.
+    from tidier_spark.session import session
 
-    # bench.py parity: the perf config comes from the same library helper
-    # (tidier_spark.session.recommended_conf), so the captured plan is the
-    # benched plan by construction.
-    from tidier_spark.session import recommended_conf, shuffle_partitions
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("explain-all")
-        .config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions(int(cpus)))
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
+    spark = session(
+        cpus=int(cpus),
+        app_name="explain-all",
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "16g",
+        },
     )
-    for k, v in recommended_conf().items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

@@ -16,10 +16,10 @@ sys.path.insert(0, ".")
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from tidier_spark.operators.similarity import ivfpq_topk
+    from tidier_spark.session import session
 
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     if reps < 2:
@@ -29,12 +29,12 @@ def main() -> int:
             file=sys.stderr,
         )
         return 2
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
+    spark = session(
+        cpus=32,
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "24g",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     # generic session warm-up (same as scale_probe): JVM + python workers

@@ -10,20 +10,28 @@ import sys
 import time
 
 sys.path.insert(0, ".")
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from tidier_spark.session import session  # noqa: E402
 
 
-def main():
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+def _probe_session(driver_memory="16g", extra=None):
+    """The probes' local[32] session on the library config, JVM warmed."""
+    spark = session(
+        cpus=32,
+        extra_conf={
+            "spark.driver.memory": driver_memory,
+            "spark.ui.enabled": "false",
+            **(extra or {}),
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    return spark
+
+
+def main():
+    spark = _probe_session()
 
     def _warm(it):
         yield from it
@@ -395,22 +403,14 @@ def skew_section():
     """
     import time
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from tidier_spark.skew import salted_agg, skew_join
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        # isolate the salting effect from AQE's own skew mitigation
-        .config("spark.sql.adaptive.skewJoin.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    # isolate the salting effect from AQE's own skew mitigation
+    spark = _probe_session(
+        extra={"spark.sql.adaptive.skewJoin.enabled": "false"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     n = 20_000_000
     # key 0 owns ~50% of rows; remainder spreads over 10k keys
@@ -468,18 +468,9 @@ def r9_section():
     """
     import time
 
-    from pyspark.sql import SparkSession, functions as F, Window
+    from pyspark.sql import functions as F, Window
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = _probe_session()
 
     def timeit(fn, reps=2):
         best = None
@@ -628,18 +619,9 @@ def r10_section():
     import shutil
     import tempfile
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark = _probe_session("24g")
 
     from tidier_spark.operators.sketches import topk_merged, topk_partials
 

@@ -5,23 +5,22 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import SparkSession
+
+from tidier_spark.session import session
 
 SF_DIR = os.environ.get("TIDIER_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("tidier-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
+    s = session(
+        cpus=4,
+        app_name="tidier-spark-tests",
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.memory": "4g",
+        },
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s

@@ -589,6 +589,40 @@ def test_auc_exact_static_splits_bit_identical(spark):
         ), splits
 
 
+def test_auc_exact_split_points_rejected_with_by(spark):
+    """Static splits drive only the ungrouped prefix; with ``by=`` they
+    would be silently ignored, so the combination is an error."""
+    from tidier_spark.operators.evalmetrics import auc_exact
+
+    df = spark.createDataFrame([(1, 1, "a"), (2, 0, "a")], "s int, y int, g string")
+    with pytest.raises(ValueError, match="ungrouped"):
+        auc_exact(df, "s", "y", by="g", split_points=[1])
+
+
+def test_auc_exact_empty_split_points_rejected(spark):
+    """An empty list is not "no splits": it must not fall back to the
+    percentile pass the caller asked to skip."""
+    from tidier_spark.operators.evalmetrics import auc_exact
+
+    df = spark.createDataFrame([(1, 1), (2, 0)], "s int, y int")
+    with pytest.raises(ValueError, match="empty"):
+        auc_exact(df, "s", "y", split_points=[])
+
+
+def test_auc_exact_split_points_deduplicated(spark):
+    """Repeated caller cuts add no bucket comparisons to the plan."""
+    from tidier_spark.operators.evalmetrics import auc_exact
+    from tidier_spark.plans import explain_str
+
+    df = spark.createDataFrame([(1, 1), (2, 0), (200, 1)], "s int, y int")
+
+    def n_cases(splits):
+        out = auc_exact(df, "s", "y", split_points=splits)
+        return explain_str(out, "extended").count("CASE WHEN")
+
+    assert n_cases([100, 50, 100, 50]) == n_cases([50, 100])
+
+
 def test_calibration_bins_arithmetic(spark):
     from tidier_spark.operators.evalmetrics import calibration_bins
 

@@ -2914,77 +2914,6 @@ def test_stream_rollup_multi_batch_incremental_agg(spark, tmp_path):
     assert [g[2:] for g in got] == [(3, 600.0), (1, 50.0)], got
 
 
-def test_driver_window_head_is_never_checked_rotation():
-    """The driver's correctness run covers the FIRST 50 queries() keys,
-    snapshotted from the END-of-round repo state.  Round-13 contract
-    (verdict r12 task #3): the rotation policy is now
-    touched-since-last-driver-row OUTRANKS stale — positions 1-42 are
-    the 42 entries whose LAST hash-green driver row is r09 (the
-    stalest cohort), positions 43-50 the 8 entries whose
-    semantics-adjacent code was rewritten in r12 WITHOUT landing in
-    the r12 driver window (``_R12_REWRITTEN``: their last driver row
-    predates the rewrite, so they jump the staleness queue).
-    Positions 51-100 hold the planned round-14 window: the remaining
-    last-green-r10 entries, then last-green-r11 entries.  All stale
-    cohorts are DERIVED from the recorded CORRECTNESS_r01..r12 files
-    (r13+ deliberately NOT read — the contract pins the rotation as
-    planned, not as later recorded), so the hand-written lists in
-    __spark_entry__ cannot silently drift from the ledger."""
-    import json
-    import os
-
-    import __spark_entry__ as entrymod
-
-    keys = list(entrymod.queries().keys())
-    assert len(keys) == len(set(keys)) == len(entrymod._queries_registry())
-    last_green: dict[str, str] = {}
-    for r in (
-        "01", "02", "03", "04", "05", "06", "07", "08", "09", "10",
-        "11", "12",
-    ):
-        p = os.path.join(os.path.dirname(entrymod.__file__), f"CORRECTNESS_r{r}.json")
-        if os.path.exists(p):
-            with open(p) as fh:
-                for k, v in json.load(fh).items():
-                    # ledger semantics (SURVEY 7.5a): last HASH-GREEN row
-                    if v.get("hash_match"):
-                        last_green[k] = r
-    touched = entrymod._R12_REWRITTEN
-    if last_green:
-        stale_r09 = {k for k, r in last_green.items() if r == "09"}
-        assert len(stale_r09) == 42, len(stale_r09)
-        assert set(keys[:42]) == stale_r09, sorted(
-            stale_r09.symmetric_difference(keys[:42])
-        )
-        # the touched cohort jumps the queue: all 8 have a PRE-rewrite
-        # last driver row (r10/r11 — i.e. none was re-verified in r12,
-        # the round that rewrote them), and none is already in the
-        # stale head
-        assert keys[42:50] == touched
-        assert not (set(touched) & stale_r09)
-        assert all(last_green.get(k) in ("10", "11") for k in touched), [
-            (k, last_green.get(k)) for k in touched
-        ]
-        # round-14 queue: the last-green-r10 leftovers lead it...
-        nxt = entrymod._DRIVER_WINDOW_NEXT
-        assert keys[50:50 + len(nxt)] == nxt
-        r10_left = {
-            k for k, r in last_green.items() if r == "10"
-        } - set(touched)
-        assert set(nxt[: len(r10_left)]) == r10_left, sorted(
-            r10_left.symmetric_difference(nxt[: len(r10_left)])
-        )
-        # ...followed only by entries last confirmed r11
-        rest = nxt[len(r10_left):]
-        assert all(last_green.get(k) == "11" for k in rest), [
-            (k, last_green.get(k)) for k in rest
-            if last_green.get(k) != "11"
-        ]
-    # every oracle key exists for every query key (1:1 board)
-    oracles = entrymod.oracle_sql()
-    assert set(oracles) == set(keys)
-
-
 def test_snapshot_diff_coerces_drifted_column_types(spark):
     """decvals axis (r9): a DECIMAL(15,2) snapshot whose new side went
     through a ``+ 1.0`` double promotion must still diff — the
@@ -3776,13 +3705,15 @@ def test_stream_windowed_approx_distinct_multi_batch(spark, tmp_path):
 
 
 def test_session_helper_pins_benched_config():
-    """VERDICT r12 task #1: the perf configs the bench runs under must be
-    LIBRARY surface (`tidier_spark.session`), not bench.py inlines — a
-    consumer building their own session gets the benched engine.  Pins
-    (a) the exact recommended keys, (b) that bench.py and explain_all.py
-    consume the helper instead of inlining perf configs, (c) the local
-    shuffle-width rule."""
+    """The engine config is library surface (`tidier_spark.session`), and
+    every session in the repo is built through it, so the tests, the
+    oracle checker, the bench and the scripts all run the engine that
+    ships.  Pins (a) the exact recommended keys, (b) that no tracked
+    Python file outside ``tidier_spark/session.py`` builds its own
+    session, (c) the local shuffle-width rule."""
     import os
+    import re
+    import subprocess
 
     from tidier_spark.session import recommended_conf, shuffle_partitions
 
@@ -3799,14 +3730,61 @@ def test_session_helper_pins_benched_config():
     assert shuffle_partitions(32) == 32
     assert shuffle_partitions(4) == 8  # floor for tiny boxes
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for rel in ("bench.py", os.path.join("scripts", "explain_all.py")):
-        with open(os.path.join(root, rel)) as fh:
-            src = fh.read()
-        assert "recommended_conf" in src, rel
-        # no inline perf configs: the helper owns them
-        for key in (
-            "arrow.pyspark.enabled",
-            "canChangeCachedPlanOutputPartitioning",
-            "spark.sql.adaptive.enabled",
-        ):
-            assert key not in src, (rel, key)
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=root, check=True,
+        capture_output=True, text=True,
+    ).stdout.split()
+    own_session = re.compile(r"SparkSession\s*\.\s*builder")
+    building = []
+    for rel in tracked:
+        with open(os.path.join(root, rel), encoding="utf-8") as fh:
+            if own_session.search(fh.read()):
+                building.append(rel)
+    assert building == ["tidier_spark/session.py"], building
+
+
+def test_fan_out_spreads_a_single_small_file(spark, sf_dir):
+    """The fixture ``documents`` scan is one small file (one input split),
+    so ``_fan_out`` repartitions it to ``defaultParallelism`` — also when
+    a column alias contains the word "Repartition"."""
+    from tidier_spark.sources import read_table
+
+    par = spark.sparkContext.defaultParallelism
+    docs = read_table(spark, sf_dir, "documents")
+    assert len(docs.inputFiles()) == 1
+    aliased = docs.select(F.col(docs.columns[0]).alias("Repartition"))
+    for df in (docs, aliased):
+        out = text._fan_out(df)
+        assert out is not df and out.rdd.getNumPartitions() == par
+
+
+def test_fan_out_leaves_repartitioned_input(spark, sf_dir):
+    from tidier_spark.sources import read_table
+
+    docs = read_table(spark, sf_dir, "documents")
+    key = docs.columns[0]
+    for df in (
+        docs.repartition(2),
+        docs.repartition(2, key).select(key),
+    ):
+        assert text._fan_out(df) is df
+
+
+@pytest.mark.parametrize("dirname", ["plain", "with space"])
+def test_fan_out_leaves_a_scan_with_enough_splits(spark, sf_dir, tmp_path, dirname):
+    """With a small ``maxPartitionBytes`` the one file scans as more
+    splits than ``defaultParallelism``; the estimate comes from statting
+    the file, which must work for a percent-encoded path too."""
+    import shutil
+
+    src = tmp_path / dirname
+    src.mkdir()
+    shutil.copy(f"{sf_dir}/documents.parquet", src / "documents.parquet")
+    df = spark.read.parquet(str(src))
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    try:
+        assert text._fan_out(df) is df
+    finally:
+        spark.conf.set(key, old)

@@ -72,9 +72,20 @@ def auc_exact(
     combine is exact regardless of balance — so a caller who knows the
     score's range (e.g. a ppm-scaled score in [0, 1e6]) skips one full
     scan of the eval set.  Results are bit-identical either way (pinned
-    in tests).
+    in tests).  Duplicate literals are dropped; passing ``split_points``
+    with ``by=``, or an empty list, raises ``ValueError``.
     """
     keys = [by] if isinstance(by, str) else list(by or [])
+    if split_points is not None:
+        if keys:
+            raise ValueError(
+                "auc_exact: split_points applies to the ungrouped AUC only"
+            )
+        if not split_points:
+            raise ValueError(
+                "auc_exact: split_points is empty; omit it for the "
+                "percentile pass"
+            )
     base = df.where(
         F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
     )
@@ -108,7 +119,7 @@ def auc_exact(
         n_parts = df.sparkSession.sparkContext.defaultParallelism
         splits = None
         if split_points is not None:
-            splits = sorted(split_points)
+            splits = sorted(set(split_points))
         elif n_parts >= 2:
             probs = [(i + 1) / n_parts for i in range(n_parts - 1)]
             row = base.select(

@@ -23,6 +23,7 @@ Portability notes (Spark ↔ DuckDB):
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -103,7 +104,7 @@ def _fan_out(df: DataFrame) -> DataFrame:
     * **idempotent** — ``inputFiles()`` sees through a repartition, so a
       caller-side fan-out composed with an operator's internal one would
       silently double the shuffle; an existing Repartition node in the
-      logical plan makes this a no-op.
+      logical plan tree makes this a no-op.
     """
     par = df.sparkSession.sparkContext.defaultParallelism
     try:
@@ -113,8 +114,7 @@ def _fan_out(df: DataFrame) -> DataFrame:
     if not files or len(files) >= par:
         return df
     try:
-        plan = df._jdf.queryExecution().logical().toString()
-        if "Repartition" in plan:  # Repartition / RepartitionByExpression
+        if _has_repartition(df._jdf.queryExecution().logical()):
             return df
     except Exception:
         pass
@@ -126,17 +126,26 @@ def _fan_out(df: DataFrame) -> DataFrame:
         )
         est_splits = 0
         for uri in files:
-            p = uri
-            if p.startswith("file:"):
-                p = p[5:]
-                while p.startswith("//"):
-                    p = p[1:]
-            est_splits += max(1, -(-os.path.getsize(p) // max_split))
+            u = urlparse(uri)
+            if u.scheme not in ("", "file"):
+                break  # non-local paths: file-count proxy decides
+            size = os.path.getsize(unquote(u.path))
+            est_splits += max(1, -(-size // max_split))
             if est_splits >= par:
                 return df  # scan already feeds enough tasks
     except Exception:
-        pass  # non-local paths: file-count proxy decides
+        pass  # unstatable paths: file-count proxy decides
     return df.repartition(par)
+
+
+def _has_repartition(plan) -> bool:
+    """Whether a JVM logical plan has a Repartition or
+    RepartitionByExpression node; node names only, so a column alias
+    that contains the word does not count."""
+    if plan.nodeName().startswith("Repartition"):
+        return True
+    kids = plan.children()
+    return any(_has_repartition(kids.apply(i)) for i in range(kids.size()))
 
 
 def fold_lower(col: Column | str) -> Column:

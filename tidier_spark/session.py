@@ -7,8 +7,10 @@ their own ``SparkSession`` got a slower engine than the benched one
 (VERDICT r12, "What's wrong" #1).  This module is the one home for those
 settings: :func:`recommended_conf` returns them as a plain dict (apply to
 any builder), and :func:`session` builds a ready session for the common
-local case.  ``bench.py`` and ``scripts/explain_all.py`` consume the same
-helper, so the benched config and the shipped config cannot drift.
+local case.  Every session in the repo is built by :func:`session` — the
+test suite, ``bench.py``, ``perfbench/``, the oracle checker and the
+scripts, with harness-only settings passed as ``extra_conf`` — so the
+tested, benched and shipped configs cannot drift.
 
 Every key here is a scale-general Spark knob (guide §2.2 / §4 / §6), not a
 local[32] tweak:
