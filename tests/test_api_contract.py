@@ -107,6 +107,12 @@ RAISES = [
     ("emb_lsh_planes0", "vecs",
      lambda m, d: m.embedding_near_dup_lsh(d, n_planes=0),
      r"n_planes must be >= 1"),
+    ("semantic_clusters0", "vecs",
+     lambda m, d: m.semantic_dedup_pairs(d, n_clusters=0),
+     r"semantic_dedup_pairs: n_clusters must be >= 1"),
+    ("semantic_sample0", "vecs",
+     lambda m, d: m.semantic_dedup_pairs(d, sample_size=0),
+     r"semantic_dedup_pairs: sample_size must be >= 1"),
     ("simhash_block0", "docs",
      lambda m, d: m.simhash_candidate_pairs(d, block_bits=0),
      r"block_bits must be in"),
@@ -206,7 +212,7 @@ def _mod_for(case_id: str):
         ("rsd", sk), ("hll", sk), ("theta", sk), ("kll", sk),
         ("exact_q", sk), ("approx_q", sk), ("topk", sk),
         ("minhash", dd), ("shingle", dd), ("ngram", dd), ("emb", dd),
-        ("simhash", dd),
+        ("simhash", dd), ("semantic", dd),
         ("cosine", sim), ("lsh", sim), ("ivf", sim), ("pq", sim),
         ("kmeans", sim),
         ("pack", cp), ("hash_split", cp), ("det_sample", cp),

@@ -3399,9 +3399,30 @@ def test_cosine_topk_excludes_zero_norm_vectors(spark):
     from collections import Counter
 
     assert Counter(r["query_id"] for r in got) == {1: 2, 2: 2, 3: 2}
-    # both methods agree after exclusion
-    got_sql = cosine_topk(df, k=3, method="sql").collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, got_sql))
+
+
+@pytest.mark.parametrize("n_clusters", [1, 2])
+def test_semantic_dedup_excludes_null_and_zero_vectors(spark, n_clusters):
+    # the cosine-metric contract of every operator: NULL and zero-norm
+    # vectors are excluded, so SemDeDup's pairs equal the exact operator's
+    # (a NULL row used to break the quantizer's numpy stack)
+    from tidier_spark.operators.dedup import (
+        embedding_near_dup,
+        semantic_dedup_pairs,
+    )
+
+    rows = [
+        (1, [1.0, 0.0]),
+        (2, [0.99, 0.01]),
+        (3, [0.0, 1.0]),
+        (4, [0.0, 0.0]),  # zero norm -> excluded
+        (5, None),  # NULL -> excluded
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    want = sorted(map(tuple, embedding_near_dup(df, threshold=0.9).collect()))
+    assert want == [(1, 2, 0.999949)]
+    got = semantic_dedup_pairs(df, threshold=0.9, n_clusters=n_clusters)
+    assert sorted(map(tuple, got.collect())) == want
 
 
 def test_triangle_count_hand_graph(spark):

@@ -587,114 +587,39 @@ def embedding_near_dup(
     chunk_size: int = 1 << 16,
 ) -> DataFrame:
     """EXACT vector pairs with cosine ≥ threshold (rounded to 6 decimals
-    before the comparison so the cut is engine-independent).
+    before the comparison so the cut is engine-independent), oriented
+    ``id_a < id_b``.
 
-    Scale shape: when the table fits one chunk (≤ ``chunk_size`` rows) the
-    candidate matrix broadcasts once and query batches stream through a
-    matmul (the broadcast-dim shape).  Larger tables switch to the fully
-    EXECUTOR-SIDE grid plan (same as :func:`similarity._cosine_topk_grid`):
-    both sides hash into blocks, each grid cell is one ``applyInPandas``
-    matmul emitting only its ≥-threshold pairs — no driver pull, no
-    serial chunk pump, no localCheckpoint materialization.  Compute is
-    inherently all-pairs because exactness at an arbitrary threshold
-    admits no pruning; for the bucketed-candidate variant (approximate,
-    subquadratic) see :func:`embedding_near_dup_lsh`.
+    Scale shape: the all-pairs candidate generator of
+    :func:`similarity.cosine_topk` with the threshold kernel in place of
+    the top-k one.  When the table fits one chunk (≤ ``chunk_size`` rows)
+    the candidate matrix broadcasts once and query batches stream through
+    a matmul (the broadcast-dim shape).  Larger tables switch to the fully
+    EXECUTOR-SIDE grid plan: both sides hash into blocks, each grid cell
+    is one ``applyInPandas`` matmul emitting only its ≥-threshold pairs —
+    no driver pull, no serial chunk pump.  Each unordered pair lands in
+    exactly one cell in the ``id_a < id_b`` orientation, so the union
+    needs no dedup shuffle.  Compute is inherently all-pairs because
+    exactness at an arbitrary threshold admits no pruning; for the
+    bucketed-candidate variant (approximate, subquadratic) see
+    :func:`embedding_near_dup_lsh`.
     """
-    if chunk_size < 1:
-        raise ValueError(
-            f"embedding_near_dup: chunk_size must be >= 1, got {chunk_size}"
-        )
-    import math
+    from .similarity import (
+        _PAIRS,
+        _check_topk_params,
+        _emit_pairs,
+        _exact_pairs,
+        nonzero_vectors,
+    )
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from .similarity import nonzero_vectors
-
-    spark = df.sparkSession
+    _check_topk_params("embedding_near_dup", chunk_size=chunk_size)
     # cosine-metric contract (zerovec/nullvals axes): NULL and zero-norm
     # vectors are excluded — a NULL embedding reaching np.vstack would
     # kill the job over one broken encoder row
-    df = nonzero_vectors(df, vec_col)
-    cand_src = df.select(id_col, vec_col)
-    n = cand_src.count()
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    return _exact_pairs(
+        nonzero_vectors(df, vec_col), None, id_col, vec_col, chunk_size,
+        _emit_pairs(threshold), _PAIRS,
     )
-
-    if n > chunk_size:
-        from .similarity import _grid_sides
-
-        n_blocks = max(1, math.ceil(n / chunk_size))
-        grid = _grid_sides(df, None, id_col, vec_col, n_blocks, n_blocks)
-
-        def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            qm = pdf["side"].to_numpy() == 0
-            cm = ~qm
-            if not qm.any() or not cm.any():
-                return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-            q_ids = pdf["gid"].to_numpy()[qm]
-            c_ids = pdf["gid"].to_numpy()[cm]
-            Q = np.vstack(pdf["gvec"].to_numpy()[qm]).astype(np.float64)
-            C = np.vstack(pdf["gvec"].to_numpy()[cm]).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-            C /= np.linalg.norm(C, axis=1, keepdims=True)
-            S = np.round(Q @ C.T, 6)
-            # emit only query_id < cand_id: each unordered pair lands in
-            # exactly one cell in that orientation, so the union of cell
-            # outputs has no duplicates and needs no dedup shuffle
-            qi, ci = np.nonzero((S >= threshold) & (q_ids[:, None] < c_ids[None, :]))
-            return pd.DataFrame(
-                {
-                    "id_a": q_ids[qi].astype("int64"),
-                    "id_b": c_ids[ci].astype("int64"),
-                    "cos_sim": S[qi, ci],
-                }
-            )
-
-        return grid.groupBy("qa", "cb").applyInPandas(cell_pairs, out_schema)
-
-    def chunk_pairs(bc):
-        def pairs(it):
-            ids_l, mat_l = bc.value
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                q_ids = pdf[id_col].to_numpy()
-                q_mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-                sims = np.round(q_mat @ mat_l.T, 6)
-                qi, ci = np.nonzero(
-                    (sims >= threshold) & (q_ids[:, None] < ids_l[None, :])
-                )
-                yield pd.DataFrame(
-                    {
-                        "id_a": q_ids[qi].astype("int64"),
-                        "id_b": ids_l[ci].astype("int64"),
-                        "cos_sim": sims[qi, ci],
-                    }
-                )
-
-        return pairs
-
-    # fan out the streamed query side: a single-file scan is one input
-    # split and would serialize the matmul on one core
-    src = _fan_out(df.select(id_col, vec_col))
-    pdf = cand_src.toPandas()
-    if len(pdf) == 0:
-        # empty corpus: zero candidate vectors ⇒ zero near-dup pairs
-        return spark.createDataFrame([], out_schema)
-    ids = pdf[id_col].to_numpy()
-    mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, mat))
-    return src.mapInPandas(chunk_pairs(bc), out_schema)
 
 
 def embedding_near_dup_lsh(
@@ -706,8 +631,8 @@ def embedding_near_dup_lsh(
     n_tables: int = 24,
     n_dims: int = 64,
 ) -> DataFrame:
-    """BUCKETED near-dup: hyperplane-LSH candidate pairs → join-resolved
-    exact cosine → threshold filter.  Subquadratic (pair space = bucket
+    """BUCKETED near-dup: hyperplane-LSH candidate buckets → bucket-local
+    exact cosine → threshold cut.  Subquadratic (pair space = bucket
     collisions, never a cross join) and fully distributed (no driver
     collect anywhere) — the 100 TB path.
 
@@ -727,51 +652,28 @@ def embedding_near_dup_lsh(
     through two joins — Σ_bucket |b|² BLAS flops inside the bucket are
     orders cheaper (measured 12.6 s → ~2 s at sf0.1).
     """
-    for nm, v in (("n_planes", n_planes), ("n_tables", n_tables), ("n_dims", n_dims)):
-        if v < 1:
-            raise ValueError(f"embedding_near_dup_lsh: {nm} must be >= 1, got {v}")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    from .similarity import (
+        _PAIRS,
+        _check_topk_params,
+        _emit_pairs,
+        _in_buckets,
+        _lsh_signatures,
+        nonzero_vectors,
+    )
 
-    from .similarity import _lsh_signatures, nonzero_vectors
-
+    _check_topk_params(
+        "embedding_near_dup_lsh", n_planes=n_planes, n_tables=n_tables, n_dims=n_dims
+    )
     # cosine-metric contract (zerovec/nullvals axes): NULL/zero-norm
     # vectors carry no signature and are excluded up front — otherwise a
     # NULL __vec reaches the bucket matmul and kills the job
-    df = nonzero_vectors(df, vec_col)
     sigs = _lsh_signatures(
-        df, id_col, vec_col, n_planes, n_tables, n_dims, carry_vec=True
+        nonzero_vectors(df, vec_col), id_col, vec_col, n_planes, n_tables, n_dims,
+        carry_vec=True,
     )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-        ids = pdf[id_col].to_numpy().astype(np.int64)
-        M = np.vstack(pdf["__vec"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        S = np.round(M @ M.T, 6)
-        ia, ib = np.triu_indices(n, 1)
-        vals = S[ia, ib]
-        keep = (vals >= threshold) & (ids[ia] != ids[ib])
-        a, b = ids[ia[keep]], ids[ib[keep]]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "cos_sim": vals[keep]})
-
-    return (
-        sigs.groupBy("tbl", "sig")
-        .applyInPandas(bucket_pairs, out_schema)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _in_buckets(
+        sigs, ["tbl", "sig"], id_col, _emit_pairs(threshold), _PAIRS
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def embedding_near_dup_sql(
@@ -1169,65 +1071,44 @@ def semantic_dedup_pairs(
     test), at ``n_clusters=k`` compute drops to ~1/k of all-pairs.
 
     Scale shape: centroids broadcast (bytes); assignment is an Arrow
-    matmul; the pairwise stage is ``groupBy(list_id).applyInPandas`` —
+    matmul that carries each vector to its cluster (no join back to the
+    table); the pairwise stage is ``groupBy(list_id).applyInPandas`` —
     one shuffle on the cluster id, per-cluster O(|c|²) compute.  Cluster
     population is ~N/k, so n_clusters must scale WITH the corpus
     (constant expected cluster size); for skewed clusters split further
     with a secondary quantizer or cap |c| — the knob is cluster count,
     not a driver-side collect.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    from .similarity import (
+        _PAIRS,
+        _check_topk_params,
+        _emit_pairs,
+        _in_buckets,
+        _route,
+        nonzero_vectors,
+        train_quantizer,
+    )
 
-    from .similarity import assign_clusters, train_quantizer
-
+    _check_topk_params(
+        "semantic_dedup_pairs", n_clusters=n_clusters, sample_size=sample_size
+    )
+    # cosine-metric contract (zerovec/nullvals axes), applied before the
+    # emptiness check so an all-excluded corpus returns zero rows: a NULL
+    # vector would break the quantizer's numpy stack, a zero one turns
+    # into NaN rows there and in the pair kernel
+    df = nonzero_vectors(df, vec_col)
     spark = df.sparkSession
     if df.select(id_col).limit(1).count() == 0:
         # nothing to dedup: no clusters to train, no pairs to emit
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("id_a", T.LongType()),
-                    T.StructField("id_b", T.LongType()),
-                    T.StructField("cos_sim", T.DoubleType()),
-                ]
-            ),
-        )
-    bc_cent = spark.sparkContext.broadcast(
-        train_quantizer(
-            df, id_col, vec_col, n_lists=n_clusters,
-            sample_size=sample_size, seed=seed,
-        )
+        return spark.createDataFrame([], _PAIRS)
+    cent = train_quantizer(
+        df, id_col, vec_col, n_lists=n_clusters, sample_size=sample_size, seed=seed
     )
-    lists = assign_clusters(df, id_col, vec_col, bc_cent)
-    clustered = df.select(id_col, vec_col).join(lists, id_col)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+    # each vector rides into its one nearest cluster (its IVF home list)
+    clustered = _route(df, id_col, vec_col, spark.sparkContext.broadcast(cent), 1)
+    return _in_buckets(
+        clustered, ["list_id"], id_col, _emit_pairs(threshold), _PAIRS
     )
-
-    def pairs_in_cluster(key, pdf):
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cos_sim": "float64"}
-            )
-        ids = pdf[id_col].to_numpy().astype("int64")
-        M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        sims = np.round(M @ M.T, 6)
-        ai, bi = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {"id_a": ids[ai], "id_b": ids[bi], "cos_sim": sims[ai, bi]}
-        )
-
-    return clustered.groupBy("list_id").applyInPandas(pairs_in_cluster, out_schema)
 
 
 def excise_duplicate_regions(

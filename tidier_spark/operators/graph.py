@@ -48,6 +48,22 @@ __all__ = [
 ]
 
 
+def _label_nodes(
+    nodes: DataFrame, labels: DataFrame, node_col: str, id_col: str
+) -> DataFrame:
+    """The label tail of both CC variants: every node takes its component
+    label (``lab``, keyed by ``node_col``); nodes the rounds never saw —
+    isolated, no edges — coalesce to their own id."""
+    return (
+        nodes.select(F.col(id_col))
+        .join(labels, F.col(id_col) == F.col(node_col), "left")
+        .select(
+            F.col(id_col),
+            F.coalesce(F.col("lab"), F.col(id_col)).alias("cluster_id"),
+        )
+    )
+
+
 def connected_components(
     edges: DataFrame,
     nodes: DataFrame,
@@ -122,14 +138,7 @@ def connected_components(
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    return (
-        nodes.select(F.col(id_col))
-        .join(labels, F.col(id_col) == F.col("u"), "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("lab"), F.col(id_col)).alias("cluster_id"),
-        )
-    )
+    return _label_nodes(nodes, labels, "u", id_col)
 
 
 def connected_components_star(
@@ -245,14 +254,7 @@ def connected_components_star(
     labels = e.select(F.col("v").alias("node"), F.col("u").alias("lab"))
     roots = e.select(F.col("u").alias("node"), F.col("u").alias("lab"))
     lab = labels.unionByName(roots).groupBy("node").agg(F.min("lab").alias("lab"))
-    return (
-        nodes.select(F.col(id_col))
-        .join(lab, F.col(id_col) == F.col("node"), "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(F.col("lab"), F.col(id_col)).alias("cluster_id"),
-        )
-    )
+    return _label_nodes(nodes, lab, "node", id_col)
 
 
 def dup_clusters(

@@ -1,30 +1,47 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, per the scale brief:
+Every top-k and embedding near-dup operator — the five here and the three
+embedding ones in :mod:`.dedup` — has one shape: candidate buckets, then
+an exact unit-cosine score rounded to 6 decimals, then a per-query top-k
+or a threshold cut.  Only the candidate generator differs; the rest is
+one small core:
 
-* **Brute-force cosine top-k** — the exact baseline.  All math is built-in
-  (``zip_with`` + ``aggregate`` fold in double precision), evaluated
-  JVM-side; the pair space is a block-nested-loop join.  Exact and fine up
-  to ~10⁵ vectors per side; it is the *re-rank* stage at scale, never the
-  first stage.
-* **LSH-bucketed top-k** — random-hyperplane signatures shrink the pair
-  space to same-bucket collisions before the exact cosine re-rank.  The
-  hyperplanes are seeded deterministically from md5, so results are
-  reproducible across runs/engines; recall is tunable via
-  (n_planes, n_tables).
+* **Candidate generators.**  All pairs (``cosine_topk``,
+  ``embedding_near_dup``): :func:`_exact_pairs` broadcasts the candidate
+  matrix when it fits one chunk, else runs an executor-side block grid.
+  Random-hyperplane LSH buckets (``lsh_topk``, ``embedding_near_dup_lsh``;
+  md5-seeded planes, so reproducible).  Inverted lists of a k-means
+  quantizer (``ivf_topk``, ``ivfpq_topk``, ``semantic_dedup_pairs``;
+  :func:`_route`).  PQ codes of the whole corpus, broadcast (``pq_topk``).
+  Buckets are scored in place by :func:`_in_buckets` — no pair join.
+* **Score → top-k / threshold kernels** (numpy, in the Python worker):
+  :func:`_topk_kernel` ranks a (queries × candidates) score matrix — self
+  pairs masked, score desc then id asc — and :func:`_threshold_kernel`
+  cuts one into ``id_a < id_b`` pairs.  A PQ shortlist with exact refine
+  is two top-k calls: on the LUT scores (:func:`_pq_scores`), then on the
+  exact scores.
+* **Rank step** (Spark): :func:`_rank`, one ``row_number`` window over
+  ``query_id`` and the ``rank <= k`` cut.  Partition-local top-k followed
+  by this global merge is exact: each candidate scores identically
+  wherever it is scored, so the top-k of the union is the top-k of the
+  per-bucket top-ks.
 
-Determinism: cosine is computed in double precision with a fixed
-left-to-right fold (same order DuckDB's list_cosine_similarity uses), and
-top-k ordering ties break on the neighbor id.
+Determinism: scores are rounded to 6 decimals BEFORE ranking and ties
+break on the neighbor id, so results do not depend on the plan shape and
+match the DuckDB mirror (:func:`cosine_topk_sql`) row for row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import math
 
-from .dedup import _fan_out
-from .text import hash60
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .text import _fan_out
 
 __all__ = [
     "dot",
@@ -85,16 +102,6 @@ def nonzero_vectors(df: DataFrame, vec_col: str) -> DataFrame:
     return df.where(ssq > 0)
 
 
-def unit_vectors(df: DataFrame, id_col: str, vec_col: str, out: str = "__uv") -> DataFrame:
-    """Normalize each vector ONCE (double precision).  Downstream cosine is
-    then a plain dot — computing norms per *pair* would triple the FLOPs."""
-    n = norm(F.col(vec_col))
-    return df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / n).alias(out),
-    )
-
-
 def _check_topk_params(fn: str, **params: int) -> None:
     """Named bound checks for the ANN family: k >= 0 (k=0 is the documented
     empty search — useful in generated pipelines), every structural
@@ -110,154 +117,183 @@ def _check_topk_params(fn: str, **params: int) -> None:
             raise ValueError(f"{fn}: {name} must be >= 1, got {v}")
 
 
-def cosine_topk(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    queries: DataFrame | None = None,
-    method: str = "numpy",
-    chunk_size: int = 1 << 16,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector.
-
-    ``queries`` defaults to ``df`` itself (all-pairs self-search, excluding
-    the identity pair).  Output: (query_id, neighbor_id, cos_sim, rank);
-    cos_sim is rounded to 6 decimals and ranking ties break on neighbor_id,
-    so results are method-independent.
-
-    * ``method="numpy"`` (default): stream query rows through an
-      Arrow-batched ``mapInPandas`` doing one BLAS matmul + stable
-      top-k per batch against the candidate matrix, which is broadcast in
-      bounded CHUNKS (``chunk_size`` rows each): per-chunk partial top-k,
-      then a window merge.  Driver and executor memory are bounded by
-      chunk_size × dims regardless of candidate count — the 100 TB shape
-      for an exact (inherently O(n·m)) search.
-    * ``method="sql"``: pure built-in expressions (no Python workers) over a
-      crossJoin of pre-normalized vectors — the portable fallback and the
-      form the DuckDB oracle mirrors exactly.
-    """
-    _check_topk_params("cosine_topk", k=k, chunk_size=chunk_size)
-    df = nonzero_vectors(df, vec_col)
-    if queries is not None:
-        queries = nonzero_vectors(queries, vec_col)
-    if method == "numpy":
-        return _cosine_topk_blas(df, id_col, vec_col, k, queries, chunk_size)
-    q = unit_vectors(queries or df, id_col, vec_col, "__qv").withColumnRenamed(
-        id_col, "query_id"
-    )
-    c = unit_vectors(df, id_col, vec_col, "__cv").withColumnRenamed(
-        id_col, "neighbor_id"
-    )
-    sims = (
-        q.crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot(F.col("__qv"), F.col("__cv")), 6).alias("cos_sim"),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cos_sim",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+# --- the core: score -> top-k / threshold kernels ---------------------------
 
 
-def _cosine_topk_blas(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    queries: DataFrame | None,
-    chunk_size: int,
-) -> DataFrame:
-    """Exact BLAS top-k, two shapes by candidate count:
-
-    * candidates fit one chunk (≤ ``chunk_size``): broadcast the candidate
-      matrix once and stream query batches through a ``mapInPandas``
-      matmul — the classic broadcast-dim shape (one bounded driver pull,
-      same as a broadcast hash join's build side).
-    * larger: fully EXECUTOR-SIDE grid plan (:func:`_cosine_topk_grid`) —
-      both sides hash into blocks, each (query-block, candidate-block)
-      grid cell is one ``applyInPandas`` group running one matmul, and a
-      window merges per-cell partial top-ks.  No driver serialization
-      point at any size (the round-2 driver-pump chunk loop is gone).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    cand_src = df.select(id_col, vec_col)
-    n = cand_src.count()
-    if n > chunk_size:
-        return _cosine_topk_grid(
-            df, id_col, vec_col, k, queries, chunk_size, n_cand=n
-        )
-
-    out_schema = T.StructType(
+def _schema(*cols: str) -> T.StructType:
+    """Rows of the core: ids and ranks are longs, ``*_sim`` scores doubles."""
+    return T.StructType(
         [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-            T.StructField("rank", T.LongType()),
+            T.StructField(c, T.DoubleType() if c.endswith("_sim") else T.LongType())
+            for c in cols
         ]
     )
-    # single-file scans arrive as ONE input split — fan the query side out
-    # so the matmul batches use every core, not one
-    src = _fan_out((queries or df).select(id_col, vec_col))
 
-    def chunk_topk(bc):
-        def topk_batches(it):
-            ids, mat = bc.value
-            order_by_id = np.argsort(ids, kind="stable")
-            for pdf in it:
-                q_ids = pdf[id_col].to_numpy()
-                q_mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-                sims = np.round(q_mat @ mat.T, 6)  # rounded BEFORE ranking →
-                # ordering matches any engine that rounds the same values
-                rows: dict[str, list] = {"query_id": [], "neighbor_id": [], "cos_sim": [], "rank": []}
-                for qi, qid in enumerate(q_ids):
-                    s = sims[qi]
-                    self_mask = ids == qid
-                    s = np.where(self_mask, -np.inf, s)
-                    # top-k by (-sim, neighbor_id): stable sort over id-sorted order
-                    cand_order = order_by_id[np.argsort(-s[order_by_id], kind="stable")][:k]
-                    # k >= n_candidates: the -inf-masked self slot would
-                    # otherwise leak as a bogus pair (grid path filters it)
-                    cand_order = cand_order[s[cand_order] > -np.inf]
-                    for r, ci in enumerate(cand_order, start=1):
-                        rows["query_id"].append(int(qid))
-                        rows["neighbor_id"].append(int(ids[ci]))
-                        rows["cos_sim"].append(float(s[ci]))
-                        rows["rank"].append(r)
-                yield pd.DataFrame(rows)
 
-        return topk_batches
+_PARTIALS = _schema("query_id", "neighbor_id", "cos_sim")
+_RANKED = _schema("query_id", "neighbor_id", "cos_sim", "rank")
+_PAIRS = _schema("id_a", "id_b", "cos_sim")
 
-    pdf = cand_src.toPandas()
-    if len(pdf) == 0:
-        # empty corpus: top-k over nothing is well-defined — zero pairs
-        # (matches the brute-force SQL oracle, which also yields none)
-        return spark.createDataFrame([], out_schema)
-    c_ids = pdf[id_col].to_numpy()
-    c_mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat))
-    return src.mapInPandas(chunk_topk(bc), out_schema)
+# Score cells per kernel call on the broadcast and grid shapes.
+_BLOCK_CELLS = 1 << 20
+
+
+def _row_blocks(n_rows: int, n_cand: int):
+    """Row slices that cut a batch of ``n_rows`` queries scored against
+    ``n_cand`` candidates into kernel calls.  A call holds ~25 B per
+    (row × candidate) cell (scores, their id-ordered copy, the argsort
+    index), so a block takes at most _BLOCK_CELLS cells and a quarter of
+    the rows: its peak stays under the batch-wide 16 B/cell (score matrix
+    plus rounding copy) that a per-row loop holds, and near 25 MB however
+    large the Arrow batch or the candidate chunk."""
+    step = max(1, min(_BLOCK_CELLS // max(1, n_cand), -(-n_rows // 4)))
+    return [slice(lo, lo + step) for lo in range(0, n_rows, step)]
+
+
+def _vectors(pdf: pd.DataFrame, id_col: str, vec_col: str):
+    """(int64 ids, float64 unit rows) of a pandas batch."""
+    M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+    M /= np.linalg.norm(M, axis=1, keepdims=True)
+    return pdf[id_col].to_numpy().astype(np.int64), M
+
+
+def _cosines(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Exact cosines of unit rows, rounded to 6 decimals BEFORE any
+    ranking or cut, so ordering and thresholds match every engine that
+    rounds the same values.  ``Q is C`` lets BLAS use the symmetric
+    product, which keeps S[i, j] == S[j, i] bit for bit."""
+    S = Q @ C.T
+    return np.round(S, 6, out=S)
+
+
+def _topk_kernel(q_ids, c_ids, scores, k: int):
+    """Per-query top-k of a (queries × candidates) score matrix — the one
+    ranking every top-k operator uses.
+
+    ``c_ids`` is one id row shared by all queries, shape (n_c,), or one
+    row per query, shape (n_q, n_c).  A candidate whose id equals the
+    query's id is masked as self, every copy of a duplicate id included.
+    Order is score desc, then id asc, then column position: a stable score
+    sort over id-ordered columns.  Returns ``(cols, vals)``, each
+    (n_q, min(k, n_c)) and best first: column indices into ``scores`` and
+    their scores; -inf marks an empty slot (the masked self, or fewer
+    candidates than k)."""
+    if c_ids.ndim == 1:
+        order = np.argsort(c_ids, kind="stable")
+        ids, S = c_ids[order][None, :], scores[:, order]
+    else:
+        order = np.argsort(c_ids, axis=1, kind="stable")
+        ids = np.take_along_axis(c_ids, order, axis=1)
+        S = np.take_along_axis(scores, order, axis=1)
+    # S is a fresh copy: mask and negate in place, so a call holds only
+    # scores, S, the mask and the index matrix (~25 B per cell)
+    S[ids == q_ids[:, None]] = -np.inf
+    np.negative(S, out=S)
+    idx = np.argsort(S, axis=1, kind="stable")[:, : min(k, S.shape[1])]
+    cols = order[idx] if order.ndim == 1 else np.take_along_axis(order, idx, axis=1)
+    return cols, -np.take_along_axis(S, idx, axis=1)
+
+
+def _topk_rows(q_ids, c_ids, cols, vals, score: str = "cos_sim", rank: bool = False):
+    """A :func:`_topk_kernel` result as rows, query-major and best first,
+    empty slots dropped; ``rank`` adds the 1-based position."""
+    qi, slot = np.nonzero(vals > -np.inf)
+    nb = c_ids[cols] if c_ids.ndim == 1 else np.take_along_axis(c_ids, cols, axis=1)
+    out = {"query_id": q_ids[qi], "neighbor_id": nb[qi, slot], score: vals[qi, slot]}
+    if rank:
+        out["rank"] = slot.astype(np.int64) + 1
+    return pd.DataFrame(out)
+
+
+def _threshold_kernel(q_ids, c_ids, scores, threshold: float) -> pd.DataFrame:
+    """Pairs with score >= threshold, oriented ``id_a < id_b``.  The
+    orientation drops self pairs and emits each unordered pair once per
+    matrix, so disjoint grid cells union without a dedup shuffle."""
+    qi, ci = np.nonzero((scores >= threshold) & (q_ids[:, None] < c_ids[None, :]))
+    return pd.DataFrame(
+        {"id_a": q_ids[qi], "id_b": c_ids[ci], "cos_sim": scores[qi, ci]}
+    )
+
+
+def _emit_topk(k: int, rank: bool = False):
+    """Emitter for the Spark shapes: cosine top-k of queries vs candidates."""
+
+    def emit(q_ids, Q, c_ids, C, _cand=None):
+        cols, vals = _topk_kernel(q_ids, c_ids, _cosines(Q, C), k)
+        return _topk_rows(q_ids, c_ids, cols, vals, rank=rank)
+
+    return emit
+
+
+def _emit_pairs(threshold: float):
+    """Emitter for the Spark shapes: cosine pairs at or above threshold."""
+
+    def emit(q_ids, Q, c_ids, C, _cand=None):
+        return _threshold_kernel(q_ids, c_ids, _cosines(Q, C), threshold)
+
+    return emit
+
+
+def _refine(Q, V, cols, vals):
+    """Exact rounded cosines of each query's shortlisted candidates (rows
+    ``cols`` of the unit matrix ``V``); empty shortlist slots stay -inf."""
+    exact = np.round(np.einsum("qtd,qd->qt", V[cols], Q, optimize=True), 6)
+    return np.where(vals > -np.inf, exact, -np.inf)
+
+
+def _pq_codes(M, books):
+    """PQ encoding of unit rows: the nearest codeword per subspace, ties to
+    the lowest code index (np.argmin), so encoding is bit-deterministic."""
+    m, _, ds = books.shape
+    codes = np.empty((len(M), m), dtype=np.int32)
+    for s in range(m):
+        sub = M[:, s * ds : (s + 1) * ds]
+        d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = np.argmin(d2, axis=1)
+    return codes
+
+
+def _pq_scores(Q, books, codes):
+    """Asymmetric-distance scores of unit queries against PQ codes, rounded
+    to 6 decimals: LUT[q, s, c] = <Q[q] in subspace s, codeword c>, then
+    one gather-sum over each candidate's codes — no full-precision dot."""
+    m, _, ds = books.shape
+    lut = np.einsum("qsd,scd->qsc", Q.reshape(len(Q), m, ds), books, optimize=True)
+    sims = np.zeros((len(Q), len(codes)))
+    for s in range(m):
+        sims += lut[:, s, codes[:, s]]
+    return np.round(sims, 6)
+
+
+# --- the core: Spark shapes --------------------------------------------------
+
+
+def _rank(scored: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """The global merge of per-bucket partial top-ks: ``row_number`` over
+    ``query_id`` (score desc, neighbor id asc) and the ``rank <= k`` cut."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score, "rank")
+    )
+
+
+def _map_queries(src, id_col, vec_col, n_cand, emit, schema) -> DataFrame:
+    """Stream query rows through an Arrow-batched ``mapInPandas``, each
+    batch cut by :func:`_row_blocks`; ``emit(q_ids, Q)`` scores one block
+    against a broadcast candidate set.  Single-file scans arrive as ONE
+    input split — :func:`_fan_out` spreads the query side so the matmul
+    batches use every core, not one."""
+
+    def run(it):
+        for pdf in it:
+            for rows in _row_blocks(len(pdf), n_cand):
+                yield emit(*_vectors(pdf.iloc[rows], id_col, vec_col))
+
+    return _fan_out(src.select(id_col, vec_col)).mapInPandas(run, schema)
 
 
 def _grid_sides(
@@ -295,75 +331,170 @@ def _grid_sides(
     return q_side.unionByName(c_side)
 
 
-def _cosine_topk_grid(
+def _exact_pairs(
     df: DataFrame,
+    queries: DataFrame | None,
     id_col: str,
     vec_col: str,
-    k: int,
-    queries: DataFrame | None,
     chunk_size: int,
-    n_cand: int,
+    emit,
+    schema: T.StructType,
+    merge=None,
 ) -> DataFrame:
-    """Exact top-k as a block-partitioned grid join — the 100 TB shape for
-    an inherently O(n·m) search.  Queries hash into A blocks, candidates
-    into B blocks (each ≤ ~chunk_size rows); every (qa, cb) cell is one
-    ``applyInPandas`` group running one matmul and emitting its queries'
-    k best cell-candidates; a window over the cell partials (candidate
-    blocks partition disjointly, so no pair repeats) picks the global k.
-    All data flows executor→executor; the driver only plans."""
-    import math
+    """Exact all-pairs scoring (queries default to ``df``), two shapes by
+    candidate count:
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
+    * candidates fit one chunk (≤ ``chunk_size``): broadcast the unit
+      candidate matrix once and stream query batches through
+      :func:`_map_queries` — the broadcast-dim shape (one bounded driver
+      pull, same as a broadcast hash join's build side).  Each query sees
+      every candidate in one call, so rows are final.
+    * larger: fully EXECUTOR-SIDE grid — both sides hash into blocks of
+      ≤ ~chunk_size rows, each (query-block, candidate-block) cell is one
+      ``applyInPandas`` group, and ``merge`` (if given) combines the
+      cells' rows per query.  No driver serialization point at any size.
 
-    q_src = (queries if queries is not None else df).select(id_col, vec_col)
-    n_q = n_cand if queries is None else q_src.count()
-    A = max(1, math.ceil(n_q / chunk_size))
-    B = max(1, math.ceil(n_cand / chunk_size))
-    grid = _grid_sides(df, queries, id_col, vec_col, A, B)
+    ``emit(q_ids, Q, c_ids, C)`` scores one row block of unit queries
+    against unit candidates and returns pandas rows of ``schema``."""
+    cand = df.select(id_col, vec_col)
+    n = cand.count()
+    if n > chunk_size:
+        n_q = n if queries is None else queries.count()
+        grid = _grid_sides(
+            df, queries, id_col, vec_col,
+            max(1, math.ceil(n_q / chunk_size)), max(1, math.ceil(n / chunk_size)),
+        )
+        empty = pd.DataFrame({f.name: [] for f in schema.fields})
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
+        def cell(pdf: pd.DataFrame) -> pd.DataFrame:
+            qm = pdf["side"].to_numpy() == 0
+            if not qm.any() or qm.all():
+                return empty
+            q_ids, Q = _vectors(pdf[qm], "gid", "gvec")
+            c_ids, C = _vectors(pdf[~qm], "gid", "gvec")
+            return pd.concat(
+                [
+                    emit(q_ids[rows], Q[rows], c_ids, C)
+                    for rows in _row_blocks(len(q_ids), len(c_ids))
+                ],
+                ignore_index=True,
+            )
+
+        cells = grid.groupBy("qa", "cb").applyInPandas(cell, schema)
+        return merge(cells) if merge else cells
+
+    src = queries if queries is not None else df
+    pdf = cand.toPandas()
+    if len(pdf) == 0:
+        # empty corpus: scoring against nothing is well-defined — zero
+        # rows (matches the brute-force SQL oracles, which also yield none)
+        return df.sparkSession.createDataFrame([], schema)
+    bc = df.sparkSession.sparkContext.broadcast(_vectors(pdf, id_col, vec_col))
+
+    def against_all(q_ids, Q):
+        c_ids, C = bc.value
+        return emit(q_ids, Q, c_ids, C)
+
+    return _map_queries(src, id_col, vec_col, len(pdf), against_all, schema)
+
+
+def _in_buckets(
+    bucketed: DataFrame, keys: list[str], id_col: str, emit, schema, home: bool = False
+) -> DataFrame:
+    """Bucket-local exact scoring: ``groupBy(keys).applyInPandas`` runs one
+    matmul per bucket, every row of the bucket querying the bucket's
+    candidates — all its rows, or with ``home`` only the rows whose home
+    list this is (``probe_rank == 1``).  Vectors ride in as ``__vec``, so
+    the pair space lives only inside the bucket: no pair join ever
+    materializes.  ``emit(q_ids, Q, c_ids, C, cand)`` also gets the
+    candidates' pandas rows (IVF-PQ reads their codes)."""
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids, M = _vectors(pdf, id_col, "__vec")
+        if not home:
+            return emit(ids, M, ids, M, pdf)
+        cand = (pdf["probe_rank"] == 1).to_numpy()
+        if not cand.any():  # only probed, nobody's home list
+            return pd.DataFrame({f.name: [] for f in schema.fields})
+        return emit(ids, M, ids[cand], M[cand], pdf[cand])
+
+    return bucketed.groupBy(*keys).applyInPandas(score, schema)
+
+
+def _route(df, id_col, vec_col, bc_cent, n_probe: int, bc_books=None) -> DataFrame:
+    """IVF routing: ONE fused ``mapInPandas`` matmul against the broadcast
+    centroids emits each vector's ``n_probe`` nearest lists ranked
+    (``probe_rank`` 1 IS the inverted-file home list; ties to the lowest
+    list id), with the vector riding along as ``__vec`` and, given
+    ``bc_books``, its PQ codes.  A small training sample can yield fewer
+    centroids than asked, so ``n_probe`` clamps to the real list count
+    (more probes than lists would mis-shape the fan-out arrays)."""
+    n_probe = min(n_probe, len(bc_cent.value))
+    fields = [
+        T.StructField(id_col, T.LongType()),
+        T.StructField("list_id", T.IntegerType()),
+        T.StructField("probe_rank", T.IntegerType()),
+    ]
+    if bc_books is not None:
+        fields.append(T.StructField("codes", T.ArrayType(T.IntegerType())))
+    fields.append(T.StructField("__vec", T.ArrayType(T.DoubleType())))
+
+    def route(it):
+        C = bc_cent.value
+        ranks = np.arange(1, n_probe + 1, dtype=np.int32)
+        for pdf in it:
+            if not len(pdf):
+                continue
+            ids, M = _vectors(pdf, id_col, vec_col)
+            top = np.argsort(-(M @ C.T), axis=1, kind="stable")[:, :n_probe]
+            out = {
+                id_col: np.repeat(ids, n_probe),
+                "list_id": top.reshape(-1).astype("int32"),
+                "probe_rank": np.tile(ranks, len(pdf)),
+            }
+            if bc_books is not None:
+                codes = _pq_codes(M, bc_books.value)
+                out["codes"] = list(np.repeat(codes, n_probe, axis=0))
+            out["__vec"] = pdf[vec_col].repeat(n_probe).reset_index(drop=True)
+            yield pd.DataFrame(out)
+
+    return _fan_out(df.select(id_col, vec_col)).mapInPandas(
+        route, T.StructType(fields)
     )
 
-    def cell_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        qm = pdf["side"].to_numpy() == 0
-        cm = ~qm
-        if not qm.any() or not cm.any():
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []})
-        q_ids = pdf["gid"].to_numpy()[qm]
-        c_ids = pdf["gid"].to_numpy()[cm]
-        Q = np.vstack(pdf["gvec"].to_numpy()[qm]).astype(np.float64)
-        C = np.vstack(pdf["gvec"].to_numpy()[cm]).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        C /= np.linalg.norm(C, axis=1, keepdims=True)
-        S = np.round(Q @ C.T, 6)
-        order_by_id = np.argsort(c_ids, kind="stable")
-        kk = min(k, len(c_ids))
-        rows: dict[str, list] = {"query_id": [], "neighbor_id": [], "cos_sim": []}
-        for i, qid in enumerate(q_ids):
-            s = np.where(c_ids == qid, -np.inf, S[i])
-            best = order_by_id[np.argsort(-s[order_by_id], kind="stable")][:kk]
-            best = best[s[best] > -np.inf]
-            rows["query_id"].extend([int(qid)] * len(best))
-            rows["neighbor_id"].extend(int(c_ids[j]) for j in best)
-            rows["cos_sim"].extend(float(s[j]) for j in best)
-        return pd.DataFrame(rows)
 
-    partials = grid.groupBy("qa", "cb").applyInPandas(cell_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+# --- operators ----------------------------------------------------------------
+
+
+def cosine_topk(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 3,
+    queries: DataFrame | None = None,
+    chunk_size: int = 1 << 16,
+) -> DataFrame:
+    """Exact top-k cosine neighbors per query vector.
+
+    ``queries`` defaults to ``df`` itself (all-pairs self-search, excluding
+    the identity pair).  Output: (query_id, neighbor_id, cos_sim, rank);
+    cos_sim is rounded to 6 decimals and ranking ties break on
+    neighbor_id, so results are plan-independent.
+
+    Candidates are every vector (:func:`_exact_pairs`): up to
+    ``chunk_size`` of them broadcast once and query batches stream through
+    a BLAS matmul + top-k, which emits final ranks; more run the
+    executor-side grid, whose per-cell partial top-ks one window merges.
+    Memory is bounded by chunk_size × dims regardless of candidate count —
+    the 100 TB shape for an exact (inherently O(n·m)) search.
+    """
+    _check_topk_params("cosine_topk", k=k, chunk_size=chunk_size)
+    df = nonzero_vectors(df, vec_col)
+    if queries is not None:
+        queries = nonzero_vectors(queries, vec_col)
+    return _exact_pairs(
+        df, queries, id_col, vec_col, chunk_size,
+        _emit_topk(k, rank=True), _RANKED, merge=lambda cells: _rank(cells, k),
     )
 
 
@@ -381,8 +512,6 @@ def _plane_value_py(plane: int, dim: int) -> float:
 
 
 def _plane_matrix(table: int, n_planes: int, n_dims: int):
-    import numpy as np
-
     return np.array(
         [
             [_plane_value_py(table * 1000 + p, d) for d in range(n_dims)]
@@ -405,10 +534,6 @@ def _lsh_signatures(
     (vector, table).  With ``carry_vec`` the vector rides along into the
     bucket shuffle (×n_tables duplication — the standard multi-table LSH
     trade) so bucket-local scoring needs no join back to the table."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     planes = np.vstack([_plane_matrix(t, n_planes, n_dims) for t in range(n_tables)])
     pow2 = np.array([1 << p for p in range(n_planes)], dtype=np.int64)
     bc_planes = df.sparkSession.sparkContext.broadcast(planes)
@@ -450,97 +575,6 @@ def _lsh_signatures(
     return _fan_out(df.select(id_col, vec_col)).mapInPandas(signatures, sig_schema)
 
 
-def _lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    n_dims: int,
-) -> DataFrame:
-    """Hyperplane-LSH candidate pairs: vectors colliding in any of
-    ``n_tables`` signature tables (equi-join on (table, signature) — never
-    a cross join).  Output (query_id, neighbor_id), possibly repeated once
-    per colliding table.  Candidates carry IDS ONLY — shuffling vectors
-    through the pair join would move |pairs|·dims·8 bytes; ids are 8 B.
-
-    Id-only candidate streams pair with :func:`_score_pairs` (join-based
-    rerank).  For pair-DENSE regimes prefer the bucket-local matmul shape
-    (:func:`lsh_topk`, `dedup.embedding_near_dup_lsh`) — scoring inside
-    the bucket avoids materializing the pair join entirely."""
-    from pyspark import StorageLevel
-
-    # both sides of the self-join read the signature frame: without
-    # persist the Arrow signature pipeline runs twice (the same
-    # double-compute minhash banding avoids by persisting its bands).
-    tagged = _lsh_signatures(
-        df, id_col, vec_col, n_planes, n_tables, n_dims
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    a = tagged.alias("a")
-    b = tagged.alias("b")
-    return (
-        a.join(b, on=["tbl", "sig"])
-        .where(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("query_id"),
-            F.col(f"b.{id_col}").alias("neighbor_id"),
-        )
-    )
-
-
-def _bucket_topk_partials(
-    bucketed: DataFrame, id_col: str, k: int, bucket_cols: list[str]
-) -> DataFrame:
-    """Per-bucket exact-cosine partial top-k: one BLAS matmul per bucket
-    group (``groupBy(bucket_cols).applyInPandas``), emitting each member's
-    k best same-bucket neighbors.  Global top-k over the union of buckets
-    == top-k over merged per-bucket top-ks (each candidate scores
-    identically wherever it collides), so the caller just dedups and
-    windows.  Scoring never materializes a pair join: the pair space
-    lives only inside the bucket matmul."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []})
-        ids = pdf[id_col].to_numpy().astype(np.int64)
-        M = np.vstack(pdf["__vec"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        S = np.round(M @ M.T, 6)
-        # vectorized per-query top-k (r8: replaces a per-row Python
-        # argsort loop; same exclusion of self-and-id-duplicates, same
-        # (score desc, id asc) tie-break via the id-ordered stable sort)
-        order_by_id = np.argsort(ids, kind="stable")
-        kk = min(k, n - 1)
-        ids_ord = ids[order_by_id]
-        SO = S[:, order_by_id]
-        SO = np.where(ids_ord[None, :] == ids[:, None], -np.inf, SO)
-        idx = np.argsort(-SO, axis=1, kind="stable")[:, :kk]
-        vals = np.take_along_axis(SO, idx, axis=1)
-        keep = (vals > -np.inf).ravel()
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(ids, kk)[keep],
-                "neighbor_id": ids_ord[idx].ravel()[keep],
-                "cos_sim": vals.ravel()[keep],
-            }
-        )
-
-    return bucketed.groupBy(*bucket_cols).applyInPandas(bucket_topk, out_schema)
-
-
 def lsh_topk(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -567,57 +601,39 @@ def lsh_topk(
     _check_topk_params(
         "lsh_topk", k=k, n_planes=n_planes, n_tables=n_tables, n_dims=n_dims
     )
-    from pyspark.sql import Window
-
     sigs = _lsh_signatures(
         nonzero_vectors(df, vec_col),
         id_col, vec_col, n_planes, n_tables, n_dims, carry_vec=True,
     )
-    partials = _bucket_topk_partials(sigs, id_col, k, ["tbl", "sig"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        partials.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    partials = _in_buckets(sigs, ["tbl", "sig"], id_col, _emit_topk(k), _PARTIALS)
+    # a pair colliding in several tables is scored (identically) in each
+    return _rank(partials.dropDuplicates(["query_id", "neighbor_id"]), k)
 
 
-def _score_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    vec_col: str,
-    pairs_unique: bool = False,
+def _rerank_pairs(
+    df: DataFrame, pairs: DataFrame, id_col: str, vec_col: str, k: int
 ) -> DataFrame:
     """Exact cosine over candidate (query_id, neighbor_id) pairs with
-    vectors resolved by TWO SHUFFLE JOINS against the (id, vector) table —
-    the standard rerank-by-join shape.  No driver collect, no full-matrix
-    broadcast: the vector table shuffles by id (each partition bounded),
-    candidate ids are 16 B/row.  Scoring is an Arrow-batched einsum over
-    the joined rows.
+    vectors resolved by TWO SHUFFLE JOINS against the (id, unit vector)
+    table — the standard rerank-by-join shape — then the top-k window.
+    No driver collect, no full-matrix broadcast: the vector table shuffles
+    by id (each partition bounded), candidate ids are 16 B/row.  The
+    pairs must arrive unique (one global scoring pass emits each once),
+    so no dedup shuffle precedes the joins.
 
-    Pairs arriving multiple times (one per colliding LSH table) are
-    deduped first — one shuffle of bare id-pairs — so downstream ranking
-    sees each pair once.  ``pairs_unique=True`` skips that shuffle for
-    callers whose candidate generation is provably duplicate-free
-    (inverted-file probing: a neighbor belongs to exactly ONE home list,
-    so a (query, neighbor) pair can arise in at most one probed list —
-    IVF/IVF-PQ pass this; multi-table LSH must not).
-
-    Scoring itself is the built-in ``cosine`` fold (whole-stage codegen):
-    once the pair join has already resolved both vectors into the row, a
-    64-dim JVM fold per row beats shipping ~1 KB/row through an Arrow
-    batch to a Python worker and back — the batch-matmul shape only wins
-    when one side is a shared broadcast matrix (``cosine_topk``'s chunk
-    path), not for per-row pair scoring.
+    Each vector is normalized ONCE, so the per-pair cosine is a plain
+    dot — per-pair norms would triple the FLOPs.  Scoring is the built-in
+    fold (whole-stage codegen): once the join has resolved both vectors
+    into the row, a 64-dim JVM fold per row beats shipping ~1 KB/row
+    through an Arrow batch to a Python worker and back — the batch-matmul
+    shape only wins when one side is a shared broadcast matrix.
     """
-    vecs = unit_vectors(df, id_col, vec_col, "__uv")
-    if not pairs_unique:
-        pairs = pairs.dropDuplicates(["query_id", "neighbor_id"])
-    return (
+    n = norm(F.col(vec_col))
+    vecs = df.select(
+        F.col(id_col),
+        F.transform(F.col(vec_col), lambda x: x.cast("double") / n).alias("__uv"),
+    )
+    scored = (
         pairs.join(
             vecs.select(F.col(id_col).alias("query_id"), F.col("__uv").alias("__qv")),
             "query_id",
@@ -634,28 +650,7 @@ def _score_pairs(
             F.round(dot(F.col("__qv"), F.col("__nv")), 6).alias("cos_sim"),
         )
     )
-
-
-def _rerank_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    pairs_unique: bool = False,
-) -> DataFrame:
-    """Join-resolved exact-cosine scoring + per-query top-k window."""
-    from pyspark.sql import Window
-
-    scored = _score_pairs(df, pairs, id_col, vec_col, pairs_unique=pairs_unique)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _rank(scored, k)
 
 
 def _training_sample(df: DataFrame, id_col: str, vec_col: str, sample_size: int):
@@ -699,8 +694,6 @@ def train_quantizer(
     pre-collected ``_training_sample`` frame (same first-rows contract) to
     share one collection across trainers."""
     _check_topk_params("train_quantizer", n_lists=n_lists)
-    import numpy as np
-
     sample = (
         _training_sample(df, id_col, vec_col, sample_size)
         if _sample is None
@@ -723,36 +716,10 @@ def train_quantizer(
 
 
 def assign_clusters(df: DataFrame, id_col: str, vec_col: str, bc_cent) -> DataFrame:
-    """(id, list_id) nearest-centroid assignment — an Arrow-batched
-    mapInPandas matmul against the broadcast centroid matrix."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    assign_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("list_id", T.IntegerType()),
-        ]
-    )
-
-    def assign_lists(it):
-        C = bc_cent.value
-        for pdf in it:
-            if not len(pdf):
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M /= np.linalg.norm(M, axis=1, keepdims=True)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "list_id": np.argmax(M @ C.T, axis=1).astype("int32"),
-                }
-            )
-
-    return _fan_out(df.select(id_col, vec_col)).mapInPandas(
-        assign_lists, assign_schema
-    )
+    """(id, list_id) nearest-centroid assignment — the home list of
+    :func:`_route` (an Arrow-batched matmul against the broadcast
+    centroid matrix; ties to the lowest list id)."""
+    return _route(df, id_col, vec_col, bc_cent, 1).select(id_col, "list_id")
 
 
 def ivf_topk(
@@ -773,23 +740,16 @@ def ivf_topk(
     The quantizer trains driver-side on a deterministic sample (first
     ``sample_size`` rows by id — seeded, reproducible), Lloyd iterations in
     numpy; the centroid matrix broadcasts (n_lists × dims — bytes).  ONE
-    fused mapInPandas matmul emits each vector's n_probe nearest lists
-    ranked (rank 1 IS the inverted-file assignment), with the vector
-    riding along; each list group then runs ONE BLAS matmul — probing
-    queries × member rows — emitting per-query partial top-k, and a
-    window over the deduped union picks the final k.  The pair space
-    (Σ_probed-list |bucket| per query — n_probe/n_lists of brute force)
-    lives only inside the bucket matmuls; no pair join materializes.
-    Recall rises with ``n_probe`` (== n_lists ⇒ exact).
+    fused mapInPandas matmul (:func:`_route`) emits each vector's n_probe
+    nearest lists ranked, with the vector riding along; each list group
+    then runs ONE BLAS matmul — probing queries × member rows — emitting
+    per-query partial top-k, and a window over the union picks the final
+    k.  The pair space (Σ_probed-list |bucket| per query — n_probe/n_lists
+    of brute force) lives only inside the bucket matmuls; no pair join
+    materializes.  Recall rises with ``n_probe`` (== n_lists ⇒ exact).
     """
     _check_topk_params("ivf_topk", k=k, n_lists=n_lists, n_probe=n_probe)
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
     df = nonzero_vectors(df, vec_col)
-    spark = df.sparkSession
     cent = train_quantizer(
         df,
         id_col,
@@ -799,94 +759,15 @@ def ivf_topk(
         sample_size=sample_size,
         seed=seed,
     )
-    # a corpus smaller than n_lists trains fewer centroids than asked —
-    # probing more lists than exist would misalign the fan-out arrays
-    # (the ivfpq clamp, mirrored here)
-    n_probe = min(n_probe, len(cent))
-    bc_cent = spark.sparkContext.broadcast(cent)
-
-    probe_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("list_id", T.IntegerType()),
-            T.StructField("probe_rank", T.IntegerType()),
-            T.StructField("__vec", T.ArrayType(T.DoubleType())),
-        ]
+    probed = _route(
+        df, id_col, vec_col, df.sparkSession.sparkContext.broadcast(cent), n_probe
     )
-
-    def probe_lists(it):
-        C = bc_cent.value
-        ranks = np.arange(1, n_probe + 1, dtype=np.int32)
-        for pdf in it:
-            n = len(pdf)
-            if not n:
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M /= np.linalg.norm(M, axis=1, keepdims=True)
-            sims = M @ C.T
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy().astype("int64"), n_probe),
-                    "list_id": top.reshape(-1).astype("int32"),
-                    "probe_rank": np.tile(ranks, n),
-                    "__vec": pdf[vec_col].repeat(n_probe).reset_index(drop=True),
-                }
-            )
-
-    probed = _fan_out(df.select(id_col, vec_col)).mapInPandas(
-        probe_lists, probe_schema
+    # no pair dedup: candidates are a list's home members only, so a
+    # neighbor is scored in exactly one list per query
+    return _rank(
+        _in_buckets(probed, ["list_id"], id_col, _emit_topk(k), _PARTIALS, home=True),
+        k,
     )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def list_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        # every row probes this list; rows with probe_rank == 1 are members
-        ids = pdf[id_col].to_numpy().astype(np.int64)
-        members = (pdf["probe_rank"] == 1).to_numpy()
-        if not members.any() or len(pdf) < 2:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []})
-        M = np.vstack(pdf["__vec"].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        m_ids = ids[members]
-        S = np.round(M @ M[members].T, 6)  # (queries × members)
-        # vectorized per-query top-k (r8: same loop replacement as the
-        # LSH bucket — self excluded, (score desc, id asc) tie-break)
-        order_by_id = np.argsort(m_ids, kind="stable")
-        ids_ord = m_ids[order_by_id]
-        SO = S[:, order_by_id]
-        SO = np.where(ids_ord[None, :] == ids[:, None], -np.inf, SO)
-        kk = min(k, SO.shape[1])
-        idx = np.argsort(-SO, axis=1, kind="stable")[:, :kk]
-        vals = np.take_along_axis(SO, idx, axis=1)
-        keep = (vals > -np.inf).ravel()
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(ids, kk)[keep],
-                "neighbor_id": ids_ord[idx].ravel()[keep],
-                "cos_sim": vals.ravel()[keep],
-            }
-        )
-
-    partials = probed.groupBy("list_id").applyInPandas(list_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    # no pair dedup: members carry probe_rank==1 only, so a neighbor is
-    # scored in exactly one (its home) list per query
-    return (
-        partials
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
 
 
 def train_pq_codebooks(
@@ -911,8 +792,6 @@ def train_pq_codebooks(
     regardless of table size.  Ties in assignment resolve to the lowest
     code index (np.argmin), so encoding is bit-deterministic.
     """
-    import numpy as np
-
     sample = (
         _training_sample(df, id_col, vec_col, sample_size)
         if _sample is None
@@ -946,10 +825,6 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str, bc_books) -> DataFrame:
     is the compressed table: ``m`` small ints per vector (d·4 bytes →
     m bytes at int8 storage), the representation that makes a 100 TB
     vector corpus broadcastable / cacheable."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -958,23 +833,12 @@ def pq_encode(df: DataFrame, id_col: str, vec_col: str, bc_books) -> DataFrame:
     )
 
     def encode(it):
-        B = bc_books.value  # (m, n_codes, ds)
-        m, _, ds = B.shape
         for pdf in it:
             if not len(pdf):
                 continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M /= np.linalg.norm(M, axis=1, keepdims=True)
-            codes = np.empty((len(M), m), dtype=np.int32)
-            for s in range(m):
-                sub = M[:, s * ds : (s + 1) * ds]
-                d2 = ((sub[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = np.argmin(d2, axis=1)
+            ids, M = _vectors(pdf, id_col, vec_col)
             yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].astype("int64"),
-                    "codes": list(codes),
-                }
+                {id_col: ids, "codes": list(_pq_codes(M, bc_books.value))}
             )
 
     return _fan_out(df.select(id_col, vec_col)).mapInPandas(encode, schema)
@@ -1016,12 +880,12 @@ def pq_topk(
     message.  Scoring is embarrassingly parallel over query
     partitions; nothing shuffles after the one encode pass.
 
-    With ``shortlist=K'`` the PQ pass emits K' candidates per query and a
-    join-resolved EXACT cosine re-rank picks the final k — the standard
-    ADC+re-rank pipeline: full-precision vectors are touched for only
-    K'·n_queries pairs instead of n², and recall jumps because the true
-    top-k only has to survive into the shortlist, not win the quantized
-    ordering outright.
+    With ``shortlist=K'`` the PQ pass emits K' candidates per query and an
+    EXACT cosine re-rank picks the final k — the standard ADC+re-rank
+    pipeline: full-precision vectors are touched for only K'·n_queries
+    pairs instead of n², and recall jumps because the true top-k only
+    has to survive into the shortlist, not win the quantized ordering
+    outright.
 
     Determinism: seeded sampling, ties to the lowest code / neighbor id,
     scores rounded to 6 decimals before ranking — same contract as the
@@ -1032,11 +896,6 @@ def pq_topk(
         "pq_topk", k=k, m=m, n_codes=n_codes,
         **({} if shortlist is None else {"shortlist": shortlist}),
     )
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-
     df = nonzero_vectors(df, vec_col)
     spark = df.sparkSession
     # One bounded collection feeds training AND, when it exhausts the
@@ -1068,167 +927,53 @@ def pq_topk(
         _sample=sample,
     )
     bc_books = spark.sparkContext.broadcast(books)
-    unit_corpus = None
+    V = None
     if n_corpus <= len(sample):
         # the training sample IS the corpus: encode driver-side with the
-        # identical argmin assignment (bit-equal to pq_encode — pinned by
-        # test_pq_driver_encode_matches_distributed)
-        db_ids = sample[id_col].to_numpy().astype(np.int64)
-        M = np.vstack(sample[vec_col].to_numpy()).astype(np.float64)
-        M /= np.linalg.norm(M, axis=1, keepdims=True)
-        unit_corpus = M
-        ds = M.shape[1] // m
-        codes_mat = np.empty((len(M), m), dtype=np.int32)
-        for s in range(m):
-            sub = M[:, s * ds : (s + 1) * ds]
-            d2 = ((sub[:, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
-            codes_mat[:, s] = np.argmin(d2, axis=1)
+        # same kernel pq_encode runs
+        db_ids, V = _vectors(sample, id_col, vec_col)
+        codes = _pq_codes(V, books)
     else:
         enc = pq_encode(df, id_col, vec_col, bc_books).toPandas()
-        codes_mat = np.vstack(enc["codes"].to_numpy()).astype(np.int32)
+        codes = np.vstack(enc["codes"].to_numpy()).astype(np.int32)
         db_ids = enc[id_col].to_numpy().astype(np.int64)
+    # Driver-resident corpus + shortlist: the exact re-rank fuses into the
+    # scoring pass.  The join-resolved _rerank_pairs shape exists to avoid
+    # materializing full-precision vectors per pair at scale; here the
+    # unit matrix is ALREADY on the driver (it is the training sample), so
+    # the refine is a (shortlist × d) product in the same UDF and the pair
+    # shuffle, two joins and rank window collapse into one map-only stage
+    # (test_pq_full_shortlist_is_exact holds over this path).
+    fused = bool(shortlist) and V is not None
     order = np.argsort(db_ids, kind="stable")
-    bc_db = spark.sparkContext.broadcast((db_ids[order], codes_mat[order]))
-    if unit_corpus is not None:
-        unit_corpus = unit_corpus[order]
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("pq_sim", T.DoubleType()),
-        ]
+    bc_db = spark.sparkContext.broadcast(
+        (db_ids[order], codes[order], V[order] if fused else None)
     )
-
     n_cand = shortlist if shortlist else k
 
-    if shortlist and unit_corpus is not None:
-        # Driver-resident corpus + shortlist: fuse the exact re-rank into
-        # the scoring pass.  The join-resolved _rerank_pairs shape exists
-        # to avoid materializing full-precision vectors per pair at scale;
-        # here the full-precision matrix is ALREADY on the driver (it is
-        # the training sample), so the per-query exact cosine over the
-        # shortlist is a (n_cand × d) matmul in the same UDF — the scored
-        # shuffle, pair dedup, two joins, and rank window all collapse
-        # into one map-only stage.  Semantics are pinned identical: same
-        # 6-decimal rounding, ties sim-desc then neighbor-id-asc
-        # (test_pq_full_shortlist_is_exact holds over this path).
-        bc_full = spark.sparkContext.broadcast(unit_corpus)
-        rerank_schema = T.StructType(
-            [
-                T.StructField("query_id", T.LongType()),
-                T.StructField("neighbor_id", T.LongType()),
-                T.StructField("cos_sim", T.DoubleType()),
-                T.StructField("rank", T.LongType()),
-            ]
-        )
+    def score(q_ids, Q):
+        ids, codes, V = bc_db.value
+        pq = _pq_scores(Q, bc_books.value, codes)
+        cols, vals = _topk_kernel(q_ids, ids, pq, n_cand)
+        if not fused:
+            return _topk_rows(q_ids, ids, cols, vals, score="pq_sim")
+        nb = ids[cols]
+        exact = _refine(Q, V, cols, vals)
+        return _topk_rows(q_ids, nb, *_topk_kernel(q_ids, nb, exact, k), rank=True)
 
-        def score_rerank(it):
-            B = bc_books.value
-            ids, codes = bc_db.value
-            V = bc_full.value
-            mm, _, ds = B.shape
-            for pdf in it:
-                nq = len(pdf)
-                if not nq:
-                    continue
-                Q = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-                lut = np.einsum(
-                    "qsd,scd->qsc", Q.reshape(nq, mm, ds), B, optimize=True
-                )
-                sims = np.zeros((nq, len(ids)))
-                for s in range(mm):
-                    sims += lut[:, s, codes[:, s]]
-                sims = np.round(sims, 6)
-                q_ids = pdf[id_col].to_numpy().astype(np.int64)
-                # vectorized shortlist + exact refine (r8: replaces a
-                # per-row Python argsort/lexsort loop; identical
-                # candidate sets and tie-breaks — PQ ties break on
-                # corpus-array position as before, exact ties on
-                # (score desc, neighbor id asc) via the row lexsort)
-                SM = np.where(ids[None, :] == q_ids[:, None], -np.inf, sims)
-                take = min(n_cand, SM.shape[1])
-                idx = np.argsort(-SM, axis=1, kind="stable")[:, :take]
-                vals = np.take_along_axis(SM, idx, axis=1)
-                exact = np.round(
-                    np.einsum("qtd,qd->qt", V[idx], Q, optimize=True), 6
-                )
-                exact = np.where(vals > -np.inf, exact, -np.inf)
-                nb = ids[idx]
-                kk = min(k, take)
-                top = np.lexsort((nb, -exact))[:, :kk]
-                tvals = np.take_along_axis(exact, top, axis=1)
-                keep = (tvals > -np.inf).ravel()
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids, kk)[keep],
-                        "neighbor_id": np.take_along_axis(
-                            nb, top, axis=1
-                        ).ravel()[keep],
-                        "cos_sim": tvals.ravel()[keep],
-                        "rank": np.tile(
-                            np.arange(1, kk + 1, dtype=np.int64), nq
-                        )[keep],
-                    }
-                )
-
-        return _fan_out(df.select(id_col, vec_col)).mapInPandas(
-            score_rerank, rerank_schema
-        )
-
-    def score(it):
-        B = bc_books.value
-        ids, codes = bc_db.value
-        mm, _, ds = B.shape
-        for pdf in it:
-            nq = len(pdf)
-            if not nq:
-                continue
-            Q = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-            # LUT[q, s, c] = <Q[q] subspace s, codeword c>
-            lut = np.einsum(
-                "qsd,scd->qsc", Q.reshape(nq, mm, ds), B, optimize=True
-            )
-            sims = np.zeros((nq, len(ids)))
-            for s in range(mm):
-                sims += lut[:, s, codes[:, s]]
-            sims = np.round(sims, 6)
-            q_ids = pdf[id_col].to_numpy().astype(np.int64)
-            # vectorized candidate emission (r8; same per-row loop
-            # replacement as score_rerank — tie-breaks unchanged)
-            SM = np.where(ids[None, :] == q_ids[:, None], -np.inf, sims)
-            take = min(n_cand, SM.shape[1])
-            idx = np.argsort(-SM, axis=1, kind="stable")[:, :take]
-            vals = np.take_along_axis(SM, idx, axis=1)
-            keep = (vals > -np.inf).ravel()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, take)[keep],
-                    "neighbor_id": ids[idx].ravel()[keep],
-                    "pq_sim": vals.ravel()[keep],
-                }
-            )
-
-    scored = _fan_out(df.select(id_col, vec_col)).mapInPandas(score, out_schema)
+    if fused:
+        return _map_queries(df, id_col, vec_col, len(db_ids), score, _RANKED)
+    scored = _map_queries(
+        df, id_col, vec_col, len(db_ids), score,
+        _schema("query_id", "neighbor_id", "pq_sim"),
+    )
     if shortlist:
         # one global scoring pass emits each (query, neighbor) at most
-        # once -> the rerank skips the defensive pair-dedup shuffle
+        # once, so the join-resolved re-rank needs no pair dedup
         return _rerank_pairs(
-            df,
-            scored.select("query_id", "neighbor_id"),
-            id_col,
-            vec_col,
-            k,
-            pairs_unique=True,
+            df, scored.select("query_id", "neighbor_id"), id_col, vec_col, k
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("pq_sim").desc(), F.col("neighbor_id")
-    )
-    return scored.withColumn(
-        "rank", F.row_number().over(w).cast("long")
-    ).select("query_id", "neighbor_id", "pq_sim", "rank")
+    return _rank(scored, k, score="pq_sim")
 
 
 def ivfpq_topk(
@@ -1249,17 +994,25 @@ def ivfpq_topk(
     coarse k-means routes vectors into inverted lists, vectors are stored
     as ``m``-byte PQ codes, queries probe ``n_probe`` lists and score each
     probed list's CODES through a per-query lookup table, and an exact
-    join-based re-rank resolves the final k from the shortlist.
+    re-rank resolves the final k from the shortlist.
 
     Why this is THE 100 TB shape (vs :func:`pq_topk`'s broadcast): nothing
     is collected or broadcast except the two trained artifacts (centroids
     + codebooks — kilobytes).  The code table lives distributed, bucketed
     by list id; each bucket's scoring is a LUT gather over only that
     bucket's codes (n_probe/n_lists of the corpus per query, at m bytes
-    per vector); the only full-precision pair work is the
-    shortlist·n_queries re-rank join.  Every stage is an equi-join or
-    groupBy on list_id / vector id — co-partitioned, skew-bounded by
+    per vector).  Every stage is a groupBy on list_id — skew-bounded by
     balanced k-means lists.
+
+    ADC + REFINE is bucket-local: the probed list already holds both the
+    query vector (it rode in with the probe) and the member vectors, so
+    the exact cosine of each PQ shortlist is computed right there — two
+    calls of the top-k kernel, on the LUT scores and then on the exact
+    ones.  Resolving vectors through corpus-wide re-rank joins instead
+    shuffled ~n_probe × shortlist × vec-size bytes for nothing (measured
+    16 s of a 23 s call at 20k × 64d).  A neighbor belongs to exactly ONE
+    home list, so a (query, neighbor) pair arises in at most one probed
+    list: one window over the per-list top-ks resolves the final k.
 
     Determinism matches the other ANN paths (seeded training, stable ties,
     6-decimal rounding before ranking).  Recall rises with ``n_probe`` and
@@ -1269,10 +1022,6 @@ def ivfpq_topk(
         "ivfpq_topk", k=k, n_lists=n_lists, n_probe=n_probe, m=m,
         n_codes=n_codes, shortlist=shortlist,
     )
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     df = nonzero_vectors(df, vec_col)
     spark = df.sparkSession
     sample = _training_sample(df, id_col, vec_col, sample_size)
@@ -1286,134 +1035,22 @@ def ivfpq_topk(
         kmeans_iters=kmeans_iters, sample_size=sample_size, seed=seed + 1,
         _sample=sample,
     )
-    # a small training sample can yield fewer centroids than n_lists;
-    # probing more lists than exist would mis-shape the route() arrays
-    n_probe = min(n_probe, len(cent))
-    bc_cent = spark.sparkContext.broadcast(cent)
     bc_books = spark.sparkContext.broadcast(books)
-
-    member_schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("list_id", T.IntegerType()),
-            T.StructField("probe_rank", T.IntegerType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-            T.StructField("__vec", T.ArrayType(T.DoubleType())),
-        ]
+    routed = _route(
+        df, id_col, vec_col, spark.sparkContext.broadcast(cent), n_probe, bc_books
     )
 
-    def route(it):
-        C = bc_cent.value
-        B = bc_books.value
-        mm, _, ds = B.shape
-        ranks = np.arange(1, n_probe + 1, dtype=np.int32)
-        for pdf in it:
-            n = len(pdf)
-            if not n:
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            M /= np.linalg.norm(M, axis=1, keepdims=True)
-            # membership codes (rank-1 list is the inverted-file home)
-            codes = np.empty((n, mm), dtype=np.int32)
-            for s in range(mm):
-                sub = M[:, s * ds : (s + 1) * ds]
-                d2 = ((sub[:, None, :] - B[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = np.argmin(d2, axis=1)
-            sims = M @ C.T
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            ids = pdf[id_col].to_numpy().astype("int64")
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, n_probe),
-                    "list_id": top.reshape(-1).astype("int32"),
-                    "probe_rank": np.tile(ranks, n),
-                    "codes": [codes[i // n_probe] for i in range(n * n_probe)],
-                    "__vec": pdf[vec_col].repeat(n_probe).reset_index(drop=True),
-                }
-            )
+    def refine_in_list(q_ids, Q, c_ids, C, cand):
+        codes = np.vstack(cand["codes"].to_numpy()).astype(np.int32)
+        pq = _pq_scores(Q, bc_books.value, codes)
+        cols, vals = _topk_kernel(q_ids, c_ids, pq, shortlist)
+        nb = c_ids[cols]
+        exact = _refine(Q, C, cols, vals)
+        return _topk_rows(q_ids, nb, *_topk_kernel(q_ids, nb, exact, k))
 
-    routed = _fan_out(df.select(id_col, vec_col)).mapInPandas(
-        route, member_schema
-    )
-
-    pair_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_sim", T.DoubleType()),
-        ]
-    )
-
-    def list_shortlist(pdf: pd.DataFrame) -> pd.DataFrame:
-        B = bc_books.value
-        mm, _, ds = B.shape
-        ids = pdf[id_col].to_numpy().astype(np.int64)
-        members = (pdf["probe_rank"] == 1).to_numpy()
-        if not members.any() or len(pdf) < 2:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cos_sim": []}
-            )
-        m_ids = ids[members]
-        codes = np.vstack(pdf.loc[members, "codes"].to_numpy()).astype(np.int32)
-        Q = np.vstack(pdf["__vec"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        lut = np.einsum(
-            "qsd,scd->qsc", Q.reshape(len(Q), mm, ds), B, optimize=True
-        )
-        sims = np.zeros((len(Q), len(m_ids)))
-        for s in range(mm):
-            sims += lut[:, s, codes[:, s]]
-        sims = np.round(sims, 6)
-        # vectorized top-shortlist by PQ score (r8; the per-row Python
-        # loop this replaces was real per-row work in the hot path).
-        # Columns ordered by neighbor id so the stable sort breaks score
-        # ties on id ascending, exactly as the row-at-a-time version did.
-        order_by_id = np.argsort(m_ids, kind="stable")
-        S = sims[:, order_by_id]
-        ids_ord = m_ids[order_by_id]
-        V_ord = np.vstack(pdf.loc[members, "__vec"].to_numpy()).astype(
-            np.float64
-        )[order_by_id]
-        V_ord /= np.linalg.norm(V_ord, axis=1, keepdims=True)
-        S = np.where(ids_ord[None, :] == ids[:, None], -np.inf, S)
-        take = min(shortlist, S.shape[1])
-        idx = np.argsort(-S, axis=1, kind="stable")[:, :take]
-        vals = np.take_along_axis(S, idx, axis=1)
-        keep = (vals > -np.inf).ravel()
-        # ADC + REFINE, bucket-local (r8): the exact cosine for the PQ
-        # shortlist is computed RIGHT HERE — the probed list already
-        # holds both the query vector (it rode in with the probe) and
-        # the member vectors, so resolving them again through two
-        # corpus-wide rerank joins shuffled ~n_probe x shortlist x
-        # vec-size bytes for nothing (measured 16 s of a 23 s call at
-        # 20k x 64d).  Exact flops are only |queries| x shortlist x d
-        # per bucket; downstream needs just a skinny per-query top-k
-        # window.  Same candidate set, same 6-decimal rounding, same
-        # tie-break as the join-based rerank it replaces.
-        exact = np.round(
-            np.einsum("qtd,qd->qt", V_ord[idx], Q, optimize=True), 6
-        )
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(ids, take)[keep],
-                "neighbor_id": ids_ord[idx].ravel()[keep],
-                "cos_sim": exact.ravel()[keep],
-            }
-        )
-
-    pairs = routed.groupBy("list_id").applyInPandas(list_shortlist, pair_schema)
-    # a neighbor belongs to exactly ONE home list, so a (query, neighbor)
-    # pair arises in at most one probed list — no pair dedup needed; the
-    # final k resolves with ONE window over the skinny scored pairs
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    return _rank(
+        _in_buckets(routed, ["list_id"], id_col, refine_in_list, _PARTIALS, home=True),
+        k,
     )
 
 
