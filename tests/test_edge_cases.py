@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from tidier_spark import days, mutate
@@ -491,6 +492,20 @@ def test_ann_and_dedup_empty_corpus_behavior(spark):
     assert D.semantic_dedup_pairs(empty).count() == 0
     with pytest.raises(ValueError, match="empty corpus"):
         S.train_quantizer(empty, "vec_id", "embedding", n_lists=4)
+
+
+@pytest.mark.parametrize("shortlist", [None, 1000])
+def test_pq_topk_empty_corpus_returns_zero_rows(spark, shortlist):
+    """pq_topk is a search: over no vectors (the one-row edge axis after
+    the board entry's filter) it returns zero rows, not the trainer's
+    empty-corpus error."""
+    from tidier_spark.operators import similarity as S
+
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    out = S.pq_topk(empty, k=3, shortlist=shortlist)
+    score = "cos_sim" if shortlist else "pq_sim"
+    assert out.columns == ["query_id", "neighbor_id", score, "rank"]
+    assert out.count() == 0
 
 
 def test_sketch_merges_over_zero_partials(spark):

@@ -193,6 +193,37 @@ def test_cosine_topk_chunked_equals_single(tables):
     assert one == many
 
 
+def test_cosine_topk_duplicate_query_ids_rank_per_id(spark):
+    # two rows per id: the broadcast and grid shapes both give ONE top-k per
+    # query id (the oracle's contract), ranked over both rows' candidates
+    import math
+
+    rows = [
+        (i // 2, [math.cos(0.7 * i), math.sin(0.7 * i), 0.05 * i + 0.3])
+        for i in range(16)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    k = 3
+    broadcast = {tuple(r) for r in similarity.cosine_topk(df, k=k).collect()}
+    grid = {tuple(r) for r in similarity.cosine_topk(df, k=k, chunk_size=5).collect()}
+    assert broadcast == grid
+
+    def cos(a, b):
+        return sum(x * y for x, y in zip(a, b)) / math.dist(a, [0] * 3) / math.dist(
+            b, [0] * 3
+        )
+
+    want = set()
+    for q in sorted({i for i, _ in rows}):
+        scored = sorted(
+            (-cos(qv, cv), cid)
+            for qid, qv in rows if qid == q
+            for cid, cv in rows if cid != q
+        )
+        want |= {(q, cid, rank) for rank, (_, cid) in enumerate(scored[:k], 1)}
+    assert {(q, n, r) for q, n, _, r in broadcast} == want
+
+
 def test_embedding_near_dup_chunked_equals_single(tables):
     # grid plan vs broadcast plan differential (see cosine_topk above)
     emb = tables["embeddings"]

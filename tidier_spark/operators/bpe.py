@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .literal import json_lit
+
 __all__ = [
     "bpe_train",
     "bpe_train_local",
@@ -104,22 +106,31 @@ def bpe_train(
     )
     cur = words.select("w", "n", _wrapped_chars(F.col("w")).alias("s"))
     cur = cur.localCheckpoint()
-    merges: list[tuple[int, str, str, str, int]] = []
+    # the round's expressions are round-independent: build them once, so
+    # a round costs only its DataFrame calls and the two merge literals
+    pair_cols = [
+        F.col("n"), F.explode(_adjacent_pairs(_symbols(F.col("s")))).alias("p")
+    ]
+    keys = [F.col("p.a").alias("a"), F.col("p.b").alias("b")]
+    total = F.sum("n").alias("pn")
+    order = [F.desc("pn"), F.asc("a"), F.asc("b")]
+    merges: list[dict] = []
     for r in range(n_merges):
-        pairs = cur.select(
-            F.col("n"), F.explode(_adjacent_pairs(_symbols(F.col("s")))).alias("p")
-        )
         best = (
-            pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("n").alias("pn"))
-            .orderBy(F.desc("pn"), F.asc("a"), F.asc("b"))
+            cur.select(*pair_cols)
+            .groupBy(*keys)
+            .agg(total)
+            .orderBy(*order)
             .limit(1)
             .collect()
         )
         if not best:
             break
         a, b, pn = best[0].a, best[0].b, best[0].pn
-        merges.append((r + 1, a, b, a + b, pn))
+        merges.append(
+            {"rank": r + 1, "left_sym": a, "right_sym": b, "merged": a + b,
+             "pair_n": pn}
+        )
         pat = F.lit(f"{SEP}{a}{SEP}{SEP}{b}{SEP}")
         rep = F.lit(f"{SEP}{a}{b}{SEP}")
         cur = cur.withColumn("s", F.replace(F.col("s"), pat, rep))
@@ -130,7 +141,12 @@ def bpe_train(
         # high merge counts.
         if (r + 1) % 8 == 0:
             cur = cur.localCheckpoint()
-    return spark.createDataFrame(merges, MERGE_SCHEMA)
+    # the merge table as one folded literal under a one-row range: a JVM
+    # local plan whatever the session's Arrow setting (createDataFrame
+    # over Python rows is a pickled-row RDD that starts a Python worker)
+    return spark.range(1, numPartitions=1).select(
+        F.inline(json_lit(merges, f"array<struct<{MERGE_SCHEMA}>>"))
+    )
 
 
 def bpe_train_local(
@@ -423,10 +439,7 @@ def bpe_encode(
     # string-valued map literal: the symbol→id lookup yields the csv
     # fragment directly, so one array traversal covers lookup + cast
     # (UNK stays "0")
-    kv: list[F.Column] = []
-    for sym, vid in vocab.items():
-        kv.extend([F.lit(sym), F.lit(str(vid))])
-    vmap = F.create_map(*kv)
+    vmap = json_lit({s: str(v) for s, v in vocab.items()}, "map<string,string>")
     subs = F.flatten(F.transform(tokens(text_col), segment))
     ids_str = F.transform(
         subs, lambda s: F.coalesce(F.element_at(vmap, s), F.lit("0"))

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .literal import json_lit
 from .text import analyze_documents
 
 __all__ = [
@@ -1014,7 +1015,7 @@ def length_buckets(
         probs = [i / n_buckets for i in range(1, n_buckets)]
         bounds = base.agg(
             F.percentile_approx(
-                "n_tokens", F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
+                "n_tokens", json_lit(probs, "array<double>"), F.lit(10_000)
             ).alias("q")
         ).collect()[0]["q"]
         expr = F.lit(n_buckets)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .literal import json_lit
 from .text import (
     _fan_out,
     fingerprint,
@@ -134,6 +135,15 @@ def _distinct_shingles(
     )
 
 
+def _minhash_aggs(k: int) -> list:
+    if k < 1:
+        raise ValueError(f"minhash_signatures: k must be >= 1, got {k}")
+    return [
+        F.min(F.md5(F.concat(F.lit(f"{seed}|"), F.col("shingle")))).alias(f"mh_{seed}")
+        for seed in range(k)
+    ]
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -149,18 +159,113 @@ def minhash_signatures(
     One explode + one groupBy: shuffle is on ``id_col`` only.  MinHash is
     duplicate-insensitive, so distinct shingles give identical signatures.
     """
-    if k < 1:
-        raise ValueError(f"minhash_signatures: k must be >= 1, got {k}")
+    aggs = _minhash_aggs(k)
     sh = (
         _shingle_df
         if _shingle_df is not None
         else _distinct_shingles(df, id_col, text_col, shingle_n)
     )
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{seed}|"), F.col("shingle")))).alias(f"mh_{seed}")
-        for seed in range(k)
-    ]
     return sh.groupBy(id_col).agg(*aggs)
+
+
+def _shingle_docs(sh: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The per-document store of the verify: ``(id, mh_0..mh_{k-1},
+    __sh)`` — the MinHash mins and the document's shingle array from ONE
+    aggregate over ``(id, shingle)`` rows.  Candidates are then verified
+    against two array columns instead of re-joining the shingle rows, so
+    the largest document's shingle set must fit in one row."""
+    return sh.groupBy(id_col).agg(
+        *_minhash_aggs(k), F.collect_list("shingle").alias("__sh")
+    )
+
+
+def _jaccard_verify(
+    cand: DataFrame,
+    docs_a: DataFrame,
+    docs_b: DataFrame,
+    id_col: str,
+    col_a: str,
+    col_b: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact shingle-set Jaccard of the candidate pairs ``(col_a, col_b)``
+    ≥ ``threshold``, from the two sides' :func:`_shingle_docs` arrays:
+    ``n_shared / (n_a + n_b - n_shared)`` with ``n_a = size(a)`` and
+    ``n_shared = size(array_intersect(a, b))`` — one join per side.
+
+    A document id fed by several rows can repeat a shingle; those pairs
+    count shared shingles with multiplicity (Σ count_a·count_b, what a
+    shingle-row equi-join counts), so duplicate ids score as the DuckDB
+    mirrors do."""
+    sa, sb = F.col("__sa"), F.col("__sb")
+    shared = F.array_intersect(sa, sb)
+    n_shared = F.when(
+        (F.size(F.array_distinct(sa)) == F.size(sa))
+        & (F.size(F.array_distinct(sb)) == F.size(sb)),
+        F.size(shared),
+    ).otherwise(
+        F.aggregate(
+            shared,
+            F.lit(0),
+            lambda acc, s: acc
+            + F.size(F.filter(sa, lambda x: x == s))
+            * F.size(F.filter(sb, lambda x: x == s)),
+        )
+    )
+    jac = (n_shared / (F.size(sa) + F.size(sb) - n_shared)).alias("jaccard")
+
+    def side(docs: DataFrame, col: str, arr: str) -> DataFrame:
+        return docs.select(F.col(id_col).alias(col), F.col("__sh").alias(arr))
+
+    return (
+        cand.join(side(docs_a, col_a, "__sa"), col_a)
+        .join(side(docs_b, col_b, "__sb"), col_b)
+        .select(col_a, col_b, jac)
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _rows_per_band(k: int, bands: int) -> int:
+    if bands < 1:
+        raise ValueError(f"bands must be >= 1, got {bands}")
+    if k % bands:
+        raise ValueError(f"bands={bands} must divide k={k} (k % bands == 0)")
+    return k // bands
+
+
+def _band_rows(
+    sigs: DataFrame, id_col: str, k: int, bands: int, out_id: str
+) -> DataFrame:
+    """``(out_id, band, sig)``: one row per (doc, band), the band
+    signature an md5 over its r = k/bands min-hashes."""
+    r = _rows_per_band(k, bands)
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(",", *[F.col(f"mh_{b * r + i}") for i in range(r)])
+            ).alias("sig"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select(
+        F.col(id_col).alias(out_id), F.explode(F.array(*band_cols)).alias("bs")
+    ).select(out_id, "bs.band", "bs.sig")
+
+
+def _band_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """Distinct ``(id_a, id_b)``, ``id_a < id_b``, sharing a band bucket:
+    an equi-join on (band, sig) — never a cross join."""
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(b, on=["band", "sig"])
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        )
+        .distinct()
+    )
 
 
 def minhash_candidate_pairs(
@@ -177,39 +282,14 @@ def minhash_candidate_pairs(
     rows-per-band r = k // bands; band signature = md5 of its r min-hashes.
     The pair join is an equi-join on (band, sig) — never a cross join.
     """
-    if bands < 1:
-        raise ValueError(f"bands must be >= 1, got {bands}")
-    if k % bands:
-        raise ValueError(f"bands={bands} must divide k={k} (k % bands == 0)")
-    r = k // bands
-    sigs = minhash_signatures(df, id_col, text_col, k, shingle_n, _shingle_df)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws(",", *[F.col(f"mh_{b * r + i}") for i in range(r)])).alias(
-                "sig"
-            ),
-        )
-        for b in range(bands)
-    ]
     from pyspark import StorageLevel
 
-    banded = (
-        sigs.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bs"))
-        .select(id_col, "bs.band", "bs.sig")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )  # both sides of the self-join read it: without persist the whole
+    banded = banded_signatures(
+        df, id_col, text_col, k, bands, shingle_n, _shingle_df=_shingle_df
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # both sides of the self-join read it: without persist the whole
     # shingle→minhash pipeline runs twice
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(b, on=["band", "sig"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    return _band_pairs(banded, id_col)
 
 
 def near_dup_pairs(
@@ -223,50 +303,23 @@ def near_dup_pairs(
 ) -> DataFrame:
     """Candidates → exact shingle-set Jaccard ≥ threshold.
 
-    Jaccard is computed by a shingle-level equi-join restricted to candidate
-    pairs (distinct shingles only), so verification cost is proportional to
-    candidate volume, not n².
+    One aggregate per document yields both its MinHash signature and its
+    shingle array (:func:`_shingle_docs`); candidates from the band join
+    are verified against the two documents' arrays, so verification cost
+    is proportional to candidate volume, not n².
 
-    The distinct-shingle frame feeds four consumers (signatures, both
-    verify sides, sizes) — it is persisted so tokenize→shingle→explode
-    runs once, not once per consumer (3× wall-clock at sf0.1).  At 100 TB
-    this persist is MEMORY_AND_DISK: ~tokens-sized, spills gracefully.
+    The document frame feeds four consumers (both band-join sides, both
+    verify sides) — it is persisted so tokenize→shingle→aggregate runs
+    once, not once per consumer.  At 100 TB this persist is
+    MEMORY_AND_DISK: ~tokens-sized, spills gracefully.
     """
     from pyspark import StorageLevel
 
-    sh = _distinct_shingles(df, id_col, text_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cand = minhash_candidate_pairs(
-        df, id_col, text_col, k, bands, shingle_n, _shingle_df=sh
-    )
-    sh_s = sh.withColumnRenamed("shingle", "s")
-    sizes = sh_s.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = sh_s.withColumnRenamed(id_col, "id_a")
-    sb = sh_s.withColumnRenamed(id_col, "id_b")
-    inter = (
-        cand.join(sa, "id_a")
-        .join(sb.withColumnRenamed("s", "s_b"), "id_b")
-        .where(F.col("s") == F.col("s_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    na = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a")
-    nb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b")
-    return (
-        cand.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"n_shared": 0})
-        .join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    sh = _distinct_shingles(df, id_col, text_col, shingle_n)
+    _rows_per_band(k, bands)
+    docs = _shingle_docs(sh, id_col, k).persist(StorageLevel.MEMORY_AND_DISK)
+    cand = _band_pairs(_band_rows(docs, id_col, k, bands, id_col), id_col)
+    return _jaccard_verify(cand, docs, docs, id_col, "id_a", "id_b", threshold)
 
 
 def banded_signatures(
@@ -285,25 +338,9 @@ def banded_signatures(
     as a table, and every later :func:`dedup_against` /
     ``stream_dedup_against`` batch joins against it instead of
     re-aggregating the reference side's min-hashes."""
-    if bands < 1:
-        raise ValueError(f"bands must be >= 1, got {bands}")
-    if k % bands:
-        raise ValueError(f"bands={bands} must divide k={k} (k % bands == 0)")
-    r = k // bands
-    oid = out_id or id_col
+    _rows_per_band(k, bands)
     sigs = minhash_signatures(df, id_col, text_col, k, shingle_n, _shingle_df=_shingle_df)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(",", *[F.col(f"mh_{b * r + i}") for i in range(r)])
-            ).alias("sig"),
-        )
-        for b in range(bands)
-    ]
-    return sigs.select(
-        F.col(id_col).alias(oid), F.explode(F.array(*band_cols)).alias("bs")
-    ).select(oid, "bs.band", "bs.sig")
+    return _band_rows(sigs, id_col, k, bands, out_id or id_col)
 
 
 def dedup_against(
@@ -343,80 +380,42 @@ def dedup_against(
     (doc, band) — so reruns pay only the candidate join +
     verification).
     """
-    if bands < 1:
-        raise ValueError(f"bands must be >= 1, got {bands}")
-    if k % bands:
-        raise ValueError(f"bands={bands} must divide k={k} (k % bands == 0)")
+    _rows_per_band(k, bands)
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    def banded(side: DataFrame, sh: DataFrame, out_id: str) -> DataFrame:
-        return banded_signatures(
-            side, id_col, text_col, k, bands, shingle_n, out_id, _shingle_df=sh
-        )
+    def docs(side: DataFrame, sh: DataFrame | None) -> DataFrame:
+        # one aggregate per side: the MinHash mins (pruned away when the
+        # caller supplies the side's bands) and the verify's shingle
+        # arrays.  Caller-supplied shingle frames are the caller's to
+        # persist; internally shingled sides are persisted because both
+        # the signature and the verify stages read them.
+        if sh is not None:
+            return _shingle_docs(sh, id_col, k)
+        return _shingle_docs(
+            _distinct_shingles(side, id_col, text_col, shingle_n), id_col, k
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # caller-supplied shingle frames are reused as-is (the caller owns
-    # their persistence — e.g. one cached frame sliced two ways, or a
-    # parquet-backed reference table); internally computed ones are
-    # persisted because both the signature and verification stages scan
-    # them.
-    sh_new = (
-        shingles_new
-        if shingles_new is not None
-        else _distinct_shingles(new_df, id_col, text_col, shingle_n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    sh_ref = (
-        shingles_ref
-        if shingles_ref is not None
-        else _distinct_shingles(ref_df, id_col, text_col, shingle_n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    docs_new = docs(new_df, shingles_new)
+    docs_ref = docs(ref_df, shingles_ref)
     ref_bands = (
-        bands_ref if bands_ref is not None else banded(ref_df, sh_ref, "ref_id")
+        bands_ref
+        if bands_ref is not None
+        else _band_rows(docs_ref, id_col, k, bands, "ref_id")
     )
     new_bands = (
         bands_new
         if bands_new is not None
-        else banded(new_df, sh_new, "doc_id_n")
+        else _band_rows(docs_new, id_col, k, bands, "doc_id_n")
     )
     cand = (
         new_bands.join(ref_bands, on=["band", "sig"])
         .select(F.col("doc_id_n"), F.col("ref_id"))
         .distinct()
-        # candidate-bounded frame, consumed by both the intersection
-        # join and the scoring left-join: persist so the band equi-join
-        # + distinct runs once, not once per consumer (r12, guide §3.3)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-    sn = sh_new.select(F.col(id_col).alias("doc_id_n"), F.col("shingle").alias("s"))
-    sr = sh_ref.select(F.col(id_col).alias("ref_id"), F.col("shingle").alias("s_r"))
-    n_new = sn.groupBy("doc_id_n").agg(F.count(F.lit(1)).alias("n_a"))
-    n_ref = sr.groupBy("ref_id").agg(F.count(F.lit(1)).alias("n_b"))
-    inter = (
-        cand.join(sn, "doc_id_n")
-        .join(sr, "ref_id")
-        .where(F.col("s") == F.col("s_r"))
-        .groupBy("doc_id_n", "ref_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    scored = (
-        cand.join(inter, ["doc_id_n", "ref_id"], "left")
-        .na.fill({"n_shared": 0})
-        .join(n_new, "doc_id_n")
-        .join(n_ref, "ref_id")
-        .select(
-            F.col("doc_id_n").alias(id_col),
-            "ref_id",
-            (
-                F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    scored = _jaccard_verify(
+        cand, docs_new, docs_ref, id_col, "doc_id_n", "ref_id", threshold
+    ).withColumnRenamed("doc_id_n", id_col)
     if not best_match:
         # membership-only consumers (the anti-join in the streaming
         # survivor sink) don't need the per-doc argmax — returning the
@@ -744,7 +743,7 @@ def simhash(
             lambda a, x: a + x,
         ),
     )
-    powers = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
+    powers = json_lit([1 << b for b in range(SIMHASH_BITS)], "array<bigint>")
     sig = F.aggregate(
         F.zip_with(
             sums, powers, lambda s, p: F.when(s > 0, p).otherwise(F.lit(0).cast("long"))

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .literal import json_lit
+
 __all__ = ["auc_exact", "auc_exact_sql", "calibration_bins", "calibration_bins_sql"]
 
 
@@ -125,7 +127,7 @@ def auc_exact(
             row = base.select(
                 F.percentile_approx(
                     score_col,
-                    F.array(*[F.lit(p) for p in probs]),
+                    json_lit(probs, "array<double>"),
                     F.lit(10_000),
                 ).alias("s")
             ).collect()

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .literal import json_lit
+
 __all__ = [
     "repetition_signals",
     "salient_terms",
@@ -779,7 +781,7 @@ def term_overlap_topk(
     overlap = F.size(
         F.array_intersect(
             F.array_distinct(tokens(text_col)),
-            F.array(*[F.lit(t) for t in terms]),
+            json_lit(terms, "array<string>"),
         )
     ).cast("bigint")
     scored = (
@@ -1053,7 +1055,7 @@ def perceptron_fit(
     w = [0] * dims
 
     def margin(weights: list[int]) -> F.Column:
-        arr = F.array(*[F.lit(int(v)) for v in weights])
+        arr = json_lit([int(v) for v in weights], "array<bigint>")
         return F.aggregate(
             F.zip_with(F.col("__x"), arr, lambda a, b: a * b),
             F.lit(0).cast("bigint"),

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .literal import json_lit
 from .text import _fan_out
 
 __all__ = [
@@ -215,12 +216,12 @@ def _threshold_kernel(q_ids, c_ids, scores, threshold: float) -> pd.DataFrame:
     )
 
 
-def _emit_topk(k: int, rank: bool = False):
+def _emit_topk(k: int):
     """Emitter for the Spark shapes: cosine top-k of queries vs candidates."""
 
     def emit(q_ids, Q, c_ids, C, _cand=None):
         cols, vals = _topk_kernel(q_ids, c_ids, _cosines(Q, C), k)
-        return _topk_rows(q_ids, c_ids, cols, vals, rank=rank)
+        return _topk_rows(q_ids, c_ids, cols, vals)
 
     return emit
 
@@ -312,8 +313,8 @@ def _grid_sides(
     replication bound — and nothing ever touches the driver."""
     q_src = (queries if queries is not None else df).select(id_col, vec_col)
     c_src = df.select(id_col, vec_col)
-    cbs = F.array([F.lit(i) for i in range(n_c_blocks)])
-    qas = F.array([F.lit(i) for i in range(n_q_blocks)])
+    cbs = json_lit(list(range(n_c_blocks)), "array<int>")
+    qas = json_lit(list(range(n_q_blocks)), "array<int>")
     q_side = q_src.select(
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_q_blocks)).cast("int").alias("qa"),
         F.explode(cbs).alias("cb"),
@@ -339,7 +340,6 @@ def _exact_pairs(
     chunk_size: int,
     emit,
     schema: T.StructType,
-    merge=None,
 ) -> DataFrame:
     """Exact all-pairs scoring (queries default to ``df``), two shapes by
     candidate count:
@@ -347,12 +347,14 @@ def _exact_pairs(
     * candidates fit one chunk (≤ ``chunk_size``): broadcast the unit
       candidate matrix once and stream query batches through
       :func:`_map_queries` — the broadcast-dim shape (one bounded driver
-      pull, same as a broadcast hash join's build side).  Each query sees
-      every candidate in one call, so rows are final.
+      pull, same as a broadcast hash join's build side).  Each query row
+      sees every candidate in one call.
     * larger: fully EXECUTOR-SIDE grid — both sides hash into blocks of
       ≤ ~chunk_size rows, each (query-block, candidate-block) cell is one
-      ``applyInPandas`` group, and ``merge`` (if given) combines the
-      cells' rows per query.  No driver serialization point at any size.
+      ``applyInPandas`` group.  No driver serialization point at any size.
+
+    Either shape emits per-row results; a top-k caller merges them per
+    query id (:func:`_rank`).
 
     ``emit(q_ids, Q, c_ids, C)`` scores one row block of unit queries
     against unit candidates and returns pandas rows of ``schema``."""
@@ -380,8 +382,7 @@ def _exact_pairs(
                 ignore_index=True,
             )
 
-        cells = grid.groupBy("qa", "cb").applyInPandas(cell, schema)
-        return merge(cells) if merge else cells
+        return grid.groupBy("qa", "cb").applyInPandas(cell, schema)
 
     src = queries if queries is not None else df
     pdf = cand.toPandas()
@@ -483,8 +484,9 @@ def cosine_topk(
 
     Candidates are every vector (:func:`_exact_pairs`): up to
     ``chunk_size`` of them broadcast once and query batches stream through
-    a BLAS matmul + top-k, which emits final ranks; more run the
-    executor-side grid, whose per-cell partial top-ks one window merges.
+    a BLAS matmul + top-k; more run the executor-side grid.  Either way one
+    window merges the partial top-ks per query id, so rows sharing an id
+    get one top-k between them.
     Memory is bounded by chunk_size × dims regardless of candidate count —
     the 100 TB shape for an exact (inherently O(n·m)) search.
     """
@@ -492,9 +494,11 @@ def cosine_topk(
     df = nonzero_vectors(df, vec_col)
     if queries is not None:
         queries = nonzero_vectors(queries, vec_col)
-    return _exact_pairs(
-        df, queries, id_col, vec_col, chunk_size,
-        _emit_topk(k, rank=True), _RANKED, merge=lambda cells: _rank(cells, k),
+    return _rank(
+        _exact_pairs(
+            df, queries, id_col, vec_col, chunk_size, _emit_topk(k), _PARTIALS
+        ),
+        k,
     )
 
 
@@ -653,6 +657,10 @@ def _rerank_pairs(
     return _rank(scored, k)
 
 
+def _first_rows(df: DataFrame, id_col: str, vec_col: str, n: int) -> pd.DataFrame:
+    return df.select(id_col, vec_col).orderBy(id_col).limit(n).toPandas()
+
+
 def _training_sample(df: DataFrame, id_col: str, vec_col: str, sample_size: int):
     """Deterministic bounded training sample: first ``sample_size`` rows by
     id (TakeOrderedAndProject — one job, no full sort).  Shared by the
@@ -665,9 +673,7 @@ def _training_sample(df: DataFrame, id_col: str, vec_col: str, sample_size: int)
     this): training a quantizer/codebook on zero vectors is undefined,
     and the numpy stack downstream would otherwise die with an opaque
     "need at least one array to concatenate"."""
-    sample = (
-        df.select(id_col, vec_col).orderBy(id_col).limit(sample_size).toPandas()
-    )
+    sample = _first_rows(df, id_col, vec_col, sample_size)
     if len(sample) == 0:
         raise ValueError(
             "cannot train on an empty corpus: no vectors in input"
@@ -903,7 +909,14 @@ def pq_topk(
     # rows), doubles as the corpus itself — the count() guard job and the
     # distributed encode pass are then pure overhead and are skipped.  At
     # real scale (corpus > sample_size) both run as before.
-    sample = _training_sample(df, id_col, vec_col, sample_size)
+    sample = _first_rows(df, id_col, vec_col, sample_size)
+    if len(sample) == 0:
+        # no vectors, no neighbors: zero rows, as for cosine_topk (only
+        # training an index on nothing is undefined)
+        score = "cos_sim" if shortlist else "pq_sim"
+        return spark.createDataFrame(
+            [], _schema("query_id", "neighbor_id", score, "rank")
+        )
     n_corpus = len(sample) if len(sample) < sample_size else df.count()
     if n_corpus > max_corpus_rows:
         raise ValueError(
@@ -1112,13 +1125,11 @@ def kmeans_fit(
 
     def assign(frame: DataFrame) -> DataFrame:
         # one nested centroid-array literal per pass (k·d ints, model-
-        # sized); distances via a transform over it, argmin via
-        # array_position of the min — first match, i.e. lowest cluster id
-        carr = F.array(
-            *[F.array(*[F.lit(int(v)) for v in c]) for c in cents]
-        )
+        # sized, crossing py4j as one string); distances via a transform
+        # over it, argmin via array_position of the min — first match,
+        # i.e. lowest cluster id
         dists = F.transform(
-            carr,
+            json_lit(cents, "array<array<bigint>>"),
             lambda c: F.aggregate(
                 F.zip_with(F.col("__x"), c, lambda a, b: (a - b) * (a - b)),
                 F.lit(0).cast("bigint"),

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .literal import json_lit
+
 __all__ = [
     "approx_n_distinct",
     "hll_partials",
@@ -145,7 +147,7 @@ def approx_quantiles(
     _check_probs("approx_quantiles", probs)
     keys = _keys(by)
     agg = F.percentile_approx(
-        F.col(col), F.array(*[F.lit(p) for p in probs]), F.lit(accuracy)
+        F.col(col), json_lit(probs, "array<double>"), F.lit(accuracy)
     ).alias("approx_q")
     return df.groupBy(*keys).agg(agg) if keys else df.agg(agg)
 
