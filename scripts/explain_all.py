@@ -1,13 +1,18 @@
-"""Capture `.explain("formatted")` for every declared query into plans/<tag>/.
+"""Capture `.explain("formatted")` for every declared query into <out_dir>.
 
-Evidence files for the optimization rounds: one `<query>_<suffix>.txt` per
-entry, written with the SAME session config as bench.py so the captured plan
-is the benched plan.  Also prints a one-line plan-health summary per query
-(Exchange count, python-eval nodes, scan columns) to stdout.
+Writes one `<query>_<suffix>.txt` per entry, built with the SAME session
+config as bench.py so the captured plan is the benched plan.  Expression
+ids (`#123`), exchange ids and RDD ids are written as `#N`, `plan_id=N`
+and `RDD[N]`, so two dumps of the same plans (say, a parent checkout and
+a change) compare with a plain `diff -r`.  Also prints a one-line
+plan-health summary per query (Exchange count, python-eval nodes, join
+kinds) to stdout.
 
     python scripts/explain_all.py <out_dir> <suffix> [query ...]
 
-e.g.  python scripts/explain_all.py plans/r12 before
+e.g.  python scripts/explain_all.py plans_parent x
+      python scripts/explain_all.py plans_change x
+      diff -r plans_parent plans_change
 """
 
 from __future__ import annotations
@@ -18,10 +23,30 @@ import sys
 
 sys.path.insert(0, ".")
 
+# expression ids (`l_orderkey#123L`), exchange ids (`[plan_id=26645]`) and
+# RDD ids (`MapPartitionsRDD[848]`) count up through a session, so dumps
+# normalize them to `#N`, `plan_id=N` and `RDD[N]`
+_SESSION_IDS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+)
+
+
+def normalize(plan: str) -> str:
+    for pat, repl in _SESSION_IDS:
+        plan = pat.sub(repl, plan)
+    return plan
+
 
 def main() -> int:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "plans/r12"
-    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    if len(sys.argv) < 3:
+        print(
+            "usage: python scripts/explain_all.py <out_dir> <suffix> [query ...]",
+            file=sys.stderr,
+        )
+        return 2
+    out_dir, suffix = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     os.makedirs(out_dir, exist_ok=True)
 
@@ -62,7 +87,7 @@ def main() -> int:
         finally:
             spark.catalog.clearCache()
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as fh:
-            fh.write(plan)
+            fh.write(normalize(plan))
         n_ex = len(re.findall(r"\bExchange\b", plan))
         n_py = len(
             re.findall(r"BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|PythonMapInArrow", plan)

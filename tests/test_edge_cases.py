@@ -815,3 +815,101 @@ def test_frame_apply_accepts_expression_and_case_variant_cols(spark):
     )
     got = {r["id"]: (r["s_expr"], r["s_case"]) for r in out.collect()}
     assert got == {1: (20.0, 10.0), 2: (60.0, 30.0), 3: (100.0, 50.0)}, got
+
+
+def test_complete_range_frame_ignores_index_name(spark):
+    """A numeric index's frame bounds count in its own units whatever the
+    column is called: the plan carries the unit, so a name that contains
+    "unix_micros" no longer scales the bounds by 1e6."""
+    rows = [(i, float(i)) for i in range(1, 11)]
+    got = {}
+    for name in ("idx", "unix_micros_idx"):
+        df = spark.createDataFrame(rows, f"{name} long, v double")
+        out = mutate(df, m="sum(v)", index=name, frame=(2, 0), complete=True)
+        got[name] = sorted((r[name], r["m"]) for r in out.collect())
+    assert got["idx"][:4] == [(1, None), (2, None), (3, 6.0), (4, 9.0)]
+    assert got["unix_micros_idx"] == got["idx"]
+
+
+def test_timestamp_ntz_frames_are_wall_clock(spark):
+    """RANGE frames and scale-safe ROWS frames over a TIMESTAMP_NTZ column
+    order by its wall clock: the result is the same under a UTC and a DST
+    session timezone, and equals the TIMESTAMP result under UTC.  The
+    data crosses 2024-03-10 02:00, the America/New_York DST gap."""
+    import datetime as dt
+
+    from tidier_spark import hours, months
+
+    t0 = dt.datetime(2024, 3, 1, 2, 30)
+    rows = [(i, t0 + dt.timedelta(hours=3 * i), i % 11) for i in range(300)]
+    ntz = spark.createDataFrame(rows, "id long, ts timestamp_ntz, v long")
+    cases = [
+        dict(m="sum(v)", index="ts", frame=(hours(7), 0)),
+        dict(m="sum(v)", index="ts", frame=(hours(7), 0), scale_safe=True),
+        dict(m="avg(v)", index="ts", frame=(months(1), 0), scale_safe=True),
+        dict(m="sum(v)", order_by=["ts"], frame=(3, 1), scale_safe=True),
+    ]
+
+    def run(df, tz, kw):
+        old = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", tz)
+        try:
+            return sorted((r["id"], r["m"]) for r in mutate(df, **kw).collect())
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", old)
+
+    ltz = ntz.withColumn("ts", F.col("ts").cast("timestamp"))
+    for kw in cases:
+        utc = run(ntz, "UTC", kw)
+        assert run(ntz, "America/New_York", kw) == utc, kw
+        assert run(ltz, "UTC", kw) == utc, kw
+
+
+@pytest.mark.parametrize("caller", ["run_stream", "merge", "dedup", "scd2"])
+def test_stream_replay_timeout_is_loud_and_scoped(
+    spark, tmp_path, monkeypatch, caller
+):
+    """Every AvailableNow replay goes through one runner: a replay that
+    misses its budget raises TimeoutError, the scoped shuffle-partition
+    conf comes back, and no streaming query stays active."""
+    from tidier_spark import streaming
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_TIMEOUT", raising=False)
+    schema = (
+        "doc_id long, user_id long, ts timestamp, event_id long, "
+        "attr string, text string"
+    )
+    rows = [
+        (i, i % 3, None, i, f"a{i % 2}", f"doc {i} about topic {i % 4}")
+        for i in range(20)
+    ]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).withColumn(
+        "ts", F.timestamp_seconds(F.col("event_id"))
+    ).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    path = str(tmp_path / "sink")
+    kw = dict(
+        name=f"t_replay_timeout_{caller}",
+        timeout_seconds=0.001,
+        state_partitions=3,
+    )
+    calls = {
+        "run_stream": lambda: streaming.run_stream(
+            stream.groupBy("user_id").count(), **kw
+        ),
+        "merge": lambda: streaming.stream_merge_parquet(
+            stream, path, "user_id", ["ts", "event_id"], **kw
+        ),
+        "dedup": lambda: streaming.stream_dedup_against(
+            stream, spark.createDataFrame(rows, schema), path, **kw
+        ),
+        "scd2": lambda: streaming.stream_scd2_parquet(
+            stream, path, "user_id", "ts", "attr", "event_id", **kw
+        ),
+    }
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(TimeoutError, match="refusing to return a partial"):
+        calls[caller]()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.streams.active == []

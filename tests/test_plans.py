@@ -187,6 +187,32 @@ def test_scale_safe_cummean_and_max(tables):
         assert sorted(map(key, safe.collect())) == sorted(map(key, naive.collect())), expr
 
 
+def test_scale_safe_cummean_builds_with_cumsums_jobs(spark):
+    """cummean under scale_safe carries its sum and count through ONE
+    prefix pass, so building it collects split points once, like cumsum
+    (two passes re-ran the first pass inside the second's collect)."""
+    from tidier_spark import mutate
+
+    df = spark.createDataFrame(
+        [(i, i % 7) for i in range(300)], "k long, v long"
+    )
+    sc = spark.sparkContext
+
+    def build_jobs(expr: str) -> int:
+        group = f"build_jobs_{expr.split('(')[0]}"
+        sc.setJobGroup(group, group)
+        try:
+            mutate(df, c=expr, order_by=["k"], scale_safe=True)
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cumsum_jobs = build_jobs("cumsum(v)")
+    assert cumsum_jobs >= 1  # the split-point collect runs at build time
+    assert build_jobs("cummean(v)") <= cumsum_jobs
+
+
 def test_scale_safe_rows_frame_matches_single_partition(tables):
     # verdict r06 task #3: ungrouped BOUNDED rows frame through the
     # range-partition + halo exchange — bit-identical to the global

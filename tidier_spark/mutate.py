@@ -40,12 +40,24 @@ from __future__ import annotations
 import math
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .expressions import rewrite_r_functions, windowize
 from .frames import FrameSpec, Period, parse_frame
-from .window import WindowPlan, compile_window, quote_ident
+from .window import (
+    WindowPlan,
+    _index_order_key,
+    compile_window,
+    quote_ident,
+    rmq_call,
+    rmq_frame_value,
+    scale_safe_cumulative,
+    scale_safe_frame,
+    subtractive_calls,
+    subtractive_over,
+)
 
 __all__ = ["mutate", "mutate_"]
 
@@ -84,9 +96,7 @@ def _normalize_keys(keys: object) -> list[object]:
     return list(keys)
 
 
-def _complete_guard(
-    df: DataFrame, plan: WindowPlan, frame: FrameSpec, value: Column
-) -> Column:
+def _complete_guard(plan: WindowPlan, value: Column) -> Column:
     """``complete=True``: null out partial windows (`R/mutate.R:58-62`).
 
     Rows frames: full ⇔ ``count(*) over frame == before+after+1`` (only
@@ -97,6 +107,8 @@ def _complete_guard(
     (``R/mutate.R:98-100`` routes calendar Periods through the identical
     slider ``.complete`` machinery).
     """
+    frame = plan.frame
+    assert frame is not None
     if plan.is_sql:
         # complete ⇔ [idx - before, idx + after] ⊆ partition index extent,
         # with calendar-aware shifts: `idx - INTERVAL '1' MONTH` moves by a
@@ -120,40 +132,22 @@ def _complete_guard(
         if not conds:
             return value
         return F.when(F.expr(" AND ".join(conds)), value)
+    lo, hi = plan.bounds()
     if plan.row_frame:
-        lo, hi = frame.row_bounds()
         # Unbounded sides never make a window partial.
         if lo < -(2**31) or hi > 2**31:
-            width = None
-        else:
-            width = hi - lo + 1
-        if width is None:
             return value
-        return F.when(plan.count_guard() == width, value)
+        return F.when(plan.count_guard() == hi - lo + 1, value)
     # Range frame: compare against the partition-wide index extent.
-    from pyspark.sql import Window
-
     key = plan.order_cols[0]
     part = Window.partitionBy(*plan.partition_cols)
     kmin, kmax = F.min(key).over(part), F.max(key).over(part)
-    lo, hi = frame.range_bounds(_unit_of(plan))
     cond = F.lit(True)
     if lo > -(2**62):
         cond = cond & (key + F.lit(lo) >= kmin)
     if hi < 2**62:
         cond = cond & (key + F.lit(hi) <= kmax)
     return F.when(cond, value)
-
-
-def _unit_of(plan: WindowPlan) -> str:
-    # compile_window stored the epoch-cast key; infer its unit from the
-    # expression string (CAST...AS BIGINT → seconds, datediff → days).
-    s = str(plan.order_cols[0]).lower()
-    if "datediff" in s:
-        return "days"
-    if "unix_micros" in s:
-        return "micros"
-    return "native"
 
 
 def mutate(
@@ -194,19 +188,21 @@ def mutate(
     restore_order : re-sort output to input order (global sort; see module
                 docstring).
     scale_safe: lower ordered exprs without a single-task window.
-                UNGROUPED: cumulatives (cumsum/cummax/...) via the
+                UNGROUPED: cumulatives (cumsum/cummean/cummax/...) via the
                 two-pass range-partitioned prefix aggregate
-                (:func:`tidier_spark.window.scale_safe_cumulative`); BOUNDED
-                rows/range frames via the range-partition + halo exchange
+                (:func:`tidier_spark.window.scale_safe_cumulative`).
+                BOUNDED frames, ungrouped and grouped, via the
+                range-partition + halo exchange
                 (:func:`tidier_spark.window.scale_safe_frame`, bit-identical
-                results, hash-pinned).  GROUPED index-RANGE frames (r11):
-                the same halo exchange partitioned by (key, bucket) — a
-                HOT key's rows split across order-axis buckets instead of
-                one straggler task (the skewkeys regime); grouped ROWS /
-                calendar / ``.complete`` frames fall back to the default
-                grouped lowering.  Opt-in because float prefix sums
-                re-associate (integer/decimal results are identical) and
-                the frame path costs one extra broadcast join.
+                results, hash-pinned); grouped frames partition by (key,
+                bucket), so a HOT key's rows split across order-axis
+                buckets instead of one straggler task (the skewkeys
+                regime).  Calendar frames (months/years) take the same
+                RANGE halo with envelope copy bounds; calendar +
+                ``.complete`` falls back to the default lowering.  Opt-in
+                because float prefix sums re-associate (integer/decimal
+                results are identical) and the frame path costs one extra
+                broadcast join.
     kw_exprs  : exprs as keyword args (``avg_x="avg(x)"``).
     """
     exprs: dict[str, object] = {}
@@ -295,12 +291,12 @@ def _apply_one(
             # Tier C: arbitrary Python reducer once per frame
             value = expr.lower(plan, df)
             if complete:
-                value = _complete_guard(df, plan, frame_spec, value)
+                value = _complete_guard(plan, value)
             return df.withColumn(name, value)
         if isinstance(expr, Column):
-            value = expr.over(plan.spec) if plan.spec is not None else plan.over(expr)
+            value = plan.over(expr)
             if complete:
-                value = _complete_guard(df, plan, frame_spec, value)
+                value = _complete_guard(plan, value)
             return df.withColumn(name, value)
         outer, calls = windowize(expr)
         if not calls:
@@ -316,7 +312,7 @@ def _apply_one(
             df = df.withColumn(ph, plan.over(call))
         value = F.expr(outer)
         if complete:
-            value = _complete_guard(df, plan, frame_spec, value)
+            value = _complete_guard(plan, value)
         return df.withColumn(name, value).drop(*[ph for ph, _ in calls])
 
     if isinstance(expr, Column):
@@ -335,18 +331,7 @@ def _apply_one(
             )
         if scale_safe and not by_l:
             # ungrouped cumulative: avoid the single-partition global window
-            from .window import scale_safe_cumulative
-
             try:
-                if fn == "avg":  # cummean = Σ/Σ over two prefix passes
-                    s, c = f"__ss_{name}", f"__sc_{name}"
-                    out = scale_safe_cumulative(
-                        df, inner, order_by=order_l, out=s, fn="sum"
-                    )
-                    out = scale_safe_cumulative(
-                        out, inner, order_by=order_l, out=c, fn="count"
-                    )
-                    return out.withColumn(name, F.col(s) / F.col(c)).drop(s, c)
                 return scale_safe_cumulative(
                     df, inner, order_by=order_l, out=name, fn=fn
                 )
@@ -397,123 +382,73 @@ def _apply_scale_safe_frame(
     by_l: list[object] | None = None,
 ) -> DataFrame | None:
     """Lower a bounded-frame mutate through the range-partition + halo
-    exchange (:func:`tidier_spark.window.scale_safe_frame` /
-    :func:`tidier_spark.window.scale_safe_calendar_frame`) instead of
+    exchange (:func:`tidier_spark.window.scale_safe_frame`) instead of
     the single-partition (ungrouped) or one-task-per-key (grouped
     hot-key) window.  Returns ``None`` when the combination isn't
     eligible (unbounded frames, Column/Tier-C expressions,
     frame-independent expressions, calendar + ``.complete``, non-string
     grouped keys) — the caller falls through to the reference-faithful
-    default lowering.  r11: grouped index-RANGE; r12: grouped ROWS
-    (with ``.complete``), grouped RANGE + ``.complete`` (per-key extent
-    join), and calendar frames via the conservative micros-envelope
-    halo.  Results are bit-identical to the default plan (hash-pinned
-    in tests/test_plans.py)."""
-    if not isinstance(expr, str):
+    default lowering.  Covers ungrouped and grouped ROWS and RANGE
+    frames, with or without ``.complete``, and calendar frames through
+    the RANGE halo with envelope copy bounds.  Results are bit-identical
+    to the default plan (hash-pinned in tests/test_plans.py)."""
+    if not isinstance(expr, str) or _RANKING_RE.match(expr):
         return None
-    if _RANKING_RE.match(expr):
+    if complete and frame_spec.is_calendar:
+        # the calendar .complete guard is Tier B partition-extent SQL
+        # over the un-haloed frame
         return None
-    if frame_spec.is_calendar:
-        # r12: the exact frame stays the Tier B SQL INTERVAL window;
-        # the HALO copy uses FrameSpec.micros_envelope (month <= 31 d,
-        # year <= 366 — a superset, so per-row frames stay exact).
-        # ``.complete`` falls back (its guard needs Tier B partition-
-        # extent SQL over the un-haloed frame).
-        if index is None or complete:
-            return None
-        outer, calls = windowize(expr)
-        if not calls:
-            return None
-        from .window import scale_safe_calendar_frame
-
-        try:
-            aug, sql_over, home, helpers = scale_safe_calendar_frame(
-                df,
-                frame=frame_spec,
-                index=index,
-                by=[b for b in (by_l or [])] or None,
-            )
-        except ValueError:
-            # non-timestamp index / non-string keys / unbounded ends
-            return None
-        for ph, call in calls:
-            aug = aug.withColumn(ph, F.expr(f"{call} OVER ({sql_over})"))
-        return (
-            aug.where(home)
-            .withColumn(name, F.expr(outer))
-            .drop(*helpers, *[ph for ph, _ in calls])
-        )
-    if by_l and complete and index is not None:
-        # grouped RANGE + .complete: the per-key extent join below
-        # needs string key names
-        if not all(isinstance(b, str) for b in by_l):
-            return None
-    try:
-        if index is not None:
-            from .window import _index_order_key
-
-            _, unit, _ = _index_order_key(df, index)
-            lo, hi = frame_spec.range_bounds(unit)
-            if lo <= -(2**62) or hi >= 2**62:
-                return None
-        else:
-            lo, hi = frame_spec.row_bounds()
-            if lo < -(2**31) or hi > 2**31:
-                return None
-    except ValueError:
-        return None
+    if complete and by_l and index is not None and not all(
+        isinstance(b, str) for b in by_l
+    ):
+        return None  # the per-key extent join below needs string key names
     outer, calls = windowize(expr)
     if not calls:
         return None
-    from .window import scale_safe_frame
-
     try:
-        aug, spec, home, helpers = scale_safe_frame(
+        aug, plan, home, helpers = scale_safe_frame(
             df, order_by=order_l or None, frame=frame_spec, index=index,
             desc=desc, by=by_l or None,
         )
     except ValueError:
-        # e.g. an unbucketable leading order key (numeric/date/timestamp/
-        # string are supported; anything else raises) — fall back to the
-        # reference-faithful single-partition lowering
+        # unbounded frames, an unbucketable leading order key (numeric/
+        # date/timestamp/string are supported), a calendar frame over a
+        # non-timestamp index — fall back to the reference-faithful
+        # single-partition lowering
         return None
-    # Wide-frame floor (r12), per call: sum/count/avg over exact-typed
+    # Wide-frame floor, per call: sum/count/avg over exact-typed
     # operands (integer frame axis) lower as a difference of two
     # unbounded-preceding prefix windows (subtractive_over); min/max
     # over ROWS frames lower as the fixed-width block RMQ
     # (rmq_frame_value — exact for ANY orderable type, doubles
     # included).  Both are O(n) instead of Spark's O(n·w) per-row frame
     # re-aggregation and bit-pinned vs the direct plan
-    # (tests/test_plans.py); anything else keeps the direct frame.
-    from .window import (
-        rmq_call,
-        rmq_frame_value,
-        subtractive_calls,
-        subtractive_over,
+    # (tests/test_plans.py); they need a Tier A WindowSpec, and anything
+    # else keeps the direct frame.
+    spec = plan.spec  # None for a calendar (Tier B) plan: no fast path
+    lo, hi = plan.bounds() if spec is not None else (None, None)
+    sub_ok = spec is not None and (
+        index is None or _subtractive_index_ok(df, index)
     )
-
-    sub_ok = index is None or _subtractive_index_ok(df, index)
-    extra_helpers: list[str] = []
     any_fast = False
     for ph, call in calls:
         if sub_ok and subtractive_calls(df, [(ph, call)]):
             aug = aug.withColumn(
                 ph,
-                subtractive_over(call, spec, lo, hi, row_frame=index is None),
+                subtractive_over(call, spec, lo, hi, row_frame=plan.row_frame),
             )
             any_fast = True
-        elif index is None and rmq_call(df, call):
+        elif plan.row_frame and rmq_call(df, call):
             part = [*(by_l or []), "__tpid"]  # ROWS mode: by are strings
             aug, value_c, hs = rmq_frame_value(aug, call, part, lo, hi, ph)
             aug = aug.withColumn(ph, value_c)
-            extra_helpers.extend(hs)
+            helpers.extend(hs)
             any_fast = True
         else:
-            aug = aug.withColumn(ph, F.expr(call).over(spec))
-    helpers = [*helpers, *extra_helpers]
+            aug = aug.withColumn(ph, plan.over(call))
     value = F.expr(outer)
     if complete:
-        if index is None:
+        if plan.row_frame:
             # full ⇔ the frame holds exactly width rows; every frame row is
             # present in the target partition, so the per-partition count
             # equals the global one.  Materialized BEFORE the home filter —
@@ -533,19 +468,14 @@ def _apply_scale_safe_frame(
             # per-key window: hot keys stay distributed; AQE picks
             # broadcast when the key table is small).  NULL-SAFE join:
             # window partitioning groups NULL keys into one partition,
-            # a null-unsafe join would lose their extents (nullkeys
-            # axis, r12).
-            from .window import _index_order_key
-
-            kc, _, _ = _index_order_key(df, index)
+            # a null-unsafe join would lose their extents (the nullkeys
+            # edge-sweep axis).
+            kc, _ = _index_order_key(df, index)
             extents = df.groupBy(*by_l).agg(
                 F.min(kc).alias("__gmin"), F.max(kc).alias("__gmax")
             )
             rhs = extents.select(
-                *[
-                    F.col(b).alias(f"__byk{i}")
-                    for i, b in enumerate(by_l)
-                ],
+                *[F.col(b).alias(f"__byk{i}") for i, b in enumerate(by_l)],
                 "__gmin",
                 "__gmax",
             )
@@ -555,12 +485,6 @@ def _apply_scale_safe_frame(
             aug = aug.join(rhs, cond, "left").drop(
                 *[f"__byk{i}" for i in range(len(by_l))]
             )
-            helpers = [*helpers, "__gmin", "__gmax"]
-            value = F.when(
-                (F.col("__k") + F.lit(lo) >= F.col("__gmin"))
-                & (F.col("__k") + F.lit(hi) <= F.col("__gmax")),
-                value,
-            )
         else:
             # full ⇔ [k+lo, k+hi] inside the GLOBAL index extent (one tiny
             # agg row, broadcast — the ungrouped analog of the partition
@@ -569,6 +493,7 @@ def _apply_scale_safe_frame(
                 F.min("__k").alias("__gmin"), F.max("__k").alias("__gmax")
             )
             aug = aug.crossJoin(F.broadcast(extent))
+        if not plan.row_frame:
             helpers = [*helpers, "__gmin", "__gmax"]
             value = F.when(
                 (F.col("__k") + F.lit(lo) >= F.col("__gmin"))
@@ -588,8 +513,6 @@ def _subtractive_index_ok(df: DataFrame, index: str) -> bool:
     integers one apart at minimum.  Timestamps/dates epoch-cast to
     integer micros/days; numeric indexes must be integral (a fractional
     index would mis-place rows in ``(k+lo-1, k+lo)``)."""
-    from pyspark.sql import types as T
-
     dtype = df.schema[index].dataType
     if isinstance(dtype, T.TimestampType | T.TimestampNTZType | T.DateType):
         return True

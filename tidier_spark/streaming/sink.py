@@ -27,6 +27,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .sliding import _replay
+
 __all__ = [
     "stream_merge_parquet",
     "read_merged",
@@ -87,10 +89,6 @@ def stream_merge_parquet(
     """
     from ..operators.merge import upsert
 
-    env_t = os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT")
-    if env_t:
-        # liveness budget scales with micro-batch count — see run_stream
-        timeout_seconds = max(timeout_seconds, int(env_t))
     ks = [keys] if isinstance(keys, str) else list(keys)
     spark = stream.sparkSession
 
@@ -122,31 +120,16 @@ def stream_merge_parquet(
         for old in vs[: max(0, len(vs) - (keep_versions - 1))]:
             shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
 
-    saved = None
-    if state_partitions is not None:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(do_batch)
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(path, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-            if not finished:
-                raise TimeoutError(
-                    f"stream {name!r} did not finish its AvailableNow replay "
-                    f"within {timeout_seconds}s — refusing to return a "
-                    "partial snapshot"
-                )
-        finally:
-            q.stop()
-    finally:
-        if saved is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+    _replay(
+        stream.writeStream.foreachBatch(do_batch).option(
+            "checkpointLocation", os.path.join(path, "_checkpoint")
+        ),
+        spark,
+        name=name,
+        timeout_seconds=timeout_seconds,
+        state_partitions=state_partitions,
+        result="snapshot",
+    )
     try:
         return read_merged(spark, path)
     except FileNotFoundError:
@@ -197,11 +180,6 @@ def stream_dedup_against(
     store (Delta/Iceberg MERGE) and is intentionally not modeled here.
     """
     from pyspark import StorageLevel
-
-    env_t = os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT")
-    if env_t:
-        # liveness budget scales with micro-batch count — see run_stream
-        timeout_seconds = max(timeout_seconds, int(env_t))
 
     from ..operators.dedup import (
         _distinct_shingles,
@@ -270,35 +248,22 @@ def stream_dedup_against(
         finally:
             sh_b.unpersist()
 
-    saved = None
-    if state_partitions is not None:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            stream.writeStream.foreachBatch(do_batch)
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(path, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
+        _replay(
+            stream.writeStream.foreachBatch(do_batch).option(
+                "checkpointLocation", os.path.join(path, "_checkpoint")
+            ),
+            spark,
+            name=name,
+            timeout_seconds=timeout_seconds,
+            state_partitions=state_partitions,
+            result="survivor set",
         )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-            if not finished:
-                raise TimeoutError(
-                    f"stream {name!r} did not finish its AvailableNow replay "
-                    f"within {timeout_seconds}s — refusing to return a "
-                    "partial survivor set"
-                )
-        finally:
-            q.stop()
     finally:
         if own_store:
             sh_ref.unpersist()
         if own_bands:
             bands_ref.unpersist()
-        if saved is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
     # a stream that delivered zero rows never created the survivor dir —
     # return an empty frame with the stream's schema, matching the batch
     # counterpart's empty result instead of raising PATH_NOT_FOUND
@@ -408,10 +373,6 @@ def stream_scd2_parquet(
     there should swap the sink for a transactional table format whose
     commit log provides the same exactly-once batch dedup.
     """
-    env_t = os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT")
-    if env_t:
-        # liveness budget scales with micro-batch count — see run_stream
-        timeout_seconds = max(timeout_seconds, int(env_t))
     spark = stream.sparkSession
 
     def do_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -421,31 +382,16 @@ def stream_scd2_parquet(
             keep_versions=keep_versions,
         )
 
-    saved = None
-    if state_partitions is not None:
-        saved = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(do_batch)
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(path, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_seconds)
-            if not finished:
-                raise TimeoutError(
-                    f"stream {name!r} did not finish its AvailableNow replay "
-                    f"within {timeout_seconds}s — refusing to return a "
-                    "partial snapshot"
-                )
-        finally:
-            q.stop()
-    finally:
-        if saved is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
+    _replay(
+        stream.writeStream.foreachBatch(do_batch).option(
+            "checkpointLocation", os.path.join(path, "_checkpoint")
+        ),
+        spark,
+        name=name,
+        timeout_seconds=timeout_seconds,
+        state_partitions=state_partitions,
+        result="snapshot",
+    )
     try:
         return read_merged(spark, path)
     except FileNotFoundError:

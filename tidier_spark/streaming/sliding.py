@@ -6,8 +6,9 @@ import os
 from collections.abc import Iterable
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -67,36 +68,58 @@ def run_stream(
     can only raise, never lower, the caller's ``timeout_seconds`` — the
     guard stays loud.
     """
+    writer = stream.writeStream.format("memory").outputMode(output_mode)
+    _replay(
+        writer,
+        stream.sparkSession,
+        name=name,
+        timeout_seconds=timeout_seconds,
+        state_partitions=state_partitions,
+        result="result table",
+    )
+    return stream.sparkSession.table(name)
+
+
+def _replay(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    *,
+    name: str,
+    timeout_seconds: float,
+    state_partitions: int | None,
+    result: str,
+) -> None:
+    """Run a configured ``writer`` as query ``name`` over the data available
+    now (``Trigger.AvailableNow``) and wait for it to finish.
+
+    ``state_partitions`` scopes ``spark.sql.shuffle.partitions`` to the
+    query's start (see :func:`run_stream`); the old value comes back
+    afterwards.  A replay that misses ``timeout_seconds`` is stopped and
+    raises ``TimeoutError`` naming the partial ``result`` it refuses to
+    return.  ``SPARK_GRAFT_STREAM_TIMEOUT`` can raise, never lower, the
+    budget.
+    """
     env_t = os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT")
     if env_t:
         timeout_seconds = max(timeout_seconds, int(env_t))
-    spark = stream.sparkSession
     saved = None
     if state_partitions is not None:
         saved = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.queryName(name).trigger(availableNow=True).start()
         try:
-            finished = q.awaitTermination(timeout_seconds)
-            if not finished:
+            if not q.awaitTermination(timeout_seconds):
                 raise TimeoutError(
                     f"stream {name!r} did not finish its AvailableNow replay "
                     f"within {timeout_seconds}s — refusing to return a "
-                    "partial result table"
+                    f"partial {result}"
                 )
         finally:
             q.stop()
     finally:
         if saved is not None:
             spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return stream.sparkSession.table(name)
 
 
 def _concat_in_order(

@@ -56,6 +56,9 @@ class WindowPlan:
     ``sql_over``  — Tier B: f-string OVER clause body; the caller builds
                     ``F.expr(f"{agg_sql} OVER ({sql_over})")``.
     ``order_cols``— the effective ordering (for count-guards etc.).
+    ``unit``      — what one step of a RANGE order key means (``"micros"``,
+                    ``"days"`` or ``"native"``, see
+                    :meth:`FrameSpec.range_bounds`); None for ROWS frames.
     """
 
     spec: WindowSpec | None = None
@@ -64,6 +67,7 @@ class WindowPlan:
     order_cols: list[Column] = field(default_factory=list)
     frame: FrameSpec | None = None
     row_frame: bool = False  # True when frame is ROWS (not RANGE)
+    unit: str | None = None
     # Tier B bookkeeping (calendar frames): SQL fragments for rebuilding
     # auxiliary windows (e.g. the partition-extent guard of complete=True)
     sql_part: str = ""  # "PARTITION BY ..." or ""
@@ -72,6 +76,14 @@ class WindowPlan:
     @property
     def is_sql(self) -> bool:
         return self.sql_over is not None
+
+    def bounds(self) -> tuple[int, int]:
+        """The frame's ``(lo, hi)`` in the units of this plan's order key:
+        row offsets for ROWS frames, ``unit`` steps for RANGE frames."""
+        assert self.frame is not None
+        if self.row_frame:
+            return self.frame.row_bounds()
+        return self.frame.range_bounds(self.unit)
 
     def over(self, agg: Column | str) -> Column:
         """Apply an aggregate to this window. ``agg`` must be a SQL string
@@ -92,32 +104,38 @@ class WindowPlan:
         return self.over("count(*)") if self.is_sql else F.count(F.lit(1)).over(self.spec)
 
 
-def _index_order_key(df: DataFrame, index: str) -> tuple[Column, str, str]:
-    """Return (order key column, unit, sql_order_expr) for a range index.
+def _index_order_key(df: DataFrame, index: str) -> tuple[Column, str]:
+    """Return (order key column, unit) for a range index.
 
-    TimestampType → epoch seconds; DateType → epoch days; numeric → native.
+    TimestampType → epoch micros; TimestampNTZType → wall-clock micros
+    since 1970-01-01 00:00; DateType → epoch days; numeric → native.
     Epoch math is timezone-independent (same underlying instant both in
     Spark and in the DuckDB oracle), unlike date_trunc-style bucketing.
     """
     dtype = df.schema[index].dataType
     q = quote_ident(index)
-    if isinstance(dtype, T.TimestampType | T.TimestampNTZType):
-        # Epoch MICROseconds, not seconds — truncating to seconds would move
-        # rows across frame boundaries relative to the full-precision
-        # timestamps a SQL engine compares (4/1000 rows at sf0.001).
+    # Epoch MICROseconds, not seconds — truncating to seconds would move
+    # rows across frame boundaries relative to the full-precision
+    # timestamps a SQL engine compares (4/1000 rows at sf0.001).
+    if isinstance(dtype, T.TimestampType):
+        return F.unix_micros(F.col(index)), "micros"
+    if isinstance(dtype, T.TimestampNTZType):
+        # unix_micros rejects NTZ, and timestampdiff or a cast to TIMESTAMP
+        # go through the session timezone (under America/New_York the DST
+        # gap maps 02:30 onto 03:30).  Date plus time-of-day fields of the
+        # wall clock do not.
         return (
-            F.unix_micros(F.col(index)),
+            F.expr(
+                f"unix_date(CAST({q} AS DATE)) * 86400000000 + CAST(("
+                f"hour({q}) * 3600 + minute({q}) * 60 + extract(SECOND FROM {q})"
+                ") * 1000000 AS BIGINT)"
+            ),
             "micros",
-            f"unix_micros({q})",
         )
     if isinstance(dtype, T.DateType):
-        return (
-            F.datediff(F.col(index), F.lit("1970-01-01").cast("date")),
-            "days",
-            f"DATEDIFF({q}, DATE '1970-01-01')",
-        )
+        return F.datediff(F.col(index), F.lit("1970-01-01").cast("date")), "days"
     if isinstance(dtype, T.NumericType):
-        return F.col(index), "native", q
+        return F.col(index), "native"
     raise ValueError(
         f"index column {index!r} must be date, timestamp, or numeric; "
         f"got {dtype.simpleString()}"
@@ -143,17 +161,8 @@ def compile_window(
     """
     by = list(by or [])
     order_by = list(order_by or [])
-
-    # --- ordering with per-key desc (R/mutate.R:148-150, recycled :177-179) ---
-    if isinstance(desc, bool):
-        descs = [desc] * len(order_by)
-    else:
-        descs = list(desc)
-        if len(descs) == 1:
-            descs = descs * len(order_by)
-        if len(descs) != len(order_by):
-            raise ValueError(".desc must be length 1 or match .order_by")
-
+    # per-key desc (R/mutate.R:148-150, recycled :177-179)
+    order_cols = _ordered_cols(order_by, desc)
     part_cols = [_as_col(c) for c in by]
 
     if frame is not None and index is not None:
@@ -185,19 +194,16 @@ def compile_window(
                 sql_part=sql_part,
                 index_name=index,
             )
-        key, unit, _ = _index_order_key(df, index)
+        key, unit = _index_order_key(df, index)
         lo, hi = frame.range_bounds(unit)
         spec = Window.partitionBy(*part_cols).orderBy(key).rangeBetween(lo, hi)
         return WindowPlan(
-            spec=spec, partition_cols=part_cols, order_cols=[key], frame=frame
+            spec=spec,
+            partition_cols=part_cols,
+            order_cols=[key],
+            frame=frame,
+            unit=unit,
         )
-
-    order_cols = []
-    for c, d in zip(order_by, descs):
-        if hasattr(c, "to_spark"):  # verbs.desc marker (NSE desc(col) parity,
-            order_cols.append(c.to_spark())  # R/mutate.R:549-552)
-        else:
-            order_cols.append(_as_col(c).desc() if d else _as_col(c).asc())
 
     if frame is not None:
         # Rows frame (O4/O6, R/mutate.R:204-215).
@@ -238,6 +244,10 @@ _PREFIX_COMBINE = {
     "min": (F.min, F.min, F.least),
 }
 
+# (local prefix, bucket total, bucket offset) helper names per partial;
+# avg runs a sum and a count partial over the same buckets
+_PREFIX_COLS = (("__local", "__tot", "__off"), ("__lcnt", "__tcnt", "__ocnt"))
+
 
 def scale_safe_cumulative(
     df: DataFrame,
@@ -264,19 +274,22 @@ def scale_safe_cumulative(
        and broadcast-join back as offsets.
 
     Exact for integer/decimal aggregates; for doubles the additions
-    re-associate (same caveat any distributed sum has).  ``cummean`` callers
-    combine a sum pass and a count pass (Σ/Σ, never mean-of-means).  The
-    leading order key must be numeric/date/timestamp/string — strings are
-    bucketed by their first-8-UTF-8-bytes projection (see
-    :func:`_bucket_order_key`; long-common-prefix populations collapse to
-    one bucket — correct but single-task; static ``split_points`` for a
-    string key must be derived via :func:`string_key_literal`).
+    re-associate (same caveat any distributed sum has).  ``fn="avg"``
+    (``cummean``) carries a sum and a count partial through the same
+    buckets, totals and offsets join, and divides (Σ/Σ, never
+    mean-of-means).  The leading order key must be
+    numeric/date/timestamp/string — strings are bucketed by their
+    first-8-UTF-8-bytes projection (see :func:`_bucket_order_key`;
+    long-common-prefix populations collapse to one bucket — correct but
+    single-task; static ``split_points`` for a string key must be derived
+    via :func:`string_key_literal`).
     """
-    if fn not in _PREFIX_COMBINE:
+    if fn not in _PREFIX_COMBINE and fn != "avg":
         raise ValueError(
-            f"scale_safe cumulative supports {sorted(_PREFIX_COMBINE)}, got {fn!r}"
+            "scale_safe cumulative supports "
+            f"{sorted([*_PREFIX_COMBINE, 'avg'])}, got {fn!r}"
         )
-    agg, merge, combine = _PREFIX_COMBINE[fn]
+    partials = ("sum", "count") if fn == "avg" else (fn,)
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
     ocols = [_as_col(c) for c in order_by]
     lead = order_by[0]
@@ -294,24 +307,32 @@ def scale_safe_cumulative(
         .orderBy(*ocols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    value = F.expr(expr)
-    local = ranged.withColumn("__local", agg(value).over(w_local))
-    totals = ranged.groupBy("__pid").agg(agg(value).alias("__tot"))
     w_prev = Window.orderBy("__pid").rowsBetween(
         Window.unboundedPreceding, -1
     )  # n rows total — a single task here is free
-    offsets = totals.select(
-        "__pid", merge(F.col("__tot")).over(w_prev).alias("__off")
-    )
+    value = F.expr(expr)
+    local, tots, offs, results, helpers = ranged, [], [], [], ["__pid"]
+    for part, (lc, tc, oc) in zip(partials, _PREFIX_COLS):
+        agg, merge, combine = _PREFIX_COMBINE[part]
+        local = local.withColumn(lc, agg(value).over(w_local))
+        tots.append(agg(value).alias(tc))
+        offs.append(merge(F.col(tc)).over(w_prev).alias(oc))
+        results.append(
+            F.when(F.col(oc).isNull(), F.col(lc)).otherwise(
+                combine(F.col(lc), F.col(oc))
+            )
+        )
+        helpers += [lc, oc]
+    totals = ranged.groupBy("__pid").agg(*tots)
+    offsets = totals.select("__pid", *offs)
     joined = local.join(F.broadcast(offsets), "__pid", "left")
-    result = F.when(F.col("__off").isNull(), F.col("__local")).otherwise(
-        combine(F.col("__local"), F.col("__off"))
-    )
-    return joined.withColumn(out, result).drop("__pid", "__local", "__off")
+    result = results[0] / results[1] if fn == "avg" else results[0]
+    return joined.withColumn(out, result).drop(*helpers)
 
 
 def _ordered_cols(order_by: list[object], desc: bool | list[bool]) -> list[Column]:
-    """Order columns with per-key desc applied (compile_window's rule)."""
+    """Order columns with per-key desc applied; ``desc`` is one flag or a
+    list recycled from length 1."""
     if isinstance(desc, bool):
         descs = [desc] * len(order_by)
     else:
@@ -348,7 +369,7 @@ def _bucket_order_key(df: DataFrame, col: str) -> Column:
     Callers supplying static ``split_points`` for a string key MUST
     derive them in THIS projected domain via
     :func:`string_key_literal` — raw-domain literals land every row in
-    a handful of buckets (ADVICE r7: ASCII hex bytes occupy only
+    a handful of buckets (ASCII hex bytes occupy only
     0x30-0x39/0x61-0x66, so uniform cuts of [0, 16^15) miss the data).
     """
     dtype = df.schema[col].dataType
@@ -359,7 +380,7 @@ def _bucket_order_key(df: DataFrame, col: str) -> Column:
             "0",
         )
         return F.conv(hx, 16, 10).cast("long")
-    key, _, _ = _index_order_key(df, col)
+    key, _ = _index_order_key(df, col)
     return key
 
 
@@ -440,7 +461,7 @@ def scale_safe_frame(
     desc: bool | list[bool] = False,
     n_partitions: int | None = None,
     by: list[str] | None = None,
-) -> tuple[DataFrame, WindowSpec, Column, list[str]]:
+) -> tuple[DataFrame, WindowPlan, Column, list[str]]:
     """Ungrouped BOUNDED frame WITHOUT the single-partition window.
 
     The reference's ungrouped sliding frames (`R/mutate.R:204-229`) force a
@@ -465,33 +486,43 @@ def scale_safe_frame(
     Same row sets, same in-frame order as the single-partition plan, so
     results are bit-identical (hash-pinned in tests/test_plans.py).
 
-    Returns ``(augmented_df, window_spec, home_predicate, helper_cols)`` —
-    the caller computes aggregates ``.over(spec)``, filters on the
-    predicate, and drops the helpers.  ROWS frames use a synthetic global
-    row index (per-bucket ``row_number`` + broadcast prefix offsets), so
-    the window's ORDER BY is tie-free by construction; the leading order
-    key must be numeric/date/timestamp/string (strings via the 8-byte
-    UTF-8 prefix projection of :func:`_bucket_order_key`, with its
-    prefix-collapse hazard; unsupported types raise, and mutate falls
-    back to the reference-faithful lowering).  RANGE frames require a non-NULL index
-    (checked JVM-side per row, loud error).
+    Returns ``(augmented_df, plan, home_predicate, helper_cols)`` — the
+    caller computes aggregates with ``plan.over(call)``, filters on the
+    predicate, and drops the helpers.  The plan is Tier A (a
+    ``WindowSpec``) except for calendar frames, which are Tier B.  ROWS
+    frames use a synthetic global row index (per-bucket ``row_number`` +
+    broadcast prefix offsets), so the window's ORDER BY is tie-free by
+    construction; the leading order key must be
+    numeric/date/timestamp/string (strings via the 8-byte UTF-8 prefix
+    projection of :func:`_bucket_order_key`, with its prefix-collapse
+    hazard; unsupported types raise, and mutate falls back to the
+    reference-faithful lowering).  RANGE frames require a non-NULL
+    index (checked JVM-side per row, loud error).
 
-    ``by`` (r11 RANGE, r12 ROWS): GROUPED hot-key-safe lowering.  The
-    default grouped plan partitions by the group key alone, so one key
-    owning half the rows is one straggler task at scale (the skewkeys
-    regime).  With ``by``, the window partitions by ``(key, __tpid)``
-    instead — a hot key's rows split across the order-axis buckets.
+    CALENDAR frames (months/years over a timestamp index) take the same
+    RANGE halo.  Calendar units have no fixed epoch width, so the exact
+    frame stays a SQL ``RANGE BETWEEN INTERVAL`` window over
+    ``PARTITION BY (key..., __tpid)``; only the copy bounds change, to
+    :meth:`FrameSpec.micros_envelope` (month <= 31 days, year <= 366).
+    Every row a true frame reaches lies inside the envelope, so the copy
+    set is a superset and per-row frames stay exact.  Calendar frames
+    need string ``by`` names (they feed the SQL PARTITION BY).
 
-    RANGE (r11): the bucket split points and halo-copy bounds stay
-    GLOBAL over the order key: every same-key row within frame reach of
-    a bucket's home extent is a fortiori within reach of the GLOBAL
-    home extent, so the copy set is a superset of what each key needs
-    and per-key frames stay exact (extra copies are non-home or out of
-    the key's frame; the window's PARTITION BY key keeps other keys'
-    rows out).
+    ``by``: GROUPED hot-key-safe lowering.  The default grouped plan
+    partitions by the group key alone, so one key owning half the rows
+    is one straggler task at scale (the skewkeys regime).  With ``by``,
+    the window partitions by ``(key, __tpid)`` instead — a hot key's
+    rows split across the order-axis buckets.
 
-    ROWS (r12): per-key ROW offsets don't map onto global buckets, so
-    the global-superset trick fails (a same-key row 3 positions back
+    RANGE: the bucket split points and halo-copy bounds stay GLOBAL over
+    the order key: every same-key row within frame reach of a bucket's
+    home extent is a fortiori within reach of the GLOBAL home extent, so
+    the copy set is a superset of what each key needs and per-key frames
+    stay exact (extra copies are non-home or out of the key's frame; the
+    window's PARTITION BY key keeps other keys' rows out).
+
+    ROWS: per-key ROW offsets don't map onto global buckets, so the
+    global-superset trick fails (a same-key row 3 positions back
     can be arbitrarily far on the order axis).  Instead the lowering
     builds a PER-KEY dense row index scale-safely — a deterministic
     global order-bucket ``__opid`` (split points on the leading order
@@ -518,13 +549,26 @@ def scale_safe_frame(
 
     if index is not None:
         # --- RANGE frame: halo by index value -----------------------------
-        key, unit, _ = _index_order_key(df, index)
-        lo, hi = frame.range_bounds(unit)
-        if lo <= -(2**62) or hi >= 2**62:
-            raise ValueError(
-                "scale_safe_frame requires finite frame bounds; use "
-                "scale_safe_cumulative for (inf, 0) prefixes"
-            )
+        key, unit = _index_order_key(df, index)
+        if frame.is_calendar:
+            if unit != "micros":
+                raise ValueError(
+                    "scale_safe calendar frames need a timestamp index "
+                    f"(epoch-µs bucketing); got {unit!r} steps"
+                )
+            if by and not all(isinstance(b, str) for b in by):
+                raise ValueError(
+                    "scale_safe calendar frames need string `by` names "
+                    "(they feed the SQL PARTITION BY)"
+                )
+            lo, hi = frame.micros_envelope()  # raises on unbounded ends
+        else:
+            lo, hi = frame.range_bounds(unit)
+            if lo <= -(2**62) or hi >= 2**62:
+                raise ValueError(
+                    "scale_safe_frame requires finite frame bounds; use "
+                    "scale_safe_cumulative for (inf, 0) prefixes"
+                )
         pid = _det_bucket_id(df, key, n, desc=False, null_last=False)
         guarded = F.when(
             F.assert_true(
@@ -552,13 +596,27 @@ def scale_safe_frame(
             (F.col("__k") >= F.col("__minv") + F.lit(lo2))
             & (F.col("__k") <= F.col("__maxv") + F.lit(hi2)),
         ).drop("__minv", "__maxv")
-        spec = (
-            Window.partitionBy(*(by or []), "__tpid")
-            .orderBy(F.col("__k"))
-            .rangeBetween(lo, hi)
-        )
+        if frame.is_calendar:
+            parts = [quote_ident(b) for b in (by or [])] + [quote_ident("__tpid")]
+            plan = WindowPlan(
+                sql_over=(
+                    f"PARTITION BY {', '.join(parts)} "
+                    f"ORDER BY {quote_ident(index)} {frame.sql_frame_clause()}"
+                ),
+                frame=frame,
+            )
+        else:
+            plan = WindowPlan(
+                spec=(
+                    Window.partitionBy(*(by or []), "__tpid")
+                    .orderBy(F.col("__k"))
+                    .rangeBetween(lo, hi)
+                ),
+                frame=frame,
+                unit=unit,
+            )
         home = F.col("__tpid") == F.col("__pid")
-        return copied, spec, home, ["__pid", "__tpid", "__k"]
+        return copied, plan, home, ["__pid", "__tpid", "__k"]
 
     # --- ROWS frame: halo by global row index -----------------------------
     if not order_by:
@@ -583,6 +641,11 @@ def scale_safe_frame(
         raise ValueError(
             "scale_safe_frame rows mode needs a NAMED leading order column"
         )
+    if by and not all(isinstance(b, str) for b in by):
+        raise ValueError(
+            "scale_safe_frame grouped rows mode needs string `by` "
+            "names (they feed groupBy/join)"
+        )
     lead_key = _bucket_order_key(df, lead)
     descs = desc if isinstance(desc, list) else [desc]
     lead_desc = bool(descs[0]) if descs else False
@@ -592,11 +655,6 @@ def scale_safe_frame(
 
     if by:
         # --- grouped ROWS: per-key dense index + uniform supercells -------
-        if not all(isinstance(b, str) for b in by):
-            raise ValueError(
-                "scale_safe_frame grouped rows mode needs string `by` "
-                "names (they feed groupBy/join)"
-            )
         ranged = df.withColumn("__opid", pid.cast("int"))
         w_cell = Window.partitionBy(*by, "__opid").orderBy(*ocols)
         loc = ranged.withColumn("__lrn", F.row_number().over(w_cell))
@@ -625,8 +683,7 @@ def scale_safe_frame(
         # key — attaches the prefix offset and the per-key row count.
         # NULL-SAFE on the key columns: SQL window partitioning groups
         # NULL keys into ONE partition, and a null-unsafe equi-join
-        # would silently DROP those rows (caught by the nullkeys axis,
-        # r12).
+        # would silently DROP those rows (the nullkeys edge-sweep axis).
         rhs = offs.select(
             *[F.col(b).alias(f"__byk{i}") for i, b in enumerate(by)],
             F.col("__opid").alias("__opid_r"),
@@ -674,8 +731,9 @@ def scale_safe_frame(
             .orderBy("__gidx")
             .rowsBetween(lo, hi)
         )
+        plan = WindowPlan(spec=spec, frame=frame, row_frame=True)
         home = F.col("__tpid") == F.col("__pid")
-        return copied, spec, home, ["__opid", "__pid", "__tpid", "__gidx"]
+        return copied, plan, home, ["__opid", "__pid", "__tpid", "__gidx"]
 
     ranged = df.withColumn("__pid", pid.cast("int"))
     w_local = Window.partitionBy("__pid").orderBy(*ocols)
@@ -712,8 +770,9 @@ def scale_safe_frame(
     spec = (
         Window.partitionBy("__tpid").orderBy("__gidx").rowsBetween(lo, hi)
     )
+    plan = WindowPlan(spec=spec, frame=frame, row_frame=True)
     home = F.col("__tpid") == F.col("__pid")
-    return copied, spec, home, ["__pid", "__tpid", "__gidx"]
+    return copied, plan, home, ["__pid", "__tpid", "__gidx"]
 
 
 # --- subtractive lowering for very wide bounded frames ----------------------
@@ -732,7 +791,7 @@ _EXACT_TYPES = (
 def subtractive_calls(df: DataFrame, calls: list[tuple[str, str]]) -> bool:
     """True when EVERY windowized call can be lowered as a difference of
     two unbounded-preceding prefix windows — the O(n) escape from the
-    frame-WIDTH cliff (SCALE.md r11: Spark's bounded sliding frame
+    frame-WIDTH cliff (docs/SCALE.md: Spark's bounded sliding frame
     re-aggregates the in-frame buffer per row, O(n·w); bucketing divides
     the n, never the w).
 
@@ -812,81 +871,6 @@ def subtractive_over(
     return F.when(cd > 0, sd / cd)  # avg: exact-sum / exact-count
 
 
-def scale_safe_calendar_frame(
-    df: DataFrame,
-    *,
-    frame: FrameSpec,
-    index: str,
-    by: list[str] | None = None,
-    n_partitions: int | None = None,
-) -> tuple[DataFrame, str, Column, list[str]]:
-    """CALENDAR interval frame (Tier B) without the hot-key / single-task
-    window — the r12 extension of the r11 RANGE halo to variable-width
-    calendar bounds.
-
-    Calendar months/years have no fixed epoch width, so the exact frame
-    must stay a SQL ``RANGE BETWEEN INTERVAL`` window — but the HALO
-    copy step only needs a SUPERSET: :meth:`FrameSpec.micros_envelope`
-    bounds every possible frame inside ``[k + lo_us, k + hi_us]``
-    (month <= 31 days, year <= 366), and the r11 superset argument then
-    applies verbatim — every same-key row within TRUE frame reach of a
-    bucket's home extent is a fortiori within envelope reach of the
-    GLOBAL home extent, so per-row frames stay exact and extra copies
-    are non-home or outside the frame.  The SQL window runs
-    ``PARTITION BY (key..., __tpid) ORDER BY index`` with the exact
-    INTERVAL frame clause.
-
-    Requires a timestamp index (epoch-µs bucketing) and string ``by``
-    names (they feed the SQL PARTITION BY); ``by=None`` distributes the
-    otherwise single-partition UNGROUPED calendar window.  Returns
-    ``(copied_df, sql_over, home_predicate, helper_cols)``.
-    """
-    n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    dtype = df.schema[index].dataType
-    if not isinstance(dtype, T.TimestampType | T.TimestampNTZType):
-        raise ValueError(
-            "scale_safe calendar frames need a timestamp index "
-            f"(epoch-µs bucketing); got {dtype.simpleString()}"
-        )
-    if by and not all(isinstance(b, str) for b in by):
-        raise ValueError(
-            "scale_safe calendar frames need string `by` names "
-            "(they feed the SQL PARTITION BY)"
-        )
-    lo_us, hi_us = frame.micros_envelope()  # raises on unbounded ends
-    key = F.unix_micros(F.col(index))
-    pid = _det_bucket_id(df, key, n, desc=False, null_last=False)
-    guarded = F.when(
-        F.assert_true(
-            F.col(index).isNotNull(),
-            F.lit(
-                f"scale_safe calendar frame: index column {index!r} has "
-                "NULL values — NULL index rows have no position on the "
-                "range axis; filter them or use the default lowering"
-            ),
-        ).isNull(),
-        key,
-    )
-    ranged = df.withColumn("__k", guarded).withColumn("__pid", pid.cast("int"))
-    bounds = ranged.groupBy("__pid").agg(
-        F.min("__k").alias("__minv"), F.max("__k").alias("__maxv")
-    )
-    bounds = bounds.select(F.col("__pid").alias("__tpid"), "__minv", "__maxv")
-    lo2, hi2 = min(lo_us, 0), max(hi_us, 0)
-    copied = ranged.join(
-        F.broadcast(bounds),
-        (F.col("__k") >= F.col("__minv") + F.lit(lo2))
-        & (F.col("__k") <= F.col("__maxv") + F.lit(hi2)),
-    ).drop("__minv", "__maxv")
-    parts = [quote_ident(b) for b in (by or [])] + [quote_ident("__tpid")]
-    sql_over = (
-        f"PARTITION BY {', '.join(parts)} "
-        f"ORDER BY {quote_ident(index)} {frame.sql_frame_clause()}"
-    )
-    home = F.col("__tpid") == F.col("__pid")
-    return copied, sql_over, home, ["__pid", "__tpid", "__k"]
-
-
 _RMQ_RE = re.compile(r"^\s*(min|max)\s*\((.*)\)\s*$", re.I | re.S)
 
 
@@ -917,7 +901,7 @@ def rmq_frame_value(
     hi: int,
     ph: str,
 ) -> tuple[DataFrame, Column, list[str]]:
-    """Fixed-width sliding min/max in O(n) — the min/max leg of the r12
+    """Fixed-width sliding min/max in O(n) — the min/max leg of the
     frame-WIDTH floor (sum/count/avg take :func:`subtractive_over`).
 
     Classic block RMQ specialized to the constant ROWS width
