@@ -865,6 +865,62 @@ def test_timestamp_ntz_frames_are_wall_clock(spark):
         assert run(ltz, "UTC", kw) == utc, kw
 
 
+def test_scale_safe_cumulative_carries_offset_over_null_bucket_head(spark):
+    """A bucket whose head rows have only NULL operands still carries the
+    earlier buckets' sum: the prefix over k=5..7 (v NULL there, bucket
+    split at 4) is 1+2+3+4, as in the single-window plan, and the running
+    mean is 10/4."""
+    from pyspark.sql import Window
+
+    from tidier_spark.window import scale_safe_cumulative
+
+    rows = [(k, None if k in (5, 6, 7) else float(k)) for k in range(1, 11)]
+    df = spark.createDataFrame(rows, "k long, v double")
+
+    def run(fn):
+        out = scale_safe_cumulative(
+            df, "v", order_by=["k"], out="c", fn=fn, split_points=[4]
+        )
+        return {r["k"]: r["c"] for r in out.collect()}
+
+    prefix = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
+    window = {
+        r["k"]: r["c"]
+        for r in df.withColumn("c", F.sum("v").over(prefix)).collect()
+    }
+    assert run("sum") == window
+    assert [window[k] for k in (5, 6, 7)] == [10.0] * 3
+    assert [run("avg")[k] for k in (5, 6, 7)] == [2.5] * 3
+
+
+def test_scale_safe_calendar_halo_covers_dst_month(spark):
+    """Under a DST session timezone a month of real time can be 31 days
+    + 1 hour, so the scale-safe calendar halo must copy more than 31 days:
+    its result equals the default plan's on data that crosses the
+    November DST end of America/New_York."""
+    import datetime as dt
+
+    from tidier_spark import months
+
+    t0 = dt.datetime(2024, 9, 20)
+    rows = [(i, t0 + dt.timedelta(minutes=20 * i), 1) for i in range(6000)]
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.createDataFrame(rows, "id long, ts timestamp, v long")
+        kw = dict(m="sum(v)", index="ts", frame=(months(1), 0))
+        plain = sorted((r["id"], r["m"]) for r in mutate(df, **kw).collect())
+        safe = sorted(
+            (r["id"], r["m"])
+            for r in mutate(df, scale_safe=True, **kw).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert len(safe) == len(plain) == 6000
+    short = [(a, b) for a, b in zip(plain, safe) if a != b]
+    assert not short, short[:5]
+
+
 @pytest.mark.parametrize("caller", ["run_stream", "merge", "dedup", "scd2"])
 def test_stream_replay_timeout_is_loud_and_scoped(
     spark, tmp_path, monkeypatch, caller

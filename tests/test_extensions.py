@@ -3774,6 +3774,7 @@ def test_session_helper_pins_benched_config():
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.codegen.cache.maxEntries": "2048",
     }
     # a fresh dict each call — callers may mutate their copy freely
     c = recommended_conf()
@@ -3793,6 +3794,24 @@ def test_session_helper_pins_benched_config():
             if own_session.search(fh.read()):
                 building.append(rel)
     assert building == ["tidier_spark/session.py"], building
+
+
+def test_session_warns_on_a_setting_it_could_not_apply(spark):
+    """``getOrCreate`` on a running session keeps the live value of a
+    static SQL conf; ``session()`` says so instead of dropping it."""
+    import warnings
+
+    from tidier_spark.session import session
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    live = spark.conf.get(key)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = session(extra_conf={key: "7"})
+    assert got is spark
+    assert spark.conf.get(key) == live
+    messages = [str(w.message) for w in caught]
+    assert any(key in m and repr(live) in m for m in messages), messages
 
 
 def test_fan_out_spreads_a_single_small_file(spark, sf_dir):

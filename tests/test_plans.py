@@ -756,7 +756,9 @@ def test_scale_safe_calendar_and_grouped_range_complete(tables, spark):
 
 def test_micros_envelope_bounds():
     """The halo envelope must CONTAIN every possible calendar frame:
-    month uses 31 days on the preceding side (superset) and year 366."""
+    month uses 32 days on the preceding side (superset) and year 367 —
+    the calendar extremes plus one day, because under a DST session
+    timezone a month of real time can be 31 days + 1 hour."""
     import math
 
     import pytest as _pytest
@@ -764,9 +766,9 @@ def test_micros_envelope_bounds():
     from tidier_spark.frames import days, months, parse_frame, years
 
     d = 86400 * 1_000_000
-    assert parse_frame((months(1), months(0))).micros_envelope() == (-31 * d, 0)
-    assert parse_frame((years(1), days(0))).micros_envelope() == (-366 * d, 0)
-    assert parse_frame((months(0), months(2))).micros_envelope() == (0, 62 * d)
+    assert parse_frame((months(1), months(0))).micros_envelope() == (-32 * d, 0)
+    assert parse_frame((years(1), days(0))).micros_envelope() == (-367 * d, 0)
+    assert parse_frame((months(0), months(2))).micros_envelope() == (0, 64 * d)
     assert parse_frame((days(7), days(-1))).micros_envelope() == (-7 * d, -d)
     assert parse_frame((5, 5)).micros_envelope() == (-5_000_000, 5_000_000)
     with _pytest.raises(ValueError):

@@ -53,13 +53,14 @@ _FIXED_SECONDS = {
 # numeric rangeBetween; require the SQL INTERVAL frame (Tier B).
 _CALENDAR_UNITS = ("month", "year")
 
-# Extreme real-time lengths of the calendar units, in microseconds —
-# month spans 28..31 days, year 365..366.  Used ONLY for conservative
-# halo envelopes (scale_safe calendar lowering), never for frame
-# membership itself.
+# Bounds on the real-time lengths of the calendar units, in microseconds:
+# month spans 28..31 days and year 365..366, widened by one day on each
+# side because under a DST session timezone a month of real time can be
+# 31 days + 1 hour or 28 days - 1 hour.  Used ONLY for conservative halo
+# envelopes (scale_safe calendar lowering), never for frame membership.
 _CALENDAR_MICROS_RANGE = {
-    "month": (28 * 86400 * 1_000_000, 31 * 86400 * 1_000_000),
-    "year": (365 * 86400 * 1_000_000, 366 * 86400 * 1_000_000),
+    "month": (27 * 86400 * 1_000_000, 32 * 86400 * 1_000_000),
+    "year": (364 * 86400 * 1_000_000, 367 * 86400 * 1_000_000),
 }
 
 
@@ -201,8 +202,9 @@ class FrameSpec:
     def micros_envelope(self) -> tuple[int, int]:
         """Conservative ``(lo_us, hi_us)``: every row's TRUE frame over a
         timestamp index is contained in ``[k + lo_us, k + hi_us]`` epoch
-        microseconds.  Calendar units use their extreme real-time
-        lengths (month in 28..31 days, year in 365..366), so the
+        microseconds.  Calendar units use bounds on their real-time
+        lengths (month in 27..32 days, year in 364..367: the calendar
+        extremes plus one day for DST shifts), so the
         envelope is a SUPERSET bound usable for halo copying — it is
         NOT a frame; exact membership stays with the SQL INTERVAL
         window.  Raises for unbounded ends (no finite envelope)."""

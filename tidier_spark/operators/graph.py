@@ -121,9 +121,11 @@ def connected_components(
     for _ in range(max_iter - 1):
         # min over {own label} ∪ {neighbor labels}: the self-label rides
         # the same groupBy via union, so isolated nodes survive and no
-        # second join is needed.  eager=False: label_sum materializes the
-        # checkpoint in the same job, so each round runs exactly one job
-        # over a two-frame plan of checkpointed inputs.
+        # second join is needed.  eager=False skips a separate
+        # materialization pass, but it does not make the round one job:
+        # building the checkpoint RDD runs AQE's shuffle map stages as
+        # their own jobs (4 per round for dup_clusters at sf0.01), and
+        # label_sum adds 2 more.
         labels = (
             sym.join(labels.withColumnRenamed("u", "v"), "v")
             .select("u", "lab")

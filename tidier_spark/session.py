@@ -38,6 +38,39 @@ local[32] tweak:
   pre-execution plan; ADVICE r12.)  The default is ``false`` only to keep
   output-partitioning expectations for repartition-then-cache consumers, a
   pattern this package does not use.
+* ``spark.sql.codegen.cache.maxEntries`` — how many Janino-compiled
+  classes (whole-stage pipelines, projections, predicates) each JVM keeps.
+  Spark's default of 100 is smaller than one pass of this package's
+  plans: on a fresh session at sf0.01 the first pass of the perfbench
+  ``window_frames`` entries compiles 202 units (wide_frame_mean 40,
+  o2_cumsum 37, wide_frame_min 30, stream_sessions 22, sink_roundtrip 18,
+  o2_desc_rank 14, o7_calendar_frame 11, frame_apply_median 11,
+  o5_range_flagship 10, o4_rows_frame 9) and of ``llm_ops`` 118
+  (dup_clusters 67, bpe_train 34, kmeans_clusters 17).  With 100 slots
+  the LRU cache evicted every class before the next pass asked for it:
+  every steady-state pass compiled 202 and ~87 units again, loaded ~390
+  new classes (~25 with 2048) and spent ~9 s of JIT compiler-thread time
+  (~5 s with 2048) on code it had already compiled once.  With 2048,
+  steady-state passes compile 0 (``tests/test_codegen_cache.py`` guards
+  this).  perfbench, 10 ABBA pairs of ``window_frames`` at
+  ``--seconds 24`` (change/parent medians): pass_s_p50 7.54 -> 5.53 s
+  (0.73, faster in 10 of 10 pairs), cpu_s 0.61, entry_s_p90 0.73,
+  setup_s 0.96, peak_rss_mb 1.03 (the faster change fits about one more
+  timed pass into the same seconds; at a fixed pass count the JVM's peak
+  RSS is equal).  5 pairs of ``llm_ops``: pass_s_p50 3.79 -> 3.35 s
+  (0.88), cpu_s 0.85, entry_s_p90 0.88, setup_s 1.00, peak_rss_mb 0.98.
+  Cost: one pass of the whole 197-entry board at sf0.01 compiles ~2,300
+  units under 2048 (3,411 under 100, with evictions) and ends with
+  225.8 MB of metaspace against 211.1 MB, and 208 MB of live heap against
+  155 MB after a full GC: about 8 KB of metaspace and 21-28 KB of heap
+  per cached unit (emptying the cache after one ``window_frames`` pass
+  freed 4.3 MB for 202 units), so a full cache costs ~60-75 MB.  The
+  key is a static SQL conf (fixed when the JVM first generates code), and
+  executors take it from the conf they start with: on
+  ``local-cluster[2,1,1024]`` the executors' compiles per
+  ``window_frames`` pass (sf0.001) went 207, 88, 11, 1 under 2048 (each
+  executor compiles a stage the first time it runs one of its tasks)
+  against 211, 154, 150, 132 under 100.
 
 ``shuffle_partitions(cpus)`` is guidance for LOCAL sessions only: the
 shuffle width should normally come from AQE coalescing against the
@@ -46,6 +79,8 @@ to your platform's sizing (guide §2.2: 100 MB-1 GB post-AQE partitions).
 """
 
 from __future__ import annotations
+
+import warnings
 
 __all__ = ["recommended_conf", "session", "shuffle_partitions"]
 
@@ -58,6 +93,7 @@ def recommended_conf() -> dict[str, str]:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        "spark.sql.codegen.cache.maxEntries": "2048",
     }
 
 
@@ -83,16 +119,31 @@ def session(
     when omitted, master/parallelism are left to the environment (cluster
     deployments set their own).  ``extra_conf`` wins over the recommended
     keys, so callers can override any of them.
+
+    When a session is already running, ``getOrCreate`` applies only the
+    runtime SQL keys and silently keeps the live value of static SQL keys
+    (``spark.sql.codegen.cache.maxEntries`` among them) and core keys.
+    Every requested key whose live value differs is reported through
+    :func:`warnings.warn`.
     """
     from pyspark.sql import SparkSession
 
-    builder = SparkSession.builder.appName(app_name)
+    conf = {}
     if cpus is not None:
-        builder = builder.master(f"local[{int(cpus)}]").config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions(cpus))
-        )
-    conf = recommended_conf()
+        conf["spark.master"] = f"local[{int(cpus)}]"
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions(cpus))
+    conf.update(recommended_conf())
     conf.update(extra_conf or {})
+    builder = SparkSession.builder.appName(app_name)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    for k, v in conf.items():
+        live = spark.conf.get(k, None)
+        if live is not None and live != v:
+            warnings.warn(
+                f"session(): {k}={v!r} was not applied; the running "
+                f"session keeps {live!r}",
+                stacklevel=2,
+            )
+    return spark

@@ -317,10 +317,12 @@ def scale_safe_cumulative(
         local = local.withColumn(lc, agg(value).over(w_local))
         tots.append(agg(value).alias(tc))
         offs.append(merge(F.col(tc)).over(w_prev).alias(oc))
+        # a bucket head whose prefix operands are all NULL carries the
+        # earlier buckets' offset, as the single-window prefix does
         results.append(
-            F.when(F.col(oc).isNull(), F.col(lc)).otherwise(
-                combine(F.col(lc), F.col(oc))
-            )
+            F.when(F.col(oc).isNull(), F.col(lc))
+            .when(F.col(lc).isNull(), F.col(oc))
+            .otherwise(combine(F.col(lc), F.col(oc)))
         )
         helpers += [lc, oc]
     totals = ranged.groupBy("__pid").agg(*tots)
@@ -503,7 +505,8 @@ def scale_safe_frame(
     RANGE halo.  Calendar units have no fixed epoch width, so the exact
     frame stays a SQL ``RANGE BETWEEN INTERVAL`` window over
     ``PARTITION BY (key..., __tpid)``; only the copy bounds change, to
-    :meth:`FrameSpec.micros_envelope` (month <= 31 days, year <= 366).
+    :meth:`FrameSpec.micros_envelope` (month <= 32 days, year <= 367:
+    one day of margin for DST session timezones).
     Every row a true frame reaches lies inside the envelope, so the copy
     set is a superset and per-row frames stay exact.  Calendar frames
     need string ``by`` names (they feed the SQL PARTITION BY).
