@@ -969,3 +969,25 @@ def test_stream_replay_timeout_is_loud_and_scoped(
         calls[caller]()
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     assert spark.streams.active == []
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_shingles_of_short_documents_match_sql(spark, n):
+    # a document shorter than n tokens has no shingle: Spark's sequence(1, 0)
+    # descends, so without the guard these raised INVALID_PARAMETER_VALUE
+    docs = ["", "a b", "a b c d"]
+    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)], "i int, text string")
+    got = [
+        list(r["sh"])
+        for r in df.orderBy("i").select(text.shingles("text", n).alias("sh")).collect()
+    ]
+    values = ", ".join(f"({i}, '{d}')" for i, d in enumerate(docs))
+    want = [
+        list(r[0])
+        for r in _duck(
+            f"SELECT {text.shingles_sql('text', n)} FROM (VALUES {values}) t(i, text) "
+            "ORDER BY i"
+        )
+    ]
+    assert got == want, (got, want)
+    assert got[0] == [] and len(got[2]) == 5 - n

@@ -3274,6 +3274,34 @@ def test_star_cc_long_chain_converges_in_log_rounds(spark):
     assert all(r["cluster_id"] == 0 for r in got) and len(got) == n
 
 
+def _path(spark, n):
+    nodes = spark.range(n).select(F.col("id"))
+    chain = spark.range(n - 1).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    return chain, nodes
+
+
+def test_min_label_cc_fails_loud_without_fixpoint(spark):
+    """A 12-node path needs ~12 min-label rounds: 3 end before the
+    fixpoint and must raise, not return half-propagated labels."""
+    from tidier_spark.operators.graph import connected_components
+
+    chain, nodes = _path(spark, 12)
+    with pytest.raises(RuntimeError, match=r"connected_components: no fixpoint within max_iter=3 .*label sum \d+ -> \d+"):
+        connected_components(chain, nodes, max_iter=3)
+    got = connected_components(chain, nodes).collect()
+    assert {r["cluster_id"] for r in got} == {0} and len(got) == 12
+
+
+def test_star_cc_fails_loud_without_fixpoint(spark):
+    from tidier_spark.operators.graph import connected_components_star
+
+    chain, nodes = _path(spark, 200)
+    with pytest.raises(RuntimeError, match=r"connected_components_star: no fixpoint within max_iter=2 "):
+        connected_components_star(chain, nodes, max_iter=2)
+
+
 def test_star_cc_empty_and_isolated(spark):
     from tidier_spark.operators.graph import connected_components_star
 

@@ -486,20 +486,27 @@ def test_stream_dedup_upstream_protects_tbless_fold_from_redelivery(
     assert protected == clean, (protected, clean)
 
 
-def test_checkpoint_restart_restores_state_and_frontier(spark, tmp_path):
-    """The one streaming property no edge axis exercises (r11): a REAL
-    checkpoint restart.  Phase 1 replays batch 1 to a parquet sink with
-    a checkpoint; phase 2 adds two more batch files and restarts a NEW
-    query on the SAME checkpoint.  Three assertions:
+@pytest.mark.parametrize(
+    "mk",
+    [_mk_ewma, _mk_trailing, _mk_distinct, _mk_funnel],
+    ids=["ewma", "trailing", "distinct", "funnel"],
+)
+def test_checkpoint_restart_restores_state_and_frontier(spark, tmp_path, mk):
+    """The one streaming property no edge axis exercises: a REAL
+    checkpoint restart, for each stateful fold.  Phase 1 replays batch 1
+    to a parquet sink with a checkpoint; phase 2 adds a second batch
+    file and restarts a NEW query on the SAME checkpoint.  Three
+    assertions:
 
     1. Exactly-once: the final sink equals a clean single-session
        replay value-for-value (the file source re-processes nothing).
-    2. GroupState round-trip: the EWMA values for phase-2 rows continue
-       the phase-1 per-key state (covered by #1 — a reset state would
-       change ewma_num/den).
-    3. The r10 frontier fields (f_ts/f_tb) RESTORE rather than reset:
-       a row arriving in phase 2 BEHIND a phase-1 frontier still raises
-       LateEventError across the restart.
+    2. GroupState round-trip: the phase-2 rows continue the phase-1
+       per-key state (covered by #1 — a reset state would change the
+       EWMA, the trailing mean, the distinct count and the funnel
+       advances).
+    3. The frontier fields (f_ts/f_tb) RESTORE rather than reset: a row
+       arriving after a further restart BEHIND the checkpointed frontier
+       still raises LateEventError.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -525,8 +532,7 @@ def test_checkpoint_restart_restores_state_and_frontier(spark, tmp_path):
             .select("user_id", "event_id",
                     F.timestamp_micros("ts_us").alias("ts"), "value")
         )
-        out = stream_ewma(ev, key_col="user_id", time_col="ts",
-                          value_col="value", tiebreak_col="event_id")
+        out = mk(ev, "error")
         return (out.writeStream.format("parquet")
                 .option("path", sink).option("checkpointLocation", ck)
                 .outputMode("append").trigger(availableNow=True).start())
@@ -549,16 +555,35 @@ def test_checkpoint_restart_restores_state_and_frontier(spark, tmp_path):
     want = sorted(tuple(r) for r in spark.read.parquet(sink2).collect())
     assert got == want and len(got) == 5, (got, want)
 
-    # frontier survives the restart: a phase-2 row BEHIND key 1's
-    # phase-1 frontier must still raise, post-checkpoint-restore
-    src3 = str(tmp_path / "src3"); os.makedirs(src3)
-    sink3, ck3 = str(tmp_path / "sink3"), str(tmp_path / "ck3")
-    write(src3, b1, "b1.parquet", 120)
-    mk_query(src3, sink3, ck3).awaitTermination(120)
-    write(src3, [(1, 10, 500_000, 9.0)], "b2.parquet", 1)
-    q = mk_query(src3, sink3, ck3)
+    # frontier survives the restart: a row arriving after one more
+    # restart BEHIND key 1's checkpointed frontier must still raise
+    write(src, [(1, 10, 500_000, 9.0)], "b3.parquet", 0)
+    q = mk_query(src, sink, ck)
     with pytest.raises(Exception, match="BEHIND its key's frontier"):
         try:
             q.awaitTermination(120)
         finally:
             q.stop()
+
+
+@pytest.mark.parametrize("strict", [True, False])
+def test_frontier_drop_mask_equals_tuple_compare(strict):
+    """The vectorized drop mask keeps exactly the rows whose (ts, tb)
+    tuple is past the frontier (>= when not strict), and the frontier
+    advances to the larger of itself and the batch's last row."""
+    import numpy as np
+
+    from tidier_spark.streaming.sliding import _frontier_guard
+
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        n = int(rng.integers(1, 12))
+        rows = sorted(
+            zip(rng.integers(0, 4, n).tolist(), rng.integers(0, 3, n).tolist())
+        )
+        ts, tb = (np.array(c, dtype=np.int64) for c in zip(*rows))
+        f = (int(rng.integers(0, 4)), int(rng.integers(0, 3)))
+        mask, frontier = _frontier_guard(ts, tb, f, "op", "drop", strict=strict)
+        got = [True] * n if mask is None else mask.tolist()
+        assert got == [(r > f) if strict else (r >= f) for r in rows], (rows, f)
+        assert frontier == max(rows[-1], f)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from .literal import json_lit
 from .text import (
     _fan_out,
+    _ngrams,
     fingerprint,
     fingerprint_sql,
     hash60,
@@ -120,16 +121,7 @@ def _distinct_shingles(
 
     df = _fan_out(df)
     toks = df.select(F.col(id_col), tokens(text_col).alias("__t"))
-    t = F.col("__t")
-    # guard: sequence(1, 0) DESCENDS in Spark ([1, 0] → slice(start=0)
-    # crashes), so docs shorter than the shingle take the empty branch
-    sh = F.when(
-        F.size(t) >= shingle_n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (shingle_n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(t, i, shingle_n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    sh = _ngrams(F.col("__t"), shingle_n)
     return toks.select(
         F.col(id_col), F.explode(F.array_distinct(sh)).alias("shingle")
     )

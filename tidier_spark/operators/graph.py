@@ -25,7 +25,9 @@ Pregel pattern expressed as bounded DataFrame iterations:
 * convergence exploits monotonicity: labels only ever DECREASE, so the
   label-sum strictly drops iff anything changed — the per-round change
   check is a scalar aggregate (decimal sum, overflow-safe for 64-bit
-  ids), not the labels⋈old-labels comparison join it would naively be.
+  ids), not the labels⋈old-labels comparison join it would naively be;
+* a loop that reaches ``max_iter`` before that check sees an unchanged
+  sum raises instead of returning labels that are not components yet.
 
 At 100 TB scale the same loop runs unchanged; when diameter grows beyond
 ~20 (long chains, not dup cliques) switch to
@@ -84,6 +86,12 @@ def connected_components(
     join + coalesce.  In a dedup corpus the duplicate subgraph is a tiny
     fraction of the documents — the loop's shuffle volume is bounded by
     it, not by |nodes|.
+
+    ``max_iter`` counts propagation rounds, the fused first one included;
+    the fixpoint is confirmed by a round that leaves the label sum
+    unchanged, so it takes at least 2.  Running out of rounds before
+    that raises ``RuntimeError`` naming ``max_iter`` and the last
+    label-sum change.
     """
     if max_iter < 1:
         raise ValueError(
@@ -117,7 +125,7 @@ def connected_components(
             F.sum(F.col("lab").cast("decimal(38,0)")).alias("s")
         ).collect()[0][0]
 
-    prev_sum = label_sum(labels)
+    prev_sum, new_sum = None, label_sum(labels)
     for _ in range(max_iter - 1):
         # min over {own label} ∪ {neighbor labels}: the self-label rides
         # the same groupBy via union, so isolated nodes survive and no
@@ -136,10 +144,16 @@ def connected_components(
         )
         # previous rounds' checkpoint blocks are freed by the
         # ContextCleaner once their DataFrames go out of scope
-        new_sum = label_sum(labels)
+        prev_sum, new_sum = new_sum, label_sum(labels)
         if new_sum == prev_sum:
             break
-        prev_sum = new_sum
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint within max_iter={max_iter} "
+            f"rounds: the last round moved the label sum {prev_sum} -> "
+            f"{new_sum}, so the labels are not components yet.  Raise "
+            "max_iter, or use connected_components_star on long chains."
+        )
     return _label_nodes(nodes, labels, "u", id_col)
 
 
@@ -182,6 +196,8 @@ def connected_components_star(
     min-label (Σ min-neighbor strictly decreases until fixpoint).  Each
     round's frame is localCheckpoint-ed to truncate the growing plan —
     the iterative-Spark discipline of :func:`connected_components`.
+    Running out of ``max_iter`` rounds before a round leaves the edge
+    sums unchanged raises ``RuntimeError``, as in min-label.
     """
     if max_iter < 1:
         raise ValueError(
@@ -205,7 +221,7 @@ def connected_components_star(
         return (r["su"], r["sv"], r["n"])
 
     e = e0
-    prev = round_sum(e)
+    prev, cur = None, round_sum(e)
     for _ in range(max_iter):
         # --- large-star: group on the SMALLER endpoint's neighborhoods.
         # Symmetrize so every node sees its full neighborhood, take
@@ -243,10 +259,16 @@ def connected_components_star(
             .localCheckpoint(eager=False)
         )
         e = small
-        cur = round_sum(e)
+        prev, cur = cur, round_sum(e)
         if cur == prev:
             break
-        prev = cur
+    else:
+        raise RuntimeError(
+            f"connected_components_star: no fixpoint within max_iter="
+            f"{max_iter} rounds: the last round moved the edge sums "
+            f"(sum u, sum v, edges) {prev} -> {cur}, so the edges are not "
+            "rooted stars yet.  Raise max_iter."
+        )
     # fixpoint edges are rooted stars (root = component min on u side).
     # Roots self-label WITHOUT a separate distinct pass (r13): the
     # closing groupBy-min dedups anyway, so unioning the raw u-side

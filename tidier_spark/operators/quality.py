@@ -52,23 +52,6 @@ __all__ = [
 ]
 
 
-def _all_shingles(text_col: str, n: int) -> F.Column:
-    """ALL n-gram occurrences (non-distinct) — repetition needs the bag,
-    not the set that :func:`dedup._distinct_shingles` produces."""
-    from .text import tokens
-
-    t = F.col("__toks") if text_col == "__toks" else tokens(text_col)
-    # guard: sequence(1, 0) DESCENDS in Spark ([1, 0] → slice(start=0)
-    # crashes), so short docs take the empty-array branch explicitly
-    return F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def repetition_signals(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -88,11 +71,12 @@ def repetition_signals(
     count per (id, gram) → max/sum per id → left join back so token-free
     documents keep zero rows instead of disappearing.
     """
-    from .text import tokens
+    from .text import _ngrams, tokens
 
     toks = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    # ALL n-gram occurrences, not distinct: repetition needs the bag
     sh = toks.select(
-        F.col(id_col), F.explode(_all_shingles("__toks", n)).alias("__g")
+        F.col(id_col), F.explode(_ngrams(F.col("__toks"), n)).alias("__g")
     )
     hist = (
         sh.groupBy(id_col, "__g")

@@ -241,11 +241,23 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     """Word n-gram shingles → array<string> (input to MinHash)."""
     if n < 1:
         raise ValueError(f"shingles: n must be >= 1, got {n}")
-    t = tokens(col)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(t) - (n - 1), F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-    )
+    return _ngrams(tokens(col), n)
+
+
+def _ngrams(t: Column, n: int) -> Column:
+    """Every word n-gram of the token array ``t``, in order, joined by
+    spaces → array<string>; an array shorter than ``n`` gives ``[]``.
+    The guard is needed: ``sequence(1, 0)`` DESCENDS in Spark (``[1, 0]``)
+    and ``slice(start=0)`` then raises.  Pass a column reference, not a
+    ``tokens()`` expression, where the tokens can be materialized first:
+    the lambda re-evaluates ``t`` once per n-gram."""
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t) - (n - 1)),
+            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def hash60(col: Column) -> Column:

@@ -8,13 +8,22 @@ counterparts a pipeline needs, on native Structured Streaming primitives:
   aggregation with watermark-bounded state (the streaming analog of
   tidier's O5 range frames: a per-window aggregate instead of a per-row
   trailing frame, which is the shape streaming state can bound).
-* :func:`stream_trailing_agg` — a *per-key trailing window* over event
-  time via ``applyInPandasWithState``: custom stateful logic for the exact
-  per-row trailing-frame semantics, state bounded by the frame width.
+* four per-key stateful folds — :func:`stream_trailing_agg` (the exact
+  per-row trailing frame, state bounded by the frame width),
+  :func:`stream_funnel_advances`, :func:`stream_ewma` and
+  :func:`stream_running_distinct`.  Each is a schema, an initial state
+  and a row fold over one scaffold (``sliding._keyed_fold``): group by
+  key with ``applyInPandasWithState``, sort each key's micro-batch by
+  (time, tiebreak), apply the cross-batch frontier guard (late or
+  re-delivered rows raise by default, or drop deterministically), fold,
+  and store the frontier in the GroupState beside the operator's fields.
+* session windows, watermarked dedup, the stream-stream interval join,
+  and ``foreachBatch`` sinks: keyed upsert and SCD2 (one versioned
+  parquet snapshot commit) and incremental corpus dedup.
 
-Scale notes: state size = keys × (frame span / slide) buckets; watermark
-drops late data deterministically; both operators shuffle once on the
-grouping keys (same as any streaming agg).
+Scale notes: windowed state size = keys × (frame span / slide) buckets;
+watermarks drop late data deterministically; every operator shuffles
+once on its grouping keys (same as any streaming agg).
 """
 
 from .sink import (  # noqa: F401

@@ -58,6 +58,26 @@ def _versions(path: str, committed_only: bool = True) -> list[int]:
     return sorted(out)
 
 
+def _commit_version(
+    path: str, frame: DataFrame, batch_id: int, keep_versions: int
+) -> None:
+    """Commit ``frame`` as the next snapshot ``path/v=N`` of a
+    foreachBatch sink.  N is past every version directory, committed or
+    a crashed write's partial one.  The overwrite write ends with
+    Spark's ``_SUCCESS``; a ``_BATCH_<batch_id>`` marker then records
+    the producing micro-batch (:func:`_version_batch_id`; Spark ignores
+    ``_``-prefixed files).  Last, all but the newest ``keep_versions``
+    committed snapshots are pruned."""
+    committed = _versions(path)
+    all_vs = _versions(path, committed_only=False)
+    vdir = os.path.join(path, f"v={all_vs[-1] + 1 if all_vs else 0}")
+    frame.write.mode("overwrite").parquet(vdir)
+    with open(os.path.join(vdir, f"_BATCH_{batch_id}"), "w"):
+        pass
+    for old in committed[: max(0, len(committed) - (keep_versions - 1))]:
+        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+
+
 def read_merged(spark: SparkSession, path: str) -> DataFrame:
     """Latest committed snapshot of a :func:`stream_merge_parquet` table."""
     vs = _versions(path)
@@ -103,7 +123,6 @@ def stream_merge_parquet(
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
-        vs = _versions(path)
         # order-aware cross-batch merge: the snapshot row wins when its
         # order_cols tuple is newer than the incoming batch's (late data
         # in a later micro-batch must NOT overwrite a newer row) — the
@@ -111,14 +130,10 @@ def stream_merge_parquet(
         # order applies across batches, matching the batch oracle.
         merged = (
             upsert(read_merged(spark, path), latest, ks, order_cols=order_cols)
-            if vs
+            if _versions(path)
             else latest
         )
-        all_vs = _versions(path, committed_only=False)
-        nxt = (all_vs[-1] + 1) if all_vs else 0
-        merged.write.mode("overwrite").parquet(os.path.join(path, f"v={nxt}"))
-        for old in vs[: max(0, len(vs) - (keep_versions - 1))]:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+        _commit_version(path, merged, batch_id, keep_versions)
 
     _replay(
         stream.writeStream.foreachBatch(do_batch).option(
@@ -333,14 +348,7 @@ def _scd2_fold_batch(
     merged = scd2_merge(
         snap, batch_df, key_col, time_col, attr_col, tiebreak_col
     )
-    all_vs = _versions(path, committed_only=False)
-    nxt = (all_vs[-1] + 1) if all_vs else 0
-    vdir = os.path.join(path, f"v={nxt}")
-    merged.write.mode("overwrite").parquet(vdir)
-    with open(os.path.join(vdir, f"_BATCH_{batch_id}"), "w"):
-        pass
-    for old in committed[: max(0, len(committed) - (keep_versions - 1))]:
-        shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
+    _commit_version(path, merged, batch_id, keep_versions)
 
 
 def stream_scd2_parquet(

@@ -3,20 +3,14 @@
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..mutate import _translate
 
@@ -122,27 +116,6 @@ def _replay(
             spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
-def _concat_in_order(
-    pdfs: Iterable[pd.DataFrame], sort_cols: list[str]
-) -> pd.DataFrame | None:
-    """Collect a key's whole micro-batch and sort it ONCE.
-
-    The ``applyInPandasWithState`` iterator yields Arrow-batch slices
-    (``spark.sql.execution.arrow.maxRecordsPerBatch``, default 10k rows);
-    a key whose micro-batch spans multiple slices must be ordered
-    GLOBALLY across them — sorting each slice independently silently
-    interleaves out-of-order events and per-row stateful outputs diverge
-    from the batch/SQL definition they claim parity with.  Stable
-    mergesort, so equal sort keys keep arrival order.  Returns ``None``
-    for an empty iterator (timeout-only invocations).
-    """
-    chunks = [p for p in pdfs if len(p)]
-    if not chunks:
-        return None
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    return pdf.sort_values(sort_cols, kind="mergesort")
-
-
 class LateEventError(ValueError):
     """A stateful operator received an event BEHIND its key's frontier —
     the cross-micro-batch in-order arrival contract was violated."""
@@ -161,9 +134,9 @@ def _frontier_guard(
     responsibility.  Without this guard a row arriving a micro-batch
     after its key already folded a NEWER event is applied OUT OF
     event-time order and the per-row outputs silently diverge from the
-    batch twin (found by the ``late`` edge axis, r10: EWMA values wrong,
-    SCD2 intervals with end < start).  The house rule (preepoch, nanvals)
-    is that contract violations fail LOUDLY:
+    batch twin (the ``late`` edge axis showed wrong EWMA values and SCD2
+    intervals with end < start).  The house rule (preepoch, nanvals) is
+    that contract violations fail LOUDLY:
 
     * ``late_policy="error"`` (default): raise :class:`LateEventError`
       naming the operator, the event, and the frontier.
@@ -177,14 +150,15 @@ def _frontier_guard(
     (ts, tiebreak).  Returns ``(keep_mask_or_None, new_frontier)`` —
     mask is None when nothing is late (the hot path allocates nothing).
 
-    **Re-delivery and ``strict`` (advice r10):** operators with a
-    UNIQUE tiebreak pass ``strict=True``: the frontier advances
-    strictly past the folded (ts, tb), so an at-least-once source that
-    re-delivers the exact last-folded row in a later micro-batch hits
-    the guard (loud error / deterministic drop) instead of silently
-    double-folding state.  ewma and running_distinct require a
-    tiebreak and are always strict; trailing and funnel are strict
-    IFF the caller supplies their optional ``tiebreak_col`` (r11).
+    **Re-delivery and ``strict``:** operators with a UNIQUE tiebreak
+    pass ``strict=True``: the frontier advances strictly past the
+    folded (ts, tb), so an at-least-once source that re-delivers the
+    exact last-folded row in a later micro-batch hits the guard (loud
+    error / deterministic drop) instead of silently double-folding
+    state.  ewma and running_distinct require a tiebreak and are
+    strict unless the caller passes ``strict=False``; trailing and
+    funnel are strict IFF the caller supplies their optional
+    ``tiebreak_col``.
     WITHOUT a tiebreak the guard runs tb=0 with ``strict=False`` —
     same-timestamp ties are legitimate and indistinguishable from
     re-delivery — and enforces ordering, not idempotence: a
@@ -195,8 +169,8 @@ def _frontier_guard(
     never rejected (the mask compares against the incoming frontier
     only).
 
-    **Checkpoint compatibility:** adding ``f_ts``/``f_tb`` to every
-    guarded operator's GroupState schema (r10) is a one-way break for
+    **Checkpoint compatibility:** the ``f_ts``/``f_tb`` fields that end
+    every guarded operator's GroupState schema are a one-way break for
     checkpoints written before the guard existed — Spark cannot evolve
     ``applyInPandasWithState`` state schemas, so restarting such a
     query requires a FRESH checkpoint directory (replay from the
@@ -204,16 +178,13 @@ def _frontier_guard(
     output column for fixed-schema sinks; only its snapshot INPUT side
     has a legacy fallback.
     """
-    import numpy as np
-
     if late_policy not in ("error", "drop"):
         raise ValueError(
             f"{op}: late_policy must be 'error' or 'drop', got "
             f"{late_policy!r}"
         )
     f_ts, f_tb = frontier
-    n = len(ts_us)
-    if n == 0:
+    if len(ts_us) == 0:
         return None, frontier
     first = (int(ts_us[0]), int(tbs[0]))
     last = (int(ts_us[-1]), int(tbs[-1]))
@@ -221,17 +192,8 @@ def _frontier_guard(
     if ok:
         return None, max(last, (f_ts, f_tb))
     if late_policy == "drop":
-        if strict:
-            it = (
-                (int(t), int(b)) > (f_ts, f_tb)
-                for t, b in zip(ts_us, tbs)
-            )
-        else:
-            it = (
-                (int(t), int(b)) >= (f_ts, f_tb)
-                for t, b in zip(ts_us, tbs)
-            )
-        mask = np.fromiter(it, dtype=bool, count=n)
+        past_tb = (tbs > f_tb) if strict else (tbs >= f_tb)
+        mask = (ts_us > f_ts) | ((ts_us == f_ts) & past_tb)
         return mask, max(last, (f_ts, f_tb))
     where = (
         "AT its key's frontier — an exact re-delivery of the "
@@ -247,6 +209,117 @@ def _frontier_guard(
         "deterministically (late_policy='drop'), filter them upstream "
         "with a watermark, or recompute with the batch twin, which "
         "sorts globally by event time."
+    )
+
+
+# the frontier of a key that has folded nothing yet
+_NO_FRONTIER = -(1 << 62)
+
+
+def _keyed_fold(
+    stream: DataFrame,
+    *,
+    op: str,
+    key_col: str,
+    time_col: str,
+    tiebreak_col: str | None,
+    cols: dict[str, object],
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    fold: Callable,
+    late_policy: str,
+    strict: bool,
+    timeout_minutes: int | None,
+    derived: dict[str, F.Column] | None = None,
+) -> DataFrame:
+    """The in-order per-key fold behind every ``applyInPandasWithState``
+    operator: group ``stream`` by ``key_col`` and fold each key's events
+    in (time, tiebreak) order into its GroupState.
+
+    It owns the scaffold: it expires a timed-out key, sorts the
+    key's micro-batch once, converts the time to epoch micros, and
+    applies the cross-batch frontier guard
+    (:func:`_frontier_guard`, ``op`` names the operator in its errors).
+    It stores the frontier ``(f_ts, f_tb)`` after the user fields and
+    re-arms the processing-time timeout.  Without a ``tiebreak_col`` every
+    tiebreak is 0.
+
+    The operator supplies the rest:
+
+    * ``cols`` maps each column the fold reads to the numpy dtype it is
+      read as (``None``: pandas' own).  A column named in ``derived`` is
+      computed by that expression and selected after the tiebreak;
+    * ``state_schema`` is the GroupState DDL, user fields first and
+      ``f_ts long, f_tb long`` last; ``init`` is a new key's user fields;
+    * ``fold(fields, ts_us, tbs, *arrays)`` gets the user fields and the
+      kept rows' ``cols`` arrays, and returns ``(fields, rows)``: the new
+      user fields and a dict of the output columns other than ``key``.
+      It must not mutate ``fields`` in place (``init`` is shared).
+    """
+    derived = derived or {}
+    tb = [tiebreak_col] if tiebreak_col else []
+    sort_cols = [time_col, *tb]
+
+    def fn(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        if state.exists:
+            *fields, f_ts, f_tb = state.get
+        else:
+            fields, f_ts, f_tb = init, _NO_FRONTIER, _NO_FRONTIER
+        # the iterator yields Arrow-batch slices (maxRecordsPerBatch), so
+        # a key's micro-batch is sorted ONCE across them — per-slice sorts
+        # would interleave out-of-order events.  Stable mergesort: equal
+        # sort keys keep arrival order.  No slices: a timeout-only call.
+        chunks = [p for p in pdfs if len(p)]
+        if not chunks:
+            chunks = [pd.DataFrame(columns=[*sort_cols, *cols])]
+        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+        ts_us = (pdf[time_col].astype("int64") // 1000).to_numpy()  # ns→µs
+        tbs = (
+            pdf[tiebreak_col].to_numpy()
+            if tiebreak_col
+            else np.zeros(len(ts_us), dtype=np.int64)
+        )
+        arrays = [pdf[c].to_numpy(dtype=d) for c, d in cols.items()]
+        mask, (f_ts, f_tb) = _frontier_guard(
+            ts_us, tbs, (f_ts, f_tb), op, late_policy, strict=strict
+        )
+        if mask is not None:
+            ts_us, tbs = ts_us[mask], tbs[mask]
+            arrays = [a[mask] for a in arrays]
+        fields, rows = fold(fields, ts_us, tbs, *arrays)
+        state.update((*fields, int(f_ts), int(f_tb)))
+        if timeout_minutes is not None:
+            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+        n = len(next(iter(rows.values())))
+        if n:
+            yield pd.DataFrame({"key": [key[0]] * n, **rows})
+
+    return (
+        stream.select(
+            F.col(key_col).alias("key"),
+            F.col(time_col).alias(time_col),
+            *[F.col(c).alias(c) for c in [*cols, *tb] if c not in derived],
+            *[e.alias(c) for c, e in derived.items()],
+        )
+        .groupBy("key")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=(
+                GroupStateTimeout.NoTimeout
+                if timeout_minutes is None
+                else GroupStateTimeout.ProcessingTimeTimeout
+            ),
+        )
     )
 
 
@@ -301,13 +374,13 @@ def stream_trailing_agg(
     fail LOUDLY by default; ``late_policy="drop"`` skips them
     deterministically instead — see :func:`_frontier_guard`.
 
-    ``tiebreak_col`` (r11, optional): a UNIQUE per-event id.  When
-    provided, the frontier advances strictly past the folded
-    (time, tiebreak), so an at-least-once source re-delivering the
-    exact last-folded row hits the guard (loud / deterministic drop)
-    instead of silently folding it into the trailing buffer twice.
-    Without it the operator cannot distinguish re-delivery from a
-    legitimate same-timestamp tie and keeps equality-folding.
+    ``tiebreak_col`` (optional): a UNIQUE per-event id.  When provided,
+    the frontier advances strictly past the folded (time, tiebreak), so
+    an at-least-once source re-delivering the exact last-folded row hits
+    the guard (loud / deterministic drop) instead of silently folding it
+    into the trailing buffer twice.  Without it the operator cannot tell
+    re-delivery from a legitimate same-timestamp tie and keeps
+    equality-folding.
 
     For each arriving event, emits ``trail_avg`` = mean of that key's
     values in ``[t − trailing_seconds, t]`` (closed bounds — identical to
@@ -322,105 +395,56 @@ def stream_trailing_agg(
     so a replay that should end with the data never terminates; expiry is
     a liveness feature for unbounded production streams only.
 
-    Implementation: ``applyInPandasWithState`` — the Spark-native form of a
-    custom stateful operator (SURVEY brief: "applyInPandasWithState for
-    custom stateful operators").
+    Implementation: a row fold over :func:`_keyed_fold`, the
+    ``applyInPandasWithState`` scaffold shared by the per-key folds.
     """
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("ts", TimestampType()),
-            StructField("value", DoubleType()),
-            StructField("trail_avg", DoubleType()),
-        ]
-    )
-    # State = parallel lists of (epoch_micros, value) kept sorted, plus
-    # the in-order frontier (last folded event time; see _frontier_guard).
-    state_schema = "ts_list array<long>, val_list array<double>, f_ts long, f_tb long"
-
     span_us = trailing_seconds * 1_000_000
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ts_list: list[int]
-        val_list: list[float]
-        if state.exists:
-            ts_list, val_list, f_ts, f_tb = state.get
-            ts_list, val_list = list(ts_list), list(val_list)
-        else:
-            ts_list, val_list, f_ts, f_tb = [], [], -(1 << 62), -(1 << 62)
-        sort_cols = [time_col] + ([tiebreak_col] if tiebreak_col else [])
-        pdf = _concat_in_order(pdfs, sort_cols)
-        rows = {"key": [], "ts": [], "value": [], "trail_avg": []}
-        if pdf is not None:
-            ts_us = (pdf[time_col].astype("int64") // 1000).to_numpy()  # ns→µs
-            vals = pdf[value_col].to_numpy()
-            tbs = (
-                pdf[tiebreak_col].to_numpy()
-                if tiebreak_col
-                else [0] * len(ts_us)
-            )
-            mask, (f_ts, f_tb) = _frontier_guard(
-                ts_us, tbs, (f_ts, f_tb),
-                "stream_trailing_agg", late_policy,
-                strict=tiebreak_col is not None,
-            )
-            if mask is not None:
-                ts_us, vals = ts_us[mask], vals[mask]
-            for t, v in zip(ts_us, vals):
-                ts_list.append(int(t))
-                val_list.append(float(v))
-                # evict events strictly older than the trailing span
-                # (closed lower bound, matching the batch rangeBetween)
-                cut = t - span_us
-                start = 0
-                while start < len(ts_list) and ts_list[start] < cut:
-                    start += 1
-                if start:
-                    ts_list = ts_list[start:]
-                    val_list = val_list[start:]
-                rows["key"].append(key[0])
-                rows["ts"].append(pd.Timestamp(t * 1000))
-                rows["value"].append(v)
-                rows["trail_avg"].append(sum(val_list) / len(val_list))
-        state.update((ts_list, val_list, int(f_ts), int(f_tb)))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        if rows["key"]:
-            out = pd.DataFrame(rows)
-            out["ts"] = out["ts"].astype("datetime64[us]")
-            yield out
+    def fold(fields, ts_us, tbs, vals):
+        # parallel lists of (epoch_micros, value) inside the trailing span
+        ts_list, val_list = map(list, fields)
+        trail_avg = []
+        for t, v in zip(ts_us, vals):
+            ts_list.append(int(t))
+            val_list.append(float(v))
+            # evict events strictly older than the trailing span
+            # (closed lower bound, matching the batch rangeBetween)
+            cut = t - span_us
+            start = 0
+            while start < len(ts_list) and ts_list[start] < cut:
+                start += 1
+            if start:
+                ts_list = ts_list[start:]
+                val_list = val_list[start:]
+            trail_avg.append(sum(val_list) / len(val_list))
+        rows = {
+            "ts": ts_us.astype("datetime64[us]"),
+            "value": vals,
+            "trail_avg": trail_avg,
+        }
+        return (ts_list, val_list), rows
 
-    sel = [
-        F.col(key_col).alias("key"),
-        F.col(time_col).alias(time_col),
-        F.col(value_col).alias(value_col),
-    ]
-    if tiebreak_col:
-        sel.append(F.col(tiebreak_col).alias(tiebreak_col))
-    return (
-        stream.select(*sel)
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.NoTimeout
-                if timeout_minutes is None
-                else GroupStateTimeout.ProcessingTimeTimeout
-            ),
-        )
+    return _keyed_fold(
+        stream,
+        op="stream_trailing_agg",
+        key_col=key_col,
+        time_col=time_col,
+        tiebreak_col=tiebreak_col,
+        cols={value_col: None},
+        out_schema="key long, ts timestamp, value double, trail_avg double",
+        state_schema=(
+            "ts_list array<long>, val_list array<double>, f_ts long, f_tb long"
+        ),
+        init=([], []),
+        fold=fold,
+        late_policy=late_policy,
+        strict=tiebreak_col is not None,
+        timeout_minutes=timeout_minutes,
     )
 
 
 def _preepoch_guard(frame: DataFrame, col: str, fn_name: str) -> DataFrame:
-    """Make the pre-epoch watermark trap LOUD (verdict r05 task #6).
+    """Make the pre-epoch watermark trap LOUD instead of silent.
 
     Spark's global watermark initializes at epoch 0, so a
     watermark-eviction path fed pre-1970 event times silently drops
@@ -652,7 +676,7 @@ def stream_funnel_advances(
     the same in-order replay contract as
     :func:`stream_trailing_agg`; for out-of-order production streams,
     front a watermarked sort or widen to a re-derivation window.
-    ``tiebreak_col`` (r11, optional): a unique per-event id — when
+    ``tiebreak_col`` (optional): a unique per-event id — when
     provided the frontier advances STRICTLY, so an exact at-least-once
     re-delivery is loud/dropped instead of re-folded (the fold itself
     is tie-insensitive, so values are unchanged for in-order data).
@@ -660,77 +684,37 @@ def stream_funnel_advances(
     State per key: ``k`` BIGINT timestamps (-1 = not reached) — O(k),
     the smallest possible funnel state; no event history is retained.
     """
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("step", LongType()),
-            StructField("t_us", LongType()),
-        ]
-    )
-    state_schema = "times array<long>, f_ts long, f_tb long"
     idx = {s: i for i, s in enumerate(steps)}
-    k = len(steps)
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            times, f_ts, f_tb = list(state.get[0]), state.get[1], state.get[2]
-        else:
-            times, f_ts, f_tb = [-1] * k, -(1 << 62), -(1 << 62)
-        rows = {"key": [], "step": [], "t_us": []}
-        sort_cols = [time_col] + ([tiebreak_col] if tiebreak_col else [])
-        pdf = _concat_in_order(pdfs, sort_cols)
-        if pdf is not None:
-            ts_us = (pdf[time_col].astype("int64") // 1000).to_numpy()
-            st = pdf[step_col].to_numpy()
-            tbs = (
-                pdf[tiebreak_col].to_numpy()
-                if tiebreak_col
-                else [0] * len(ts_us)
-            )
-            mask, (f_ts, f_tb) = _frontier_guard(
-                ts_us, tbs, (f_ts, f_tb),
-                "stream_funnel_advances", late_policy,
-                strict=tiebreak_col is not None,
-            )
-            if mask is not None:
-                ts_us, st = ts_us[mask], st[mask]
-            for t, s in zip(ts_us, st):
-                i = idx.get(s)
-                if i is None:
-                    continue
-                if times[i] != -1:
-                    continue
-                if i == 0 or (times[i - 1] != -1 and int(t) > times[i - 1]):
-                    times[i] = int(t)
-                    rows["key"].append(key[0])
-                    rows["step"].append(i + 1)
-                    rows["t_us"].append(int(t))
-        state.update((times, int(f_ts), int(f_tb)))
-        if rows["key"]:
-            yield pd.DataFrame(rows)
+    def fold(fields, ts_us, tbs, st):
+        times = list(fields[0])
+        rows = {"step": [], "t_us": []}
+        for t, s in zip(ts_us, st):
+            i = idx.get(s)
+            if i is None:
+                continue
+            if times[i] != -1:
+                continue
+            if i == 0 or (times[i - 1] != -1 and int(t) > times[i - 1]):
+                times[i] = int(t)
+                rows["step"].append(i + 1)
+                rows["t_us"].append(int(t))
+        return (times,), rows
 
-    sel = [
-        F.col(key_col).alias("key"),
-        F.col(time_col).alias(time_col),
-        F.col(step_col).alias(step_col),
-    ]
-    if tiebreak_col:
-        sel.append(F.col(tiebreak_col).alias(tiebreak_col))
-    return (
-        stream.select(*sel)
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        stream,
+        op="stream_funnel_advances",
+        key_col=key_col,
+        time_col=time_col,
+        tiebreak_col=tiebreak_col,
+        cols={step_col: None},
+        out_schema="key long, step long, t_us long",
+        state_schema="times array<long>, f_ts long, f_tb long",
+        init=([-1] * len(steps),),
+        fold=fold,
+        late_policy=late_policy,
+        strict=tiebreak_col is not None,
+        timeout_minutes=None,
     )
 
 
@@ -756,123 +740,82 @@ def stream_ewma(
     in (time, tiebreak) order within each batch; the in-order arrival
     contract across batches matches :func:`stream_trailing_agg`.
 
-    **BREAKING (r11):** ``tiebreak_col`` is now assumed UNIQUE per key
-    and the frontier advances STRICTLY past the folded (ts, tiebreak):
-    an at-least-once source re-delivering the exact last-folded row in
-    a later micro-batch raises :class:`LateEventError` (or drops under
+    ``tiebreak_col`` is assumed UNIQUE per key, so the frontier advances
+    STRICTLY past the folded (ts, tiebreak): an at-least-once source
+    re-delivering the exact last-folded row in a later micro-batch
+    raises :class:`LateEventError` (or drops under
     ``late_policy="drop"``) instead of silently double-folding.  The
-    state schema is unchanged, so the stricter semantics activate
-    silently on pre-r11 checkpoints after upgrade.  Callers whose
-    tiebreak is legitimately NON-unique (equal (ts, tiebreak) events
-    split across micro-batches must all fold) pass ``strict=False`` to
-    restore the r10 equality-folding frontier — accepting that exact
-    re-delivery of the last-folded row then folds twice.
+    strictness is not recorded in the state, so it applies to a restart
+    on a checkpoint written by the older equality-folding frontier too.
+    Callers whose tiebreak is legitimately NON-unique (equal (ts,
+    tiebreak) events split across micro-batches must all fold) pass
+    ``strict=False`` for the equality-folding frontier, accepting that
+    exact re-delivery of the last-folded row then folds twice.
 
     Emits one append-mode row per event: ``(key, ts_us, tiebreak,
     ewma_num, ewma_den, ewma100)`` — identical schema and values to the
     batch operator (the driver-hashable three-way parity: stream ==
     batch == SQL).
     """
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("tb", LongType()),
-            StructField("ewma_num", LongType()),
-            StructField("ewma_den", LongType()),
-            StructField("ewma100", DoubleType()),
-        ]
-    )
-    state_schema = "vals array<long>, nulls array<boolean>, f_ts long, f_tb long"
     k1 = lookback + 1
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            vals, isnull = list(state.get[0]), list(state.get[1])
-            f_ts, f_tb = state.get[2], state.get[3]
-        else:
-            vals, isnull = [], []
-            f_ts, f_tb = -(1 << 62), -(1 << 62)
-        rows = {c: [] for c in ("key", "ts_us", "tb", "ewma_num", "ewma_den", "ewma100")}
-        pdf = _concat_in_order(pdfs, [time_col, tiebreak_col])
-        if pdf is not None:
-            ts_us = (pdf[time_col].astype("int64") // 1000).to_numpy()
-            tbs = pdf[tiebreak_col].to_numpy()
-            raw = pdf[value_col].to_numpy(dtype=object)
-            mask, (f_ts, f_tb) = _frontier_guard(
-                ts_us, tbs, (f_ts, f_tb), "stream_ewma", late_policy,
-                strict=strict,  # unique tiebreak: re-delivery is loud
-            )
-            # NULL vs NaN: the Arrow crossing collapses both to nan in a
-            # float column, so the JVM-side __vnull flag is the only
-            # truth.  NULL skips (the batch twin's lag-coalesce); true
-            # NaN RAISES, matching the batch engine's ANSI penny cast
-            # (nanvals edge axis — silently treating NaN as missing
-            # broke the stream==batch parity contract).
-            nulls_jvm = pdf["__vnull"].to_numpy(dtype=bool)
-            if mask is not None:
-                ts_us, tbs = ts_us[mask], tbs[mask]
-                raw, nulls_jvm = raw[mask], nulls_jvm[mask]
-            for t, tb, v, vn in zip(ts_us, tbs, raw, nulls_jvm):
-                if (v is not None) and v != v and not vn:
-                    raise ValueError(
-                        "stream_ewma: NaN value is not representable in "
-                        "penny fixed point (the batch engine raises "
-                        "CAST_OVERFLOW; NULL is the missing-value spelling)"
-                    )
-                if vn or v is None or v != v:
-                    vals.append(0)
-                    isnull.append(True)
-                else:
-                    # round half away from zero, matching Spark F.round
-                    x = float(v) * 100
-                    vals.append(int(x + 0.5) if x >= 0 else -int(-x + 0.5))
-                    isnull.append(False)
-                vals, isnull = vals[-k1:], isnull[-k1:]
-                num = den = 0
-                for j in range(len(vals)):
-                    w = 1 << (lookback - j)
-                    idx = len(vals) - 1 - j
-                    if not isnull[idx]:
-                        num += vals[idx] * w
-                        den += w
-                rows["key"].append(key[0])
-                rows["ts_us"].append(int(t))
-                rows["tb"].append(int(tb))
-                rows["ewma_num"].append(num)
-                rows["ewma_den"].append(den)
-                rows["ewma100"].append(num / den if den > 0 else None)
-        state.update((vals, isnull, int(f_ts), int(f_tb)))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        if rows["key"]:
-            yield pd.DataFrame(rows)
+    def fold(fields, ts_us, tbs, raw, nulls_jvm):
+        # NULL vs NaN: the Arrow crossing collapses both to nan in a
+        # float column, so the JVM-side __vnull flag is the only truth.
+        # NULL skips (the batch twin's lag-coalesce); true NaN RAISES,
+        # matching the batch engine's ANSI penny cast (nanvals edge
+        # axis — silently treating NaN as missing broke the
+        # stream==batch parity contract).
+        vals, isnull = map(list, fields)
+        rows = {c: [] for c in ("ewma_num", "ewma_den", "ewma100")}
+        for v, vn in zip(raw, nulls_jvm):
+            if (v is not None) and v != v and not vn:
+                raise ValueError(
+                    "stream_ewma: NaN value is not representable in "
+                    "penny fixed point (the batch engine raises "
+                    "CAST_OVERFLOW; NULL is the missing-value spelling)"
+                )
+            if vn or v is None or v != v:
+                vals.append(0)
+                isnull.append(True)
+            else:
+                # round half away from zero, matching Spark F.round
+                x = float(v) * 100
+                vals.append(int(x + 0.5) if x >= 0 else -int(-x + 0.5))
+                isnull.append(False)
+            vals, isnull = vals[-k1:], isnull[-k1:]
+            num = den = 0
+            for j in range(len(vals)):
+                w = 1 << (lookback - j)
+                idx = len(vals) - 1 - j
+                if not isnull[idx]:
+                    num += vals[idx] * w
+                    den += w
+            rows["ewma_num"].append(num)
+            rows["ewma_den"].append(den)
+            rows["ewma100"].append(num / den if den > 0 else None)
+        return (vals, isnull), {"ts_us": ts_us, "tb": tbs, **rows}
 
-    return (
-        stream.select(
-            F.col(key_col).alias("key"),
-            F.col(time_col).alias(time_col),
-            F.col(value_col).alias(value_col),
-            F.col(tiebreak_col).alias(tiebreak_col),
-            F.col(value_col).isNull().alias("__vnull"),
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.NoTimeout
-                if timeout_minutes is None
-                else GroupStateTimeout.ProcessingTimeTimeout
-            ),
-        )
+    return _keyed_fold(
+        stream,
+        op="stream_ewma",
+        key_col=key_col,
+        time_col=time_col,
+        tiebreak_col=tiebreak_col,
+        cols={value_col: object, "__vnull": bool},
+        derived={"__vnull": F.col(value_col).isNull()},
+        out_schema=(
+            "key long, ts_us long, tb long, "
+            "ewma_num long, ewma_den long, ewma100 double"
+        ),
+        state_schema=(
+            "vals array<long>, nulls array<boolean>, f_ts long, f_tb long"
+        ),
+        init=([], []),
+        fold=fold,
+        late_policy=late_policy,
+        strict=strict,
+        timeout_minutes=timeout_minutes,
     )
 
 
@@ -909,78 +852,34 @@ def stream_running_distinct(
     each batch; the in-order arrival contract across batches matches
     :func:`stream_trailing_agg`.
 
-    **BREAKING (r11):** ``tiebreak_col`` is now assumed UNIQUE per key
-    and exact re-delivery of the last-folded (ts, tiebreak) raises a
-    named error (or drops) instead of silently re-folding — see
-    :func:`stream_ewma` for the full contract; the state schema is
-    unchanged, so pre-r11 checkpoints pick up the stricter semantics
-    silently after upgrade.  Pass ``strict=False`` for legitimately
-    non-unique tiebreaks (restores the r10 equality-folding frontier).
+    ``tiebreak_col`` is assumed UNIQUE per key: exact re-delivery of
+    the last-folded (ts, tiebreak) raises a named error (or drops)
+    instead of silently re-folding — see :func:`stream_ewma` for the
+    full contract.  Pass ``strict=False`` for legitimately non-unique
+    tiebreaks (the equality-folding frontier).
     """
-    out_schema = StructType(
-        [
-            StructField("key", LongType()),
-            StructField("ts_us", LongType()),
-            StructField("tb", LongType()),
-            StructField("dcum", LongType()),
-        ]
-    )
-    state_schema = "seen array<string>, f_ts long, f_tb long"
 
-    def fn(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            seen: set[str] = set(state.get[0])
-            f_ts, f_tb = state.get[1], state.get[2]
-        else:
-            seen, f_ts, f_tb = set(), -(1 << 62), -(1 << 62)
-        rows = {c: [] for c in ("key", "ts_us", "tb", "dcum")}
-        pdf = _concat_in_order(pdfs, [time_col, tiebreak_col])
-        if pdf is not None:
-            ts_us = (pdf[time_col].astype("int64") // 1000).to_numpy()
-            tbs = pdf[tiebreak_col].to_numpy()
-            vals = pdf[value_col].to_numpy(dtype=object)
-            mask, (f_ts, f_tb) = _frontier_guard(
-                ts_us, tbs, (f_ts, f_tb),
-                "stream_running_distinct", late_policy,
-                strict=strict,  # unique tiebreak: re-delivery is loud
-            )
-            if mask is not None:
-                ts_us, tbs, vals = ts_us[mask], tbs[mask], vals[mask]
-            for t, tb, v in zip(ts_us, tbs, vals):
-                if v is not None and v == v:  # skip None/NaN
-                    seen.add(str(v))
-                rows["key"].append(key[0])
-                rows["ts_us"].append(int(t))
-                rows["tb"].append(int(tb))
-                rows["dcum"].append(len(seen))
-        state.update((sorted(seen), int(f_ts), int(f_tb)))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        if rows["key"]:
-            yield pd.DataFrame(rows)
+    def fold(fields, ts_us, tbs, vals):
+        seen = set(fields[0])
+        dcum = []
+        for v in vals:
+            if v is not None and v == v:  # skip None/NaN
+                seen.add(str(v))
+            dcum.append(len(seen))
+        return (sorted(seen),), {"ts_us": ts_us, "tb": tbs, "dcum": dcum}
 
-    return (
-        stream.select(
-            F.col(key_col).alias("key"),
-            F.col(time_col).alias(time_col),
-            F.col(value_col).alias(value_col),
-            F.col(tiebreak_col).alias(tiebreak_col),
-        )
-        .groupBy("key")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.NoTimeout
-                if timeout_minutes is None
-                else GroupStateTimeout.ProcessingTimeTimeout
-            ),
-        )
+    return _keyed_fold(
+        stream,
+        op="stream_running_distinct",
+        key_col=key_col,
+        time_col=time_col,
+        tiebreak_col=tiebreak_col,
+        cols={value_col: object},
+        out_schema="key long, ts_us long, tb long, dcum long",
+        state_schema="seen array<string>, f_ts long, f_tb long",
+        init=([],),
+        fold=fold,
+        late_policy=late_policy,
+        strict=strict,
+        timeout_minutes=timeout_minutes,
     )
