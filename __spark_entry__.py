@@ -2978,12 +2978,12 @@ def _q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Distributed BPE vocabulary training: one corpus pass builds the
-    # word-count vocabulary; every merge round then runs on the (small)
-    # vocab frame — one hash agg + a 1-row argmax collect per round, the
-    # graph.py bounded-convergence pattern.  Greedy merges via the
-    # wrapped-string replace trick — engine-portable, so the merge table
-    # hash-matches the oracle's unrolled-CTE mirror.
+    # BPE vocabulary training: one corpus pass builds the word-count
+    # vocabulary; the merge rounds then run on the vocabulary alone — on
+    # the driver while it is under bpe_train's bound (the fixtures' 31-word
+    # vocabulary is), else as one hash agg + a 1-row argmax collect per
+    # round on the executors.  The merge table hash-matches the oracle's
+    # unrolled-CTE mirror on both routes.
     from tidier_spark.operators.bpe import bpe_train
 
     docs = read_table(spark, sf_dir, "documents")
@@ -2995,8 +2995,8 @@ def _q_bpe_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-wide (a map-only replace chain per token — no UDF, no
     # shuffle) and count subword tokens per document.  Training goes
     # through bpe_train_local (one word-count pass, driver-side greedy
-    # rounds — property-pinned byte-identical to bpe_train, which the
-    # bpe_train entry keeps as the distributed proof).
+    # rounds — property-pinned byte-identical to bpe_train on both of
+    # its routes).
     from tidier_spark.operators.bpe import bpe_apply, bpe_train_local
 
     docs = read_table(spark, sf_dir, "documents")
@@ -3466,8 +3466,7 @@ def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table via bpe_encode_sql(train_table=...)) through
     # bpe_train_local: one distributed word-count pass, driver-side
     # greedy rounds (byte-identical to bpe_train, property-pinned),
-    # alphabet derived from the same collected vocab.  bpe_train stays
-    # the distributed full-corpus training proof.  Out-of-sample
+    # alphabet derived from the same collected vocab.  Out-of-sample
     # characters encode to the reserved UNK id 0 on both engines.
     from tidier_spark.operators.bpe import bpe_encode, bpe_train_local
 

@@ -2,11 +2,11 @@
 
 Writes one `<query>_<suffix>.txt` per entry, built with the SAME session
 config as bench.py so the captured plan is the benched plan.  Expression
-ids (`#123`), exchange ids and RDD ids are written as `#N`, `plan_id=N`
-and `RDD[N]`, so two dumps of the same plans (say, a parent checkout and
-a change) compare with a plain `diff -r`.  Also prints a one-line
-plan-health summary per query (Exchange count, python-eval nodes, join
-kinds) to stdout.
+ids (`#123`), exchange ids, RDD ids and lambda-variable counters are
+written as `#N`, `plan_id=N`, `RDD[N]` and `lambda x#N`, so two dumps
+of the same plans (say, a parent checkout and a change) compare with
+a plain `diff -r`.  Also prints a one-line plan-health summary per query
+(Exchange count, python-eval nodes, join kinds) to stdout.
 
     python scripts/explain_all.py <out_dir> <suffix> [query ...]
 
@@ -23,10 +23,12 @@ import sys
 
 sys.path.insert(0, ".")
 
-# expression ids (`l_orderkey#123L`), exchange ids (`[plan_id=26645]`) and
-# RDD ids (`MapPartitionsRDD[848]`) count up through a session, so dumps
-# normalize them to `#N`, `plan_id=N` and `RDD[N]`
+# expression ids (`l_orderkey#123L`), exchange ids (`[plan_id=26645]`),
+# RDD ids (`MapPartitionsRDD[848]`) and the fresh-name suffix of a Python
+# lambda's variables (`lambda x_12#5`) count up through a session, so
+# dumps normalize them to `#N`, `plan_id=N`, `RDD[N]` and `lambda x#N`
 _SESSION_IDS = (
+    (re.compile(r"(lambda [A-Za-z]+)_\d+#"), r"\1#"),
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),

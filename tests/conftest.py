@@ -37,3 +37,16 @@ def tables(spark, sf_dir):
     from tidier_spark.sources import load_star
 
     return load_star(spark, sf_dir)
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def bpe_route(request, monkeypatch) -> str:
+    """Run ``bpe_train`` on one of its two routes: the driver merge loop
+    (the module's own bound, which every test vocabulary is under) or the
+    distributed rounds (a bound below any vocabulary size, so even an
+    empty vocabulary takes them)."""
+    from tidier_spark.operators import bpe
+
+    if request.param == "distributed":
+        monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", -1)
+    return request.param

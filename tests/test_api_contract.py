@@ -208,7 +208,9 @@ def _mod_for(case_id: str):
     import tidier_spark.operators.temporal as tp
     import tidier_spark.operators.text as tx
 
-    for prefix, mod in (
+    # the longest matching prefix wins: "shingles_n0" is text.shingles,
+    # not the dedup "shingle" family
+    prefixes = (
         ("rsd", sk), ("hll", sk), ("theta", sk), ("kll", sk),
         ("exact_q", sk), ("approx_q", sk), ("topk", sk),
         ("minhash", dd), ("shingle", dd), ("ngram", dd), ("emb", dd),
@@ -223,10 +225,11 @@ def _mod_for(case_id: str):
         ("funnel", tp), ("asof", tp),
         ("shingles", tx),
         ("pagerank", gr), ("cc_", gr),
-    ):
-        if case_id.startswith(prefix):
-            return mod
-    raise KeyError(case_id)
+    )
+    hits = [(len(p), mod) for p, mod in prefixes if case_id.startswith(p)]
+    if not hits:
+        raise KeyError(case_id)
+    return max(hits, key=lambda h: h[0])[1]
 
 
 @pytest.mark.parametrize(

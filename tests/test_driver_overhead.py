@@ -4,7 +4,10 @@
   crosses py4j as ONE literal: no per-element ``F.lit`` comprehension
   under ``tidier_spark/operators/``, and the py4j call count of building
   ``kmeans_fit`` / ``bpe_encode`` does not grow with the model.
-* ``bpe_train`` returns a JVM-local merge table (no pickled-row RDD).
+* ``bpe_train`` returns a JVM-local merge table (no pickled-row RDD) and
+  releases its checkpoints; under its driver bound the call launches the
+  same Spark jobs whatever ``n_merges`` is, and its driver loop and
+  distributed rounds agree on edge cases and just above the bound.
 * ``near_dup_pairs`` / ``dedup_against`` verify candidates from
   per-document shingle arrays; a brute-force Python Jaccard over the same
   candidates pins the result, including empty / NULL / too-short texts,
@@ -124,7 +127,7 @@ def test_bpe_encode_py4j_calls_do_not_grow_with_vocab(spark):
     assert abs(counts[36] - counts[3]) <= 20, counts
 
 
-def test_bpe_train_merge_table_has_no_python_rdd(spark):
+def test_bpe_train_merge_table_has_no_python_rdd(spark, bpe_route):
     docs = spark.createDataFrame(
         [(1, "lower lowest newer newest"), (2, "low new wider")],
         "doc_id long, text string",
@@ -135,6 +138,83 @@ def test_bpe_train_merge_table_has_no_python_rdd(spark):
     assert merges.columns == ["rank", "left_sym", "right_sym", "merged", "pair_n"]
     local, _ = bpe.bpe_train_local(docs, n_merges=3)
     assert [tuple(r) for r in merges.collect()] == local
+
+
+def _merges(df, n_merges: int) -> list[tuple]:
+    out = bpe.bpe_train(df, n_merges=n_merges)
+    want = df.sparkSession.createDataFrame([], bpe.MERGE_SCHEMA).schema
+    assert out.schema.simpleString() == want.simpleString()
+    return [tuple(r) for r in out.collect()]
+
+
+@pytest.mark.parametrize(
+    "texts,n_merges,want",
+    [
+        pytest.param([], 3, [], id="empty"),
+        pytest.param([None, None], 3, [], id="all_null"),
+        pytest.param(["a b c", "b a"], 3, [], id="one_char_words"),
+        pytest.param(
+            ["ab ab", "abc"], 5,
+            [(1, "a", "b", "ab", 3), (2, "ab", "c", "abc", 1)],
+            id="past_pair_exhaustion",
+        ),
+        # (a, a) occurs twice in "aaa" but merges once, left to right
+        pytest.param(
+            ["aaa"], 3,
+            [(1, "a", "a", "aa", 2), (2, "aa", "a", "aaa", 1)],
+            id="overlapping_pairs",
+        ),
+    ],
+)
+def test_bpe_train_edge_cases(spark, bpe_route, texts, n_merges, want):
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    assert _merges(df, n_merges) == want
+
+
+def test_bpe_train_routes_agree_just_above_the_bound(spark, monkeypatch):
+    rng = random.Random(11)
+    words = [
+        "".join(rng.choice("abcd") for _ in range(rng.randint(2, 7)))
+        for _ in range(300)
+    ]
+    df = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
+    n_vocab = len(set(words))
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", n_vocab)
+    driver = _merges(df, 8)
+    monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", n_vocab - 1)
+    assert _merges(df, 8) == driver
+    assert len(driver) == 8
+
+
+def test_bpe_train_releases_its_checkpoints(spark, bpe_route):
+    docs = spark.createDataFrame(
+        [(1, "lower lowest newer newest"), (2, "low new wider")],
+        "doc_id long, text string",
+    )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    # 9 rounds: the distributed route also checkpoints its 8th round
+    bpe.bpe_train(docs, n_merges=9).collect()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+def test_bpe_train_jobs_do_not_grow_with_merges(tables):
+    """The vocabulary fits the driver bound, so the rounds launch no Spark
+    job: the call costs the same jobs at 2 merges as at 12."""
+    sc = tables["documents"].sparkSession.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def last_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)  # newest first
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    counts = {}
+    for n_merges in (2, 12):
+        j0 = last_job()
+        bpe.bpe_train(tables["documents"], n_merges=n_merges)
+        counts[n_merges] = last_job() - j0
+    assert counts[2] == counts[12], counts
 
 
 # --- the Jaccard verify against a brute-force reference ---------------------

@@ -2557,11 +2557,11 @@ def test_dedup_against_precomputed_bands_and_ids_only(tables):
     assert ids == sorted(r[0] for r in want)
 
 
-def test_bpe_train_local_equals_distributed(tables):
+def test_bpe_train_local_equals_distributed(tables, bpe_route):
     """bpe_train_local (one word-count pass + driver-side greedy rounds)
-    must return byte-identical merges to the distributed bpe_train, and
-    its base_chars must equal corpus_chars — it is the same Sennrich
-    greedy with the Spark-job-per-round overhead removed."""
+    must return byte-identical merges to bpe_train on both of its routes
+    (driver loop and distributed rounds), and its base_chars must equal
+    corpus_chars — it is the same Sennrich greedy."""
     import pytest as _pytest
 
     from tidier_spark.operators.bpe import (

@@ -237,7 +237,7 @@ def test_update_rollup_any_split_matches_full(rows, split, spark):
     ),
     n_merges=st.integers(1, 3),
 )
-def test_bpe_train_matches_python_reference(words, n_merges, spark):
+def test_bpe_train_matches_python_reference(words, n_merges, spark, bpe_route):
     # independent pure-Python greedy BPE (Sennrich): pair counts weighted
     # by word frequency, (count desc, pair asc) argmax, left-to-right
     # greedy merge — the wrapped-string replace lowering must match it
@@ -392,7 +392,7 @@ def test_excise_regions_matches_python_reference(docs, L, m, spark):
     ),
     n_merges=st.integers(1, 3),
 )
-def test_bpe_encode_matches_python_reference(texts, n_merges, spark):
+def test_bpe_encode_matches_python_reference(texts, n_merges, spark, bpe_route):
     # full train→encode differential: Spark's map-literal id sequences
     # must equal an independent pure-Python pipeline (greedy leftmost
     # merge per rank, sorted-chars-then-ranks vocabulary)

@@ -7,15 +7,25 @@ scaling fact of the algorithm: after ONE corpus-wide word count, every
 merge iteration runs on the VOCABULARY (|V| distinct words, weighted by
 their corpus counts), never on the corpus again.  At 100 TB the corpus
 pass is a single explode + hash aggregate; the iterations then touch a
-frame that is orders of magnitude smaller (vocabulary of a 100 TB crawl is
-~10⁷–10⁸ rows — executor-resident), with one driver-collected scalar (the
-argmax pair) per round, exactly the bounded-convergence-check pattern of
-``operators/graph.py``.
+frame that is orders of magnitude smaller.  :func:`bpe_train` picks where
+they run from the vocabulary's size:
 
-Engine-portable greedy merging: a word's current segmentation is kept as a
-STRING of wrapped symbols — every symbol ``x`` is stored as ``␟x␟``
-(U+001F, can't occur in tokens), so symbols ``a·b·c`` serialize to
-``␟a␟␟b␟␟c␟``.  Applying merge (a, b) is then one ``replace(s, ␟a␟␟b␟,
+* up to ``_DRIVER_VOCAB_ROWS`` (50k) distinct words, the vocabulary is
+  collected and the greedy rounds run in Python (:func:`_greedy_merges`)
+  — the single-machine merge loop production tokenizer trainers use,
+  since a Spark query per round costs more than the round's work;
+* above it (a 100 TB crawl's vocabulary is ~10⁷–10⁸ rows —
+  executor-resident), each round is a Spark query over the vocabulary
+  frame with one driver-collected scalar (the argmax pair), the
+  bounded-convergence-check pattern of ``operators/graph.py``.
+
+Both routes are the same Sennrich greedy and return the same merges.
+
+Engine-portable greedy merging (the distributed rounds, :func:`bpe_apply`,
+:func:`bpe_encode` and the DuckDB mirrors): a word's current segmentation
+is kept as a STRING of wrapped symbols — every symbol ``x`` is stored as
+``␟x␟`` (U+001F, can't occur in tokens), so symbols ``a·b·c`` serialize
+to ``␟a␟␟b␟␟c␟``.  Applying merge (a, b) is then one ``replace(s, ␟a␟␟b␟,
 ␟ab␟)``: string replace is non-overlapping left-to-right in both Spark and
 DuckDB, which IS greedy BPE merge order, and the double-delimiter wrapping
 means adjacent matches share no characters (``a a b b`` merges both pairs;
@@ -46,6 +56,7 @@ SEP = "\x1f"
 MERGE_SCHEMA = (
     "rank long, left_sym string, right_sym string, merged string, pair_n long"
 )
+_MERGE_FIELDS = [f.split()[0] for f in MERGE_SCHEMA.split(",")]
 
 
 def _wrapped_chars(col: F.Column) -> F.Column:
@@ -76,135 +87,47 @@ def _adjacent_pairs(q: F.Column) -> F.Column:
     ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
 
 
-def bpe_train(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 4,
-) -> DataFrame:
-    """Learn ``n_merges`` BPE merges over the corpus; returns the merge
-    table ``(rank, left_sym, right_sym, merged, pair_n)`` — the trained
-    artifact ``bpe_apply`` consumes.
+# Vocabularies of at most this many distinct words run the greedy merge
+# rounds on the driver; larger ones run them as Spark queries over the
+# checkpointed vocabulary.  Measured on local[4] (4 vCPUs, library
+# session defaults) with n_merges=6 over synthetic vocabularies of
+# 3-12-letter words, median of 3: the driver route (collect + rounds)
+# took 0.35 s at 10k words, 2.9 s at 100k and 9.8 s at 400k; the
+# distributed rounds took 2.2 s, 6.8 s and 19.7 s.  On 4 cores the
+# driver wins at every size, so the crossover lies past 400k there.
+# More executor cores shrink the distributed rounds' per-word cost but
+# not their ~0.3 s fixed cost per round, while the driver loop costs
+# ~4 us per word per round; the bound sits under 0.3 s / 4 us = 75k
+# words, where the driver loop wins on any cluster size.
+_DRIVER_VOCAB_ROWS = 50_000
 
-    Per round: adjacent-symbol pairs of every vocabulary word (weighted by
-    word count, overlapping pairs counted — the standard implementation),
-    ONE hash aggregate, argmax with total (count desc, pair asc) ordering,
-    then a map-only ``replace`` applies the merge.  The vocabulary frame is
-    persisted once and localCheckpoint'd per round so the plan stays O(1)
-    across iterations.
-    """
+
+def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
+    """``(w, n)``: the one corpus pass, token explode + hash aggregate.
+
+    The tokenize+explode map side serializes on an under-partitioned
+    scan, so it is fanned out (a guarded no-op at real scale)."""
     from .text import _fan_out, tokens
 
-    spark = df.sparkSession
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    # the tokenize+explode map side of the vocab pass serializes on an
-    # under-partitioned scan (r12; guarded no-op at real scale)
-    words = (
+    return (
         _fan_out(df).select(F.explode(tokens(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    cur = words.select("w", "n", _wrapped_chars(F.col("w")).alias("s"))
-    cur = cur.localCheckpoint()
-    # the round's expressions are round-independent: build them once, so
-    # a round costs only its DataFrame calls and the two merge literals
-    pair_cols = [
-        F.col("n"), F.explode(_adjacent_pairs(_symbols(F.col("s")))).alias("p")
-    ]
-    keys = [F.col("p.a").alias("a"), F.col("p.b").alias("b")]
-    total = F.sum("n").alias("pn")
-    order = [F.desc("pn"), F.asc("a"), F.asc("b")]
-    merges: list[dict] = []
-    for r in range(n_merges):
-        best = (
-            cur.select(*pair_cols)
-            .groupBy(*keys)
-            .agg(total)
-            .orderBy(*order)
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b, pn = best[0].a, best[0].b, best[0].pn
-        merges.append(
-            {"rank": r + 1, "left_sym": a, "right_sym": b, "merged": a + b,
-             "pair_n": pn}
-        )
-        pat = F.lit(f"{SEP}{a}{SEP}{SEP}{b}{SEP}")
-        rep = F.lit(f"{SEP}{a}{b}{SEP}")
-        cur = cur.withColumn("s", F.replace(F.col("s"), pat, rep))
-        # checkpoint only every 8th round: a lazy replace-CHAIN re-executed
-        # from the checkpointed base is cheaper than materializing the
-        # vocab frame per round (string replaces are narrow column ops);
-        # the cadence bounds both lineage depth and re-execution cost at
-        # high merge counts.
-        if (r + 1) % 8 == 0:
-            cur = cur.localCheckpoint()
-    # the merge table as one folded literal under a one-row range: a JVM
-    # local plan whatever the session's Arrow setting (createDataFrame
-    # over Python rows is a pickled-row RDD that starts a Python worker)
-    return spark.range(1, numPartitions=1).select(
-        F.inline(json_lit(merges, f"array<struct<{MERGE_SCHEMA}>>"))
-    )
 
 
-def bpe_train_local(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 4,
-    max_vocab_rows: int = 2_000_000,
-) -> tuple[list[tuple[int, str, str, str, int]], list[str]]:
-    """BPE training with DRIVER-SIDE merge rounds: ONE distributed pass
-    builds the word-count vocabulary (the only corpus-sized work), the
-    vocabulary is collected, and the greedy rounds run in Python — the
-    shape every production tokenizer trainer uses (corpus → word counts
-    → single-machine merge loop), because each round is an inherently
-    sequential argmax over a vocabulary-sized frame and paying a Spark
-    job per round is pure overhead once the vocab fits in memory.
-
-    Returns ``(merges, base_chars)`` — byte-identical to
-    ``(bpe_train(df, ...).collect(), corpus_chars(df))`` (same Sennrich
-    greedy: pair counts weighted by word frequency, (count desc, pair
-    asc) argmax, left-to-right non-overlapping merge; pinned by
-    ``test_bpe_train_local_equals_distributed``), with the alphabet
-    derived from the same collected vocab for free.
-
-    The driver boundary is ENFORCED: a vocabulary above
-    ``max_vocab_rows`` (default 2M words ≈ tens of MB) raises with a
-    routing message to :func:`bpe_train`, whose per-round Spark
-    aggregation never collects more than the 1-row argmax.
-    """
-    from .text import _fan_out, tokens
-
-    if n_merges < 1:
-        raise ValueError("n_merges must be >= 1")
-    # fan out the tokenize+explode map side of the one distributed pass
-    # (r12; guarded no-op at real scale)
-    rows = (
-        _fan_out(df).select(F.explode(tokens(text_col)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .limit(max_vocab_rows + 1)
-        .collect()
-    )
-    # The over-cap `rows` slice is an UNORDERED sample (limit on an
-    # unordered aggregate) and must never be used as data — the only
-    # permitted action past the cap is the raise below.
-    if len(rows) > max_vocab_rows:
-        raise ValueError(
-            f"bpe_train_local collects the word-count vocabulary to the "
-            f"driver; corpus has > max_vocab_rows={max_vocab_rows:,} "
-            "distinct words. Use bpe_train — its per-round aggregation "
-            "stays distributed and only the 1-row argmax reaches the "
-            "driver — or raise max_vocab_rows explicitly."
-        )
-    wc = {r["w"]: r["n"] for r in rows}
-    seqs = {w: list(w) for w in wc}
+def _greedy_merges(
+    word_counts: dict[str, int], n_merges: int
+) -> list[tuple[int, str, str, str, int]]:
+    """Sennrich greedy BPE over a word-count dict: pair counts weighted by
+    word frequency (overlapping pairs counted), (count desc, pair asc)
+    argmax, then a left-to-right non-overlapping merge in every word.
+    Stops early when no word has two symbols left."""
+    seqs = {w: list(w) for w in word_counts}
     merges: list[tuple[int, str, str, str, int]] = []
     for r in range(n_merges):
         pc: dict[tuple[str, str], int] = {}
-        for w, n in wc.items():
+        for w, n in word_counts.items():
             s = seqs[w]
             for i in range(len(s) - 1):
                 p = (s[i], s[i + 1])
@@ -212,8 +135,8 @@ def bpe_train_local(
         if not pc:
             break
         (a, b), pn = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((r + 1, a, b, a + b, pn))
         ab = a + b
+        merges.append((r + 1, a, b, ab, pn))
         for w, s in seqs.items():
             out, i = [], 0
             while i < len(s):
@@ -224,8 +147,159 @@ def bpe_train_local(
                     out.append(s[i])
                     i += 1
             seqs[w] = out
+    return merges
+
+
+def _distributed_merges(
+    cur: DataFrame, n_merges: int
+) -> list[tuple[int, str, str, str, int]]:
+    """The greedy rounds as Spark queries over the ``(w, n, s)`` vocabulary
+    frame: per round one hash aggregate of adjacent-symbol pairs and a
+    1-row argmax collect, then a map-only ``replace`` applies the merge.
+    The round checkpoints it makes are released before it returns."""
+    # the round's expressions are round-independent: build them once, so
+    # a round costs only its DataFrame calls and the two merge literals
+    pair_cols = [
+        F.col("n"), F.explode(_adjacent_pairs(_symbols(F.col("s")))).alias("p")
+    ]
+    keys = [F.col("p.a").alias("a"), F.col("p.b").alias("b")]
+    total = F.sum("n").alias("pn")
+    order = [F.desc("pn"), F.asc("a"), F.asc("b")]
+    merges: list[tuple[int, str, str, str, int]] = []
+    checkpoints: list[DataFrame] = []
+    try:
+        for r in range(n_merges):
+            best = (
+                cur.select(*pair_cols)
+                .groupBy(*keys)
+                .agg(total)
+                .orderBy(*order)
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            a, b, pn = best[0].a, best[0].b, best[0].pn
+            merges.append((r + 1, a, b, a + b, pn))
+            pat = F.lit(f"{SEP}{a}{SEP}{SEP}{b}{SEP}")
+            rep = F.lit(f"{SEP}{a}{b}{SEP}")
+            cur = cur.withColumn("s", F.replace(F.col("s"), pat, rep))
+            # checkpoint only every 8th round: a lazy replace-CHAIN
+            # re-executed from the checkpointed base is cheaper than
+            # materializing the vocab frame per round (string replaces are
+            # narrow column ops); the cadence bounds both lineage depth and
+            # re-execution cost at high merge counts.
+            if (r + 1) % 8 == 0:
+                cur = cur.localCheckpoint()
+                checkpoints.append(cur)
+    finally:
+        for c in checkpoints:
+            _release(c)
+    return merges
+
+
+def _release(checkpoint: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint`` frame.  ``unpersist()`` on
+    the frame itself is a no-op (the frame is not cached; its plan is a
+    LogicalRDD over the checkpointed RDD), so the RDD is unpersisted."""
+    checkpoint._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def bpe_train(
+    df: DataFrame,
+    text_col: str = "text",
+    n_merges: int = 4,
+) -> DataFrame:
+    """Learn ``n_merges`` BPE merges over the corpus; returns the merge
+    table ``(rank, left_sym, right_sym, merged, pair_n)`` — the trained
+    artifact ``bpe_apply`` consumes.
+
+    The corpus is read once: one word count, eagerly checkpointed as the
+    ``(w, n, s)`` vocabulary.  Then the rounds run on one of two routes,
+    chosen by the vocabulary's size; both are the same Sennrich greedy
+    and return the same merges:
+
+    * **driver** — at most ``_DRIVER_VOCAB_ROWS`` distinct words: the
+      ``(w, n)`` rows are collected (never more than the bound + 1) and
+      the rounds run in Python, so the call costs the same few Spark jobs
+      whatever ``n_merges`` is.
+    * **distributed** — a larger vocabulary stays on the executors.  Per
+      round: adjacent-symbol pairs of every word (weighted by word count,
+      overlapping pairs counted), ONE hash aggregate, argmax with total
+      (count desc, pair asc) ordering, then a map-only ``replace``
+      applies the merge; every 8th round is localCheckpoint'd so the
+      plan stays O(1) across iterations.
+
+    The result is a literal, so every checkpoint is released before the
+    call returns.
+    """
+    spark = df.sparkSession
+    if n_merges < 1:
+        raise ValueError("n_merges must be >= 1")
+    vocab = (
+        _word_counts(df, text_col)
+        .select("w", "n", _wrapped_chars(F.col("w")).alias("s"))
+        .localCheckpoint()
+    )
+    try:
+        rows = vocab.select("w", "n").limit(_DRIVER_VOCAB_ROWS + 1).collect()
+        if len(rows) <= _DRIVER_VOCAB_ROWS:
+            merges = _greedy_merges({r.w: r.n for r in rows}, n_merges)
+        else:
+            merges = _distributed_merges(vocab, n_merges)
+    finally:
+        _release(vocab)
+    # the merge table as one folded literal under a one-row range: a JVM
+    # local plan whatever the session's Arrow setting (createDataFrame
+    # over Python rows is a pickled-row RDD that starts a Python worker)
+    table = [dict(zip(_MERGE_FIELDS, m)) for m in merges]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(json_lit(table, f"array<struct<{MERGE_SCHEMA}>>"))
+    )
+
+
+def bpe_train_local(
+    df: DataFrame,
+    text_col: str = "text",
+    n_merges: int = 4,
+    max_vocab_rows: int = 2_000_000,
+) -> tuple[list[tuple[int, str, str, str, int]], list[str]]:
+    """BPE training with DRIVER-SIDE merge rounds that returns Python
+    values: ONE distributed pass builds the word-count vocabulary (the
+    only corpus-sized work), the vocabulary is collected, and the greedy
+    rounds run in Python — the shape every production tokenizer trainer
+    uses (corpus → word counts → single-machine merge loop).  It runs the
+    same loop as :func:`bpe_train`'s driver route, but with a caller-set
+    bound and no Spark frame around the result.
+
+    Returns ``(merges, base_chars)`` — byte-identical to
+    ``(bpe_train(df, ...).collect(), corpus_chars(df))`` (pinned by
+    ``test_bpe_train_local_equals_distributed`` on both of
+    ``bpe_train``'s routes), with the alphabet derived from the same
+    collected vocab for free.
+
+    The driver boundary is ENFORCED: a vocabulary above
+    ``max_vocab_rows`` (default 2M words ≈ tens of MB) raises with a
+    routing message to :func:`bpe_train`, whose distributed route never
+    collects more than the 1-row argmax per round.
+    """
+    if n_merges < 1:
+        raise ValueError("n_merges must be >= 1")
+    rows = _word_counts(df, text_col).limit(max_vocab_rows + 1).collect()
+    # The over-cap `rows` slice is an UNORDERED sample (limit on an
+    # unordered aggregate) and must never be used as data — the only
+    # permitted action past the cap is the raise below.
+    if len(rows) > max_vocab_rows:
+        raise ValueError(
+            f"bpe_train_local collects the word-count vocabulary to the "
+            f"driver; corpus has > max_vocab_rows={max_vocab_rows:,} "
+            "distinct words. Use bpe_train — above its driver bound the "
+            "rounds stay distributed and only the 1-row argmax reaches "
+            "the driver — or raise max_vocab_rows explicitly."
+        )
+    wc = {r["w"]: r["n"] for r in rows}
     base_chars = sorted({c for w in wc for c in w})
-    return merges, base_chars
+    return _greedy_merges(wc, n_merges), base_chars
 
 
 def bpe_apply(
@@ -243,8 +317,8 @@ def bpe_apply(
 
     The replace-chain is the hot expression; an under-partitioned file
     scan is :func:`~tidier_spark.operators.text._fan_out`-repartitioned so
-    it uses every core instead of serializing (r12 — measured 4.7 → 1.2 s
-    for the bpe_subwords entry at sf0.1; no-op at real scale).
+    it uses every core instead of serializing (measured 4.7 → 1.2 s for
+    the bpe_subwords entry at sf0.1; no-op at real scale).
     """
     from .text import _fan_out, tokens
 
@@ -425,7 +499,7 @@ def bpe_encode(
     from .text import _fan_out, tokens
 
     # the segment replace-chain serializes on an under-partitioned scan
-    # (r12 — measured 2.4 -> 0.7 s for the bpe_encode entry at sf0.1)
+    # (measured 2.4 -> 0.7 s for the bpe_encode entry at sf0.1)
     df = _fan_out(df)
 
     def segment(word: F.Column) -> F.Column:

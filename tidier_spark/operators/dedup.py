@@ -33,7 +33,6 @@ from .text import (
     fingerprint_sql,
     hash60,
     hash60_sql,
-    shingles,
     shingles_sql,
 )
 
@@ -63,7 +62,8 @@ __all__ = [
     "excise_duplicate_regions_sql",
 ]
 
-# _fan_out moved to text.py (r12) — re-exported above for existing callers.
+# _fan_out lives in text.py with the map-only text operators; the import
+# above keeps ``dedup._fan_out`` working for existing callers.
 
 
 # --- exact dedup -----------------------------------------------------------
@@ -128,10 +128,13 @@ def _distinct_shingles(
 
 
 def _minhash_aggs(k: int) -> list:
+    """The k seeded MinHash aggregates over a ``shingle`` column.  Written
+    as SQL text: one parse per aggregate instead of one py4j command per
+    expression node."""
     if k < 1:
         raise ValueError(f"minhash_signatures: k must be >= 1, got {k}")
     return [
-        F.min(F.md5(F.concat(F.lit(f"{seed}|"), F.col("shingle")))).alias(f"mh_{seed}")
+        F.expr(f"min(md5(concat('{seed}|', shingle))) AS mh_{seed}")
         for seed in range(k)
     ]
 
@@ -188,23 +191,22 @@ def _jaccard_verify(
     A document id fed by several rows can repeat a shingle; those pairs
     count shared shingles with multiplicity (Σ count_a·count_b, what a
     shingle-row equi-join counts), so duplicate ids score as the DuckDB
-    mirrors do."""
-    sa, sb = F.col("__sa"), F.col("__sb")
-    shared = F.array_intersect(sa, sb)
-    n_shared = F.when(
-        (F.size(F.array_distinct(sa)) == F.size(sa))
-        & (F.size(F.array_distinct(sb)) == F.size(sb)),
-        F.size(shared),
-    ).otherwise(
-        F.aggregate(
-            shared,
-            F.lit(0),
-            lambda acc, s: acc
-            + F.size(F.filter(sa, lambda x: x == s))
-            * F.size(F.filter(sb, lambda x: x == s)),
-        )
-    )
-    jac = (n_shared / (F.size(sa) + F.size(sb) - n_shared)).alias("jaccard")
+    mirrors do.
+
+    The score is SQL text, parsed once, instead of a Column tree built
+    node by node over py4j.  Its lambdas name their parameters ``x, y``
+    as PySpark's do, so the plan reads as the Column build's did: in the
+    fold, ``y`` is the shared shingle and each inner ``x`` an element."""
+    n_shared = """CASE
+      WHEN size(array_distinct(__sa)) = size(__sa)
+       AND size(array_distinct(__sb)) = size(__sb)
+      THEN size(array_intersect(__sa, __sb))
+      ELSE aggregate(array_intersect(__sa, __sb), 0, (x, y) -> x
+        + size(filter(__sa, x -> x = y)) * size(filter(__sb, x -> x = y)))
+    END"""
+    jac = F.expr(
+        f"({n_shared}) / (size(__sa) + size(__sb) - ({n_shared}))"
+    ).alias("jaccard")
 
     def side(docs: DataFrame, col: str, arr: str) -> DataFrame:
         return docs.select(F.col(id_col).alias(col), F.col("__sh").alias(arr))
@@ -970,8 +972,8 @@ def contamination_check(
     # the test-side shingle set feeds BOTH the hit join and the size
     # aggregate; lazy, each copy re-runs the shingle explode+distinct
     # (measured 8 corpus scans in the plan).  Persist it like every other
-    # shingle frame in this module (r12, guide §3.3) — test corpora are
-    # the small side of a decontamination scan by construction.
+    # shingle frame in this module — test corpora are the small side of a
+    # decontamination scan by construction.
     te = _distinct_shingles(test, id_col, text_col, shingle_n).persist(
         StorageLevel.MEMORY_AND_DISK
     )

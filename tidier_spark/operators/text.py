@@ -87,11 +87,11 @@ def _fan_out(df: DataFrame) -> DataFrame:
     can't feed ``defaultParallelism`` tasks.  Non-file plans (joined /
     aggregated inputs) are left alone: they already carry a shuffle.
 
-    (r12: moved here from ``dedup.py`` — the map-only text/BPE operators
+    It lives here, beside the map-only text/BPE operators, because they
     serialize the whole corpus expression tree on one core without it; at
-    real scale the guards below make it a no-op.)
+    real scale the guards below make it a no-op.
 
-    Guards (ADVICE r12):
+    Guards:
 
     * **split estimate, not file count** — one large multi-row-group file
       already scans as ``maxPartitionBytes``-sized splits, so a
@@ -439,8 +439,8 @@ def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     The input is :func:`_fan_out`-repartitioned when it is an
     under-partitioned file scan: the expression tree is CPU-heavy and
-    would otherwise serialize on one core (r12 — measured 1.22 → 0.81 s
-    for the text_analysis entry at sf0.1; a no-op at real scale).
+    would otherwise serialize on one core (measured 1.22 → 0.81 s for the
+    text_analysis entry at sf0.1; a no-op at real scale).
     """
     df = _fan_out(df)
     t = F.col("__toks")
@@ -515,8 +515,8 @@ def unigram_surprisal(
     # The frequency table fans out three ways (totals, the token join, the
     # rare gate) and Spark re-derives the full explode+groupBy lineage for
     # each copy — measured 8 corpus scans in the physical plan.  The table
-    # is VOCAB-sized (bounded at any corpus scale), so materialize it once
-    # (r12, guide §3.3): corpus tokenize passes drop 4 → 2 and every
+    # is VOCAB-sized (bounded at any corpus scale), so materialize it
+    # once: corpus tokenize passes drop 4 → 2 and every
     # downstream copy reads the materialized vocab table.  Lazy persist,
     # not eager localCheckpoint: the eager barrier measured SLOWER than
     # the redundant page-cached scans it saved (lm_bigram 1.05 lazy /
@@ -621,8 +621,8 @@ def bigram_surprisal(
     # The n-gram tables are vocab²-bounded while their lineage is a full
     # corpus tokenize + lag-window pass; un-materialized they fan out into
     # 14 corpus scans (bc feeds the doc join AND cc; freqs feeds totals AND
-    # the backoff join).  Materialize the BOUNDED tables once (r12, guide
-    # §3.3); the corpus-sized frames (tok/seq/big) stay lazy — after: two
+    # the backoff join).  Materialize the BOUNDED tables once; the
+    # corpus-sized frames (tok/seq/big) stay lazy — after: two
     # tokenize passes (bigram side + backoff side) plus one plain id scan.
     bc = big.groupBy("prev", "tok").agg(
         F.count(F.lit(1)).alias("bn")
@@ -862,7 +862,7 @@ def source_kl_drift(
     tok = df.select(F.col(source_col).alias("source"), F.explode(tokens(text_col)).alias("tok"))
     # cnts feeds the window frame AND the corpus-total fold; lazy, both
     # copies re-tokenize the corpus.  vocab·sources-bounded → materialize
-    # once (r12, guide §3.3).
+    # once.
     cnts = tok.groupBy("source", "tok").agg(
         F.count(F.lit(1)).alias("c_st")
     ).persist()
@@ -957,8 +957,8 @@ def vocab_jaccard(
     """
     # v fans out to the size table and BOTH self-join sides; lazy, each
     # copy re-runs the corpus tokenize + distinct (measured 8 corpus scans
-    # in the plan).  v is vocab·sources-bounded → materialize once (r12,
-    # guide §3.3): one tokenize pass feeds all three consumers.
+    # in the plan).  v is vocab·sources-bounded → materialize once: one
+    # tokenize pass feeds all three consumers.
     v = df.select(
         F.col(source_col).alias("source"), F.explode(tokens(text_col)).alias("tok")
     ).distinct().persist()
