@@ -84,9 +84,6 @@ RAISES = [
     ("topk_k_neg", "ev",
      lambda m, d: m.topk_merged(m.topk_partials(d, "event_type"), k=-1),
      r"k must be >= 0"),
-    ("topk_overfetch", "ev",
-     lambda m, d: m.topk_merged(m.topk_partials(d, "event_type"), k=2, overfetch=0),
-     r"overfetch must be >= 1"),
     ("hll_trail_days", "ev",
      lambda m, d: m.hll_trailing_distinct(d, "user_id", time_col="ts", window_days=0),
      r"window_days must be >= 1"),

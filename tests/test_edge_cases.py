@@ -162,18 +162,32 @@ def test_exact_quantiles_degenerate_cardinalities(spark):
     want_t = _duck(f"SELECT {qq} FROM (VALUES {vv}) t(v)")[0]
     assert got_t == want_t == (1.0, 1.5, 3.0, 4.5, 9.0)
 
-    # the coarse_groups (range-partitioned two-pass prefix) regime is
+    # NULL group keys form one group, as in GROUP BY: the coarse regime
+    # must not drop it in its offsets join
+    nullkeys = spark.createDataFrame(
+        [(None if i % 3 == 0 else str(i % 2), float(i)) for i in range(60)],
+        "g string, v double",
+    )
+    assert exact_quantiles(nullkeys, "v", [0.5], by="g").count() == 3
+
+    # the coarse_groups (range-bucketed two-pass prefix) regime is
     # bit-equal to the window regime on every case above
-    for frame in (one, allone):
+    for frame in (one, allone, nullkeys):
         a = sorted(
-            tuple(r)
-            for r in exact_quantiles(frame, "v", probs, by="g").collect()
+            (
+                tuple(r)
+                for r in exact_quantiles(frame, "v", probs, by="g").collect()
+            ),
+            key=str,
         )
         b = sorted(
-            tuple(r)
-            for r in exact_quantiles(
-                frame, "v", probs, by="g", coarse_groups=True
-            ).collect()
+            (
+                tuple(r)
+                for r in exact_quantiles(
+                    frame, "v", probs, by="g", coarse_groups=True
+                ).collect()
+            ),
+            key=str,
         )
         assert a == b
 
@@ -891,6 +905,88 @@ def test_scale_safe_cumulative_carries_offset_over_null_bucket_head(spark):
     assert run("sum") == window
     assert [window[k] for k in (5, 6, 7)] == [10.0] * 3
     assert [run("avg")[k] for k in (5, 6, 7)] == [2.5] * 3
+
+
+# One adversarial frame for every caller of the two-pass prefix scan
+# (window._prefix_scan): NULL group keys on every third row, k tied at 4
+# (a split value), NULL operands on k=5,6 (the head of the bucket after
+# that split), and split points that leave the first, a middle and the
+# last bucket empty.
+_SCAN_SPLITS = [-100.0, 4.0, 4.5, 1000.0]
+
+
+def _scan_frame(spark):
+    ks = [1, 2, 3, 4, 4, 4, 5, 6, 7, 8, 9, 10, 11, 12]
+    rows = [
+        (
+            i,
+            k,
+            None if i % 3 == 0 else "ab"[i % 2],
+            None if k in (5, 6) else float(k),
+            i % 2,
+        )
+        for i, k in enumerate(ks)
+    ]
+    return spark.createDataFrame(rows, "t long, k long, g string, v double, y int")
+
+
+def _rows(df, *cols):
+    return sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()),
+        key=lambda r: tuple((x is None, x) for x in r),
+    )
+
+
+@pytest.mark.parametrize(
+    "caller",
+    ["cumulative", "rows_frame", "grouped_rows_frame", "quantiles", "auc"],
+)
+def test_prefix_scan_callers_match_single_window(spark, monkeypatch, caller):
+    """Every scale-safe lowering built on the shared prefix scan equals
+    its single-window form on the adversarial frame; the percentile pass
+    is replaced by the static splits, so all callers see the same empty
+    and tied buckets."""
+    from pyspark.sql import Window
+
+    from tidier_spark import window
+    from tidier_spark.operators.evalmetrics import auc_exact
+    from tidier_spark.operators.sketches import exact_quantiles
+
+    df = _scan_frame(spark)
+    monkeypatch.setattr(window, "_split_points", lambda *a: list(_SCAN_SPLITS))
+    if caller == "cumulative":
+        prefix = Window.orderBy("k", "t").rowsBetween(Window.unboundedPreceding, 0)
+        for fn in ("sum", "count", "min", "max", "avg"):
+            got = window.scale_safe_cumulative(
+                df, "v", order_by=["k", "t"], out="c", fn=fn,
+                split_points=_SCAN_SPLITS,
+            )
+            want = df.withColumn("c", getattr(F, fn)("v").over(prefix))
+            assert _rows(got, "t", "c") == _rows(want, "t", "c"), fn
+    elif caller in ("rows_frame", "grouped_rows_frame"):
+        kw = dict(
+            s="sum(v)", lo="min(v)", order_by=["k", "t"], frame=(2, 1),
+            by="g" if caller == "grouped_rows_frame" else None,
+        )
+        got = mutate(df, scale_safe=True, **kw)
+        assert "__gidx" in got._jdf.queryExecution().analyzed().toString()
+        want = mutate(df, **kw)
+        assert _rows(got, "t", "s", "lo") == _rows(want, "t", "s", "lo")
+    elif caller == "quantiles":
+        for by in ("g", None):
+            probs = [0.0, 0.5, 0.9, 1.0]
+            cols = ([by] if by else []) + [f"q_{i}" for i in range(len(probs))]
+            got = exact_quantiles(df, "v", probs, by=by, coarse_groups=True)
+            want = exact_quantiles(df, "v", probs, by=by)
+            assert _rows(got, *cols) == _rows(want, *cols), by
+            assert got.count() == (3 if by else 1)
+    else:
+        cols = ("n_pos", "n_neg", "auc_num", "auc_den")
+        frame = df.withColumn("s", F.col("k").cast("double"))
+        got = auc_exact(frame, "s", "y", split_points=_SCAN_SPLITS)
+        monkeypatch.undo()
+        want = auc_exact(frame, "s", "y")
+        assert _rows(got, *cols) == _rows(want, *cols)
 
 
 def test_scale_safe_calendar_halo_covers_dst_month(spark):

@@ -59,9 +59,9 @@ def clean_corpus(
     order by id) = 1`` — ONE shuffle on already-gated rows, single pass, no
     self-join, nothing computed twice.
 
-    Parallelism note (ADVICE r12): the internal fan-out is FILE-SCAN
-    scoped — it reacts to under-split file sources only.  An in-memory /
-    post-shuffle input (``createDataFrame``, unions, joins) is left at
+    Parallelism note: the internal fan-out is FILE-SCAN scoped — it
+    reacts to under-split file sources only.  An in-memory / post-shuffle
+    input (``createDataFrame``, unions, joins) is left at
     its incoming partitioning; a caller holding a single-partition
     in-memory corpus should ``df.repartition(n)`` before the call.
     """
@@ -69,7 +69,7 @@ def clean_corpus(
 
     # Token analysis is CPU-bound; a small/single-file source scans as one
     # partition and would serialize it.  analyze_documents fans out
-    # internally (guarded _fan_out, r12) — the former unconditional
+    # internally (guarded by _fan_out) — the former unconditional
     # caller-side repartition would have been a full extra shuffle at
     # real scale, where the scan already has enough partitions.
     a = analyze_documents(df, text_col)
@@ -517,7 +517,7 @@ def shuffle_rows(
     # uniform cuts of [0, 16^32) rendered as md5-shaped hex strings, then
     # mapped through string_key_literal into the PROJECTED domain
     # _bucket_order_key compares against (hex of the ASCII bytes; raw-
-    # domain cuts land everything in 1-3 buckets — ADVICE r7, simulated).
+    # domain cuts land everything in 1-3 buckets, as a simulation showed).
     # Zero data passes to derive them, and the permutation stays a
     # single-pass-over-input plan.
     n = df.sparkSession.sparkContext.defaultParallelism
@@ -616,8 +616,8 @@ def remove_repeated_spans(
         .select("__h")
         # the bad-span set is SMALL (it is broadcast two lines down) but
         # its lineage is a full corpus span-explode; materialize it so the
-        # anti-join's broadcast build doesn't re-run that pass (r12,
-        # guide §3.3) — one span pass fewer in the physical plan.
+        # anti-join's broadcast build doesn't re-run that pass — one
+        # span pass fewer in the physical plan.
         .localCheckpoint(eager=True)
     )
     kept = spans.join(F.broadcast(bad), "__h", "left_anti")
@@ -848,7 +848,7 @@ def temperature_mix(
     HUGEINT (DuckDB): unlike budget_mix's small user-declared shares,
     ``w_s`` here is data-sized (the per-source token total for
     alpha=1.0), so ``budget · w_s`` exceeds 2^63 exactly at the
-    trillion-token scale the operator targets (ADVICE r8); 128-bit
+    trillion-token scale the operator targets; 128-bit
     intermediates are exact to 10^38 and the quotients land back in
     BIGINT (both ≤ max(budget, 1e6·thr-numerator) by construction).
 

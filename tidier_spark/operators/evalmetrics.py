@@ -15,8 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .literal import json_lit
-
 __all__ = ["auc_exact", "auc_exact_sql", "calibration_bins", "calibration_bins_sql"]
 
 
@@ -46,11 +44,11 @@ def auc_exact(
     (:func:`~tidier_spark.window.scale_safe_cumulative` — range-bucket
     on score, per-bucket local prefix, n-row offset broadcast): a
     CONTINUOUS double score makes distinct ≈ rows, and the naive
-    ``OVER (ORDER BY score)`` over that frame is a single-task funnel
-    (verdict r08 task #2).  The distinct-score rows are tie-free by
-    construction, so the exclusive prefix is the exact integer
-    inclusive prefix minus the row's own count — bit-identical to the
-    single-window plan (pinned in tests).  GROUPED, the window
+    ``OVER (ORDER BY score)`` over that frame is a single-task funnel.
+    The distinct-score rows are tie-free by construction, so the
+    exclusive prefix is the exact integer inclusive prefix minus the
+    row's own count — bit-identical to the single-window plan (pinned
+    in tests).  GROUPED, the window
     partitions on the keys — parallel across groups; a single skewed
     group has the same story as any grouped aggregate.
 
@@ -60,14 +58,14 @@ def auc_exact(
     AUC is undefined with one class, and both engines agree via the
     NULL-on-zero-denominator guard).
 
-    Exact-integer domain (ADVICE r8): the rank-sum ``2U`` grows as
+    Exact-integer domain: the rank-sum ``2U`` grows as
     ~``n_pos · 2n``, so BIGINT holds it while ``2n² < 2^63`` — about
     **2.1e9 scored rows per group** (and ``auc_den = 2·n_pos·n_neg``
     overflows at the same order).  Past that, ANSI mode raises loudly
     rather than silently wrapping; an eval set that large should be
     sampled or sharded (``by=``) anyway.
 
-    ``split_points`` (ungrouped only, r13): static bucket boundaries for
+    ``split_points`` (ungrouped only): static bucket boundaries for
     the distributed prefix, replacing the percentile pass over the raw
     rows.  ANY ascending literals in the score domain are CORRECT — the
     bucket id only drives the parallel decomposition, the integer prefix
@@ -108,10 +106,10 @@ def auc_exact(
             F.coalesce(F.sum("__c").over(w), F.lit(0)).cast("long"),
         )
     else:
-        from ..window import scale_safe_cumulative
+        from ..window import _split_points, scale_safe_cumulative
 
         # bucket split points: caller-supplied literals when the score
-        # domain is known (skips the data pass entirely — r13), else a
+        # domain is known (skips the data pass entirely), else a
         # percentile pass over the RAW rows, not over per_score: any
         # monotone literals are correct (only balance varies — and
         # row-weighted balance is what we want), and the raw scan is one
@@ -123,16 +121,7 @@ def auc_exact(
         if split_points is not None:
             splits = sorted(set(split_points))
         elif n_parts >= 2:
-            probs = [(i + 1) / n_parts for i in range(n_parts - 1)]
-            row = base.select(
-                F.percentile_approx(
-                    score_col,
-                    json_lit(probs, "array<double>"),
-                    F.lit(10_000),
-                ).alias("s")
-            ).collect()
-            arr = row[0]["s"] if row else None
-            splits = sorted({v for v in (arr or []) if v is not None})
+            splits = sorted(set(_split_points(base, F.col(score_col), n_parts)))
         ranked = scale_safe_cumulative(
             per_score,
             "__c",

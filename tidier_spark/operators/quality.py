@@ -883,7 +883,8 @@ def robust_outliers(
     the keys, tiny result broadcast back), then per-group MAD of the
     residuals (same shape).  Group stats are |groups| rows — AQE
     broadcasts both joins; the data rows themselves NEVER shuffle (plan
-    snapshot in docs/PLANS.md).  ``exact=False`` swaps the sort-based
+    snapshot: ``python scripts/explain_all.py <out_dir> <suffix>
+    robust_outliers``).  ``exact=False`` swaps the sort-based
     exact percentile for ``percentile_approx`` (bounded state, the
     100 TB lowering — same plan shape, sketch accuracy).  MAD-after-
     median is inherently two passes, and the lazy plan re-reads the base

@@ -184,29 +184,28 @@ def exact_quantiles(
     * default (``coarse_groups=False``): the cumulative count is one
       window per group — parallelism scales with the NUMBER of groups,
       the right shape for high-cardinality keys (millions of groups);
-    * ``coarse_groups=True``: a range partitioner on (keys, value)
-      spreads each group's value range over every core and the prefix
-      runs as the textbook two-pass distributed scan (per-partition
-      prefix + broadcast exclusive offsets) — the right shape when a
-      FEW huge groups would otherwise serialize on one task per group.
-      The offset table is O(n_partitions × groups) rows and must stay
-      broadcastable, which is exactly the coarse-group regime.
+    * ``coarse_groups=True``: value-range buckets spread each group's
+      values over every core, and the cumulative count runs as the
+      library's two-pass distributed prefix scan
+      (:func:`tidier_spark.window._prefix_scan`: per-bucket prefix, then
+      the earlier buckets' totals joined back as offsets, NULL-safe on
+      the group keys) — the right shape when a FEW huge groups would
+      otherwise serialize on one task per group.  The offset table is
+      O(n_partitions × groups) rows, small in exactly the coarse-group
+      regime.
 
     ``by=None`` computes GLOBAL quantiles (one output row): the default
     regime runs its cumulative count over the distinct values in a
     single task (bounded by distinct-value cardinality, not row count);
     ``coarse_groups=True`` is the scale path — the whole value range is
-    range-partitioned across every core, the one-row total arriving via
-    a broadcast cross join.
+    bucketed across every core, and the offsets and the one total
+    arrive in one broadcast join.
 
-    ``coarse_groups=True`` runs ONE eager bounded pass at call time (the
-    percentile split-point collect that fixes the value buckets as
-    literals) — the bucket id is then a pure function of the row, so
-    every plan branch sees one ``__pid`` assignment under any
-    re-execution with no materialization of the aggregate (round 7;
-    previously an eager localCheckpoint pinned a sampled
-    repartitionByRange for the same guarantee at the cost of writing
-    the whole (group, value, count) frame).
+    ``coarse_groups=True`` runs eager work at call time: it
+    materializes the cardinality-bounded (group, value, count) frame
+    with ``localCheckpoint`` and collects percentile split points from
+    it, so the value bucket id is a pure function of the row and every
+    plan branch sees one ``__pid`` assignment under any re-execution.
     """
     from pyspark.sql import Window
 
@@ -218,62 +217,26 @@ def exact_quantiles(
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     if coarse_groups:
-        from ..window import _det_bucket_id
+        from ..window import _det_bucket_id, _Partial, _prefix_scan
 
-        n_part = df.sparkSession.sparkContext.defaultParallelism
-        # DETERMINISTIC value-range bucket id (round 7): a pure function
-        # of the row (percentile split points embedded as literals), so
-        # every branch — local prefix, totals, broadcast offsets — sees
-        # ONE pid assignment under any re-execution/replan, with no
-        # eager materialization.  (The former repartitionByRange +
-        # spark_partition_id + localCheckpoint pinned the sampled
-        # boundaries by materializing the aggregate — correct, but an
-        # extra write of the whole (group, value, count) frame; the
-        # literal-bucket id needs only one bounded percentile pass.)
         # Bucketing on the VALUE alone spreads every group's range over
         # all buckets — exactly the coarse-group regime — and within a
-        # group, pid ordering follows value ordering, which is all the
-        # prefix logic requires.  Order matters for cost: materialize
-        # the cardinality-bounded counts FIRST (localCheckpoint — the
-        # four branches below would otherwise each recompute its
-        # shuffle), then take split points from the materialized frame
-        # (a sub-second percentile job over distinct cells, the same
-        # distinct-mass balance the old range partitioner sampled).
+        # group bucket order follows value order, which is all the prefix
+        # scan requires.  The bucket id is a pure function of the row
+        # (split points embedded as literals), so every branch of the
+        # scan sees ONE assignment under any re-execution.  Materialize
+        # the cardinality-bounded counts FIRST: the scan's branches would
+        # otherwise each recompute its shuffle, and the split points then
+        # come from a sub-second pass over the distinct cells.
         base = counts.localCheckpoint(eager=True)
-        pid = _det_bucket_id(
-            base, F.col(col), n_part, desc=False, null_last=False
+        n = df.sparkSession.sparkContext.defaultParallelism
+        pid = _det_bucket_id(base, F.col(col), n, desc=False, null_last=False)
+        count = _Partial("__hi", F.sum("__c"), F.sum("__c"), F.sum, zero=0)
+        cum, _ = _prefix_scan(
+            base.withColumn("__pid", pid.cast("int")),
+            [count], order=[F.col(col)], by=keys, grand="__n",
         )
-        ranged = base.withColumn("__pid", pid.cast("int"))
-        w_local = (
-            Window.partitionBy("__pid", *keys)
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        local = ranged.withColumn("__hi_local", F.sum("__c").over(w_local))
-        totals = ranged.groupBy("__pid", *keys).agg(
-            F.sum("__c").alias("__tot")
-        )
-        w_prev = (
-            Window.partitionBy(*keys)
-            .orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offs = totals.select(
-            "__pid", *keys, F.sum("__tot").over(w_prev).alias("__off")
-        )
-        ntot = totals.groupBy(*keys).agg(F.sum("__tot").alias("__n"))
-        cum = local.join(F.broadcast(offs), ["__pid", *keys], "left")
-        # ungrouped: ntot is ONE global row — a broadcast cross join,
-        # not an equi-join on an empty key list (which Spark rejects).
-        # This is exactly the single-huge-group regime coarse_groups
-        # exists for, so the global case must work.
-        if keys:
-            cum = cum.join(F.broadcast(ntot), list(keys))
-        else:
-            cum = cum.crossJoin(F.broadcast(ntot))
-        cum = cum.withColumn(
-            "__hi", F.col("__hi_local") + F.coalesce("__off", F.lit(0))
-        ).withColumn("__lo", F.col("__hi") - F.col("__c"))
+        cum = cum.withColumn("__lo", F.col("__hi") - F.col("__c"))
     else:
         w = Window.partitionBy(*keys).orderBy(col)
         # same partition+order spec for both frames → one WindowExec pass
@@ -318,7 +281,7 @@ def exact_quantiles(
             # value's count range — the built-in's value->count buffer
             # short-circuits there without interpolating, and
             # v*(c-pos) + v*(pos-f) is NOT exactly v in IEEE (399 ->
-            # 399.00000000000006; hypothesis-found divergence, round 7)
+            # 399.00000000000006; a divergence found by hypothesis)
             F.when((fpos == cpos) | (v_lo == v_hi), v_lo)
             .otherwise(
                 v_lo * (cpos.cast("double") - pos)
@@ -489,7 +452,6 @@ def topk_merged(
     by: object = None,
     sketch_col: str = "topk_sketch",
     max_items_tracked: int = 10_000,
-    overfetch: int = 8,
 ) -> DataFrame:
     """Merge previously-built heavy-hitters sketches per group and emit
     the top ``k`` items as rows ``(item, est_freq, topk_rank)``.
@@ -507,7 +469,7 @@ def topk_merged(
     silently loses even the heaviest items (measured, Spark 4.1: 84
     partials of ~65k tracked items each, combined at
     maxItemsTracked=100k → ``approx_top_k_estimate`` returns an EMPTY
-    list; at 250k → 7 items).  Found by the r9 sf-jump probe at 200k
+    list; at 250k → 7 items).  Found by an sf-jump probe at 200k
     distinct parts, minimal repro in ``tests/test_sketches_scale.py``.
     Summing per-sketch counts is the standard frequent-items merge:
     EXACT whenever no partial evicted (each cell's distinct cardinality
@@ -516,8 +478,7 @@ def topk_merged(
 
     The final ranking is deterministic (freq desc, item asc) over the
     complete merged list (bounded by n_partials × max_items_tracked
-    rows).  ``overfetch`` is retained for API compatibility; the merged
-    list is already complete, so no pre-rank cut is applied.
+    rows), so no pre-rank cut is applied.
 
     PRECONDITION (differs from the old combine path, which re-capped at
     merge time): ``max_items_tracked`` must be <= every partial's
@@ -538,13 +499,11 @@ def topk_merged(
 
     if k < 0:
         raise ValueError(f"topk_merged: k must be >= 0, got {k}")
-    if overfetch < 1:
-        raise ValueError(f"topk_merged: overfetch must be >= 1, got {overfetch}")
     keys = _keys(by)
     mit = int(max_items_tracked)
     # NOTE: this string is spliced inside a single-quoted SQL literal —
     # Spark's default lexer escapes with backslash, NOT doubled quotes,
-    # so keep it apostrophe-free (advice r10: ''s lexed as two adjacent
+    # so keep it apostrophe-free (''s lexed as two adjacent
     # literals and rendered "sketchs").
     err = (
         f"topk_merged: max_items_tracked ({mit}) exceeds the build-time "

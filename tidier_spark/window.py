@@ -19,8 +19,11 @@ pass ``by``.
 from __future__ import annotations
 
 import math
+import operator
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -233,15 +236,126 @@ def compile_window(
     return WindowPlan(spec=spec, partition_cols=part_cols)
 
 
+# --- the two-pass distributed prefix scan ---------------------------------
+
+
+class _Partial(NamedTuple):
+    """One aggregate that :func:`_prefix_scan` carries through the buckets.
+
+    ``running`` is evaluated inside each bucket in scan order and
+    ``total`` once per bucket; ``merge`` folds the earlier buckets'
+    totals into the row's exclusive offset, and ``combine(local,
+    offset)`` is its prefix, written to ``out``.  ``zero`` is the offset
+    of a key's first bucket; without one that offset stays NULL and a
+    NULL side carries the other, so a bucket head whose operands are all
+    NULL keeps the earlier buckets' offset, as the single-window prefix
+    does.  ``cols`` names the local, bucket-total and offset helpers.
+    """
+
+    out: str
+    running: Column
+    total: Column
+    merge: Callable[[Column], Column]
+    combine: Callable[[Column, Column], Column] = operator.add
+    zero: int | None = None
+    cols: tuple[str, str, str] = ("__local", "__tot", "__off")
+
+
+def _prefix_scan(
+    ranged: DataFrame,
+    partials: list[_Partial],
+    *,
+    order: list[Column],
+    by: list[str] | None = None,
+    pid: str = "__pid",
+    grand: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Inclusive prefix aggregates over range buckets, with no
+    single-partition window over the data.
+
+    The classic two-pass distributed prefix scan (Blelloch, "Prefix Sums
+    and Their Applications", CMU-CS-90-190), which every scale-safe
+    lowering shares:
+
+    1. each partial's running value inside its ``(by..., pid)`` bucket,
+       ordered by ``order`` — n parallel tasks per key;
+    2. one aggregate of the bucket totals, then per key an EXCLUSIVE
+       merge of the earlier buckets' totals — a window over at most n
+       rows per key (totals, not data);
+    3. the offsets join back: a broadcast on ``pid`` when ``by`` is
+       empty, else an equi-join on ``(by..., pid)`` that is NULL-safe on
+       the keys (window partitioning keeps the NULL key's rows together,
+       and a plain equi-join would silently drop them).
+
+    ``ranged`` must carry the bucket id ``pid`` from
+    :func:`_det_bucket_id`, whose buckets are contiguous ranges of the
+    leading order key, so bucket order is scan order.  Returns
+    ``(scanned, offsets)``: ``scanned`` is ``ranged`` plus each
+    partial's ``out`` (and ``grand``); ``offsets`` is the per-bucket
+    table ``(by..., pid, totals..., offsets...)``.  ``grand`` names the
+    first partial's merged total over all of a key's buckets.
+    """
+    by = list(by or [])
+    w_local = (
+        Window.partitionBy(*by, pid)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_prev = (
+        Window.partitionBy(*by)
+        .orderBy(pid)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    local = ranged
+    for p in partials:
+        local = local.withColumn(p.cols[0], p.running.over(w_local))
+    offsets = ranged.groupBy(*by, pid).agg(
+        *[p.total.alias(p.cols[1]) for p in partials]
+    )
+    for p in partials:
+        off = p.merge(F.col(p.cols[1])).over(w_prev)
+        if p.zero is not None:
+            off = F.coalesce(off, F.lit(p.zero))
+        offsets = offsets.withColumn(p.cols[2], off)
+    carried = [p.cols[2] for p in partials]
+    if grand:
+        first = partials[0]
+        w_all = w_prev.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        offsets = offsets.withColumn(grand, first.merge(F.col(first.cols[1])).over(w_all))
+        carried.append(grand)
+    if by:
+        keys = [f"__byk{i}" for i in range(len(by))]
+        rhs = offsets.select(
+            *[F.col(b).alias(k) for b, k in zip(by, keys)],
+            F.col(pid).alias(f"{pid}_r"),
+            *carried,
+        )
+        cond = F.col(pid) == F.col(f"{pid}_r")
+        for b, k in zip(by, keys):
+            cond = cond & F.col(b).eqNullSafe(F.col(k))
+        joined = local.join(rhs, cond).drop(f"{pid}_r", *keys)
+    else:
+        joined = local.join(F.broadcast(offsets.select(pid, *carried)), pid, "left")
+    for p in partials:
+        lc, oc = F.col(p.cols[0]), F.col(p.cols[2])
+        value = p.combine(lc, oc)
+        if p.zero is None:
+            value = F.when(oc.isNull(), lc).when(lc.isNull(), oc).otherwise(value)
+        joined = joined.withColumn(p.out, value)
+    helpers = [c for p in partials for c in (p.cols[0], p.cols[2])]
+    return joined.drop(*helpers), offsets
+
+
 # --- scale-safe ungrouped cumulatives --------------------------------------
 
-# fn → (partial aggregator, partial-total MERGE aggregator, row combiner);
-# count merges by SUMMING partial counts — counting them would be wrong.
+# fn → (partial aggregator, partial-total MERGE aggregator, row combiner,
+# first-bucket offset); count merges by SUMMING partial counts — counting
+# them would be wrong — and its prefix is never NULL.
 _PREFIX_COMBINE = {
-    "sum": (F.sum, F.sum, lambda local, off: local + off),
-    "count": (F.count, F.sum, lambda local, off: local + off),
-    "max": (F.max, F.max, F.greatest),
-    "min": (F.min, F.min, F.least),
+    "sum": (F.sum, F.sum, operator.add, None),
+    "count": (F.count, F.sum, operator.add, 0),
+    "max": (F.max, F.max, F.greatest, None),
+    "min": (F.min, F.min, F.least, None),
 }
 
 # (local prefix, bucket total, bucket offset) helper names per partial;
@@ -262,16 +376,14 @@ def scale_safe_cumulative(
     """Ungrouped ordered cumulative WITHOUT the single-partition window.
 
     A global ``sum(x) OVER (ORDER BY k)`` funnels every row through one
-    task — the classic scale cliff.  This lowering is the textbook two-pass
-    distributed prefix aggregate:
-
-    1. a DETERMINISTIC range-bucket id ``__pid`` (percentile split points
-       embedded as literals — equal keys share a bucket; see
-       :func:`_det_bucket_id` for why ``repartitionByRange`` +
-       ``spark_partition_id()`` is unsound when plan branches re-execute);
-    2. per-bucket prefix via a window on ``__pid`` — n parallel tasks;
-    3. per-bucket totals (n tiny rows) get an EXCLUSIVE prefix combine
-       and broadcast-join back as offsets.
+    task — the classic scale cliff.  This lowering range-buckets the rows
+    with a DETERMINISTIC bucket id ``__pid`` (percentile split points
+    embedded as literals — equal keys share a bucket; see
+    :func:`_det_bucket_id` for why ``repartitionByRange`` +
+    ``spark_partition_id()`` is unsound when plan branches re-execute)
+    and runs the two-pass prefix scan of :func:`_prefix_scan`: a
+    per-bucket prefix in n parallel tasks, plus the earlier buckets'
+    totals broadcast back as offsets.
 
     Exact for integer/decimal aggregates; for doubles the additions
     re-associate (same caveat any distributed sum has).  ``fn="avg"``
@@ -289,7 +401,8 @@ def scale_safe_cumulative(
             "scale_safe cumulative supports "
             f"{sorted([*_PREFIX_COMBINE, 'avg'])}, got {fn!r}"
         )
-    partials = ("sum", "count") if fn == "avg" else (fn,)
+    parts = ("sum", "count") if fn == "avg" else (fn,)
+    outs = ("__psum", "__pcnt") if fn == "avg" else (out,)
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
     ocols = [_as_col(c) for c in order_by]
     lead = order_by[0]
@@ -302,34 +415,19 @@ def scale_safe_cumulative(
         df, lead_key, n, desc=False, null_last=False, splits=split_points
     )
     ranged = df.withColumn("__pid", pid.cast("int"))
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(*ocols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_prev = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # n rows total — a single task here is free
     value = F.expr(expr)
-    local, tots, offs, results, helpers = ranged, [], [], [], ["__pid"]
-    for part, (lc, tc, oc) in zip(partials, _PREFIX_COLS):
-        agg, merge, combine = _PREFIX_COMBINE[part]
-        local = local.withColumn(lc, agg(value).over(w_local))
-        tots.append(agg(value).alias(tc))
-        offs.append(merge(F.col(tc)).over(w_prev).alias(oc))
-        # a bucket head whose prefix operands are all NULL carries the
-        # earlier buckets' offset, as the single-window prefix does
-        results.append(
-            F.when(F.col(oc).isNull(), F.col(lc))
-            .when(F.col(lc).isNull(), F.col(oc))
-            .otherwise(combine(F.col(lc), F.col(oc)))
+    partials = []
+    for part, name, cols in zip(parts, outs, _PREFIX_COLS):
+        agg, merge, combine, zero = _PREFIX_COMBINE[part]
+        partials.append(
+            _Partial(name, agg(value), agg(value), merge, combine, zero, cols)
         )
-        helpers += [lc, oc]
-    totals = ranged.groupBy("__pid").agg(*tots)
-    offsets = totals.select("__pid", *offs)
-    joined = local.join(F.broadcast(offsets), "__pid", "left")
-    result = results[0] / results[1] if fn == "avg" else results[0]
-    return joined.withColumn(out, result).drop(*helpers)
+    scanned, _ = _prefix_scan(ranged, partials, order=ocols)
+    if fn == "avg":
+        scanned = scanned.withColumn(
+            out, F.col("__psum") / F.col("__pcnt")
+        ).drop("__psum", "__pcnt")
+    return scanned.drop("__pid")
 
 
 def _ordered_cols(order_by: list[object], desc: bool | list[bool]) -> list[Column]:
@@ -399,6 +497,21 @@ def string_key_literal(value: str) -> int:
     return int(hx, 16)
 
 
+def _split_points(df: DataFrame, key: Column, n: int) -> list:
+    """The ``n - 1`` percentile boundaries that cut ``key``'s rows into
+    ``n`` balanced ranges, ascending: one aggregate pass over ``df``
+    collected to the driver (a model-sized artifact).  NULL boundaries
+    (no non-NULL key) are dropped; ties can repeat a boundary."""
+    probs = [(i + 1) / n for i in range(n - 1)]
+    row = df.select(
+        F.percentile_approx(
+            key, F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
+        ).alias("s")
+    ).collect()
+    arr = row[0]["s"] if row else None
+    return [v for v in (arr or []) if v is not None]
+
+
 def _det_bucket_id(
     df: DataFrame,
     key: Column,
@@ -409,8 +522,8 @@ def _det_bucket_id(
     splits: list | None = None,
 ) -> Column:
     """Deterministic range-bucket id in [0, n): percentile split points
-    collected ONCE (one aggregate pass, a model-sized driver artifact)
-    and embedded as literals, so the id is a PURE FUNCTION of the row.
+    collected ONCE (:func:`_split_points`) and embedded as literals, so
+    the id is a PURE FUNCTION of the row.
 
     ``spark_partition_id()`` after ``repartitionByRange`` is NOT that:
     the range exchange samples per execution, and a plan whose branches
@@ -432,14 +545,7 @@ def _det_bucket_id(
     if n < 2:
         return F.lit(0)
     if splits is None:
-        probs = [(i + 1) / n for i in range(n - 1)]
-        row = df.select(
-            F.percentile_approx(
-                key, F.array(*[F.lit(p) for p in probs]), F.lit(10_000)
-            ).alias("s")
-        ).collect()
-        arr = row[0]["s"] if row else None
-        splits = [v for v in (arr or []) if v is not None]
+        splits = _split_points(df, key, n)
     if not splits:
         return F.lit(0)
     if desc:
@@ -492,13 +598,13 @@ def scale_safe_frame(
     caller computes aggregates with ``plan.over(call)``, filters on the
     predicate, and drops the helpers.  The plan is Tier A (a
     ``WindowSpec``) except for calendar frames, which are Tier B.  ROWS
-    frames use a synthetic global row index (per-bucket ``row_number`` +
-    broadcast prefix offsets), so the window's ORDER BY is tie-free by
-    construction; the leading order key must be
-    numeric/date/timestamp/string (strings via the 8-byte UTF-8 prefix
-    projection of :func:`_bucket_order_key`, with its prefix-collapse
-    hazard; unsupported types raise, and mutate falls back to the
-    reference-faithful lowering).  RANGE frames require a non-NULL
+    frames use a synthetic global row index (per-bucket ``row_number``
+    plus the earlier buckets' row counts, one :func:`_prefix_scan`), so
+    the window's ORDER BY is tie-free by construction; the leading order
+    key must be numeric/date/timestamp/string (strings via the 8-byte
+    UTF-8 prefix projection of :func:`_bucket_order_key`, with its
+    prefix-collapse hazard; unsupported types raise, and mutate falls
+    back to the reference-faithful lowering).  RANGE frames require a non-NULL
     index (checked JVM-side per row, loud error).
 
     CALENDAR frames (months/years over a timestamp index) take the same
@@ -524,29 +630,23 @@ def scale_safe_frame(
     stay exact (extra copies are non-home or out of the key's frame; the
     window's PARTITION BY key keeps other keys' rows out).
 
-    ROWS: per-key ROW offsets don't map onto global buckets, so the
-    global-superset trick fails (a same-key row 3 positions back
-    can be arbitrarily far on the order axis).  Instead the lowering
-    builds a PER-KEY dense row index scale-safely — a deterministic
-    global order-bucket ``__opid`` (split points on the leading order
-    key — hot keys split across buckets), per-(key, bucket) local
-    ``row_number``, and per-key exclusive prefix offsets over the
-    per-cell counts (a window with at most n rows per key — counts,
-    not data; one equi-join on the anti-skew (key, bucket) composite
-    attaches the offsets) — then re-chunks each key's index into
-    UNIFORM supercells of ``chunk = max(2*reach, ceil(nk/n))`` rows.
-    A hot key splits into <= n supercells; a key smaller than two
-    frame-widths stays whole with zero halo copies; duplication is
-    bounded by reach/chunk <= 50% regardless of the key-size
-    distribution.  Because supercells are uniform index ranges, each
-    row's target list is the closed-form ``sequence(floor((g-hi')/c),
-    floor((g-lo')/c))`` — no array join.  The copied per-key index set
-    per target supercell is a CONTIGUOUS superset of its home rows'
-    frames, so physical ROWS offsets inside ``(key, __tpid)`` equal
-    per-key index offsets and results match the default grouped plan
-    bit-for-bit (hash-pinned in tests/test_plans.py).  Grouped ROWS
-    requires string ``by`` names (they feed groupBy/join); non-string
-    keys raise and mutate falls back to the default grouped lowering.
+    ROWS: per-key ROW offsets don't map onto global buckets (a same-key
+    row 3 positions back can be arbitrarily far on the order axis), so
+    the lowering builds a PER-KEY dense row index: :func:`_prefix_scan`
+    over ``(key, __opid)`` cells, ``__opid`` being the global order
+    bucket (a hot key splits across buckets; at most n offset rows per
+    key).  It then re-chunks each key's index into UNIFORM supercells of
+    ``chunk = max(2*reach, ceil(nk/n))`` rows: a hot key splits into
+    <= n supercells, a key smaller than two frame-widths stays whole
+    with zero halo copies, and duplication stays <= reach/chunk <= 50%
+    for any key-size distribution.  A row's targets are the closed-form
+    ``sequence(floor((g-hi')/c), floor((g-lo')/c))`` — no array join.
+    Each target supercell's copies are a CONTIGUOUS superset of its home
+    rows' frames, so physical ROWS offsets inside ``(key, __tpid)``
+    equal per-key index offsets and results match the default grouped
+    plan bit-for-bit (hash-pinned in tests/test_plans.py).  Grouped ROWS
+    needs string ``by`` names; non-string keys raise and mutate falls
+    back to the default grouped lowering.
     """
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
 
@@ -656,61 +756,22 @@ def scale_safe_frame(
         df, lead_key, n, desc=lead_desc, null_last=lead_desc
     )
 
+    # per-bucket row_number plus the earlier buckets' row counts: a dense
+    # 0-based index in the (per-key) total order
+    row_index = _Partial(
+        "__gidx", F.row_number(), F.count(F.lit(1)), F.sum,
+        lambda lrn, off: lrn - 1 + off, zero=0, cols=("__lrn", "__cnt", "__off"),
+    )
+
     if by:
         # --- grouped ROWS: per-key dense index + uniform supercells -------
         ranged = df.withColumn("__opid", pid.cast("int"))
-        w_cell = Window.partitionBy(*by, "__opid").orderBy(*ocols)
-        loc = ranged.withColumn("__lrn", F.row_number().over(w_cell))
-        cells = ranged.groupBy(*by, "__opid").agg(
-            F.count(F.lit(1)).alias("__cnt")
+        gdf, _ = _prefix_scan(
+            ranged, [row_index], order=ocols, by=by, pid="__opid", grand="__nk"
         )
-        # per-key windows over the CELL table: at most n rows per key
-        # (counts, not data) — no hot-key straggler here
-        w_prev = (
-            Window.partitionBy(*by)
-            .orderBy("__opid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        w_key = (
-            Window.partitionBy(*by)
-            .orderBy("__opid")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        offs = cells.withColumn(
-            "__off", F.coalesce(F.sum("__cnt").over(w_prev), F.lit(0))
-        )
-        offs = offs.withColumn("__nk", F.sum("__cnt").over(w_key)).select(
-            *by, "__opid", "__off", "__nk"
-        )
-        # one equi-join on (key, order-bucket) — the anti-skew composite
-        # key — attaches the prefix offset and the per-key row count.
-        # NULL-SAFE on the key columns: SQL window partitioning groups
-        # NULL keys into ONE partition, and a null-unsafe equi-join
-        # would silently DROP those rows (the nullkeys edge-sweep axis).
-        rhs = offs.select(
-            *[F.col(b).alias(f"__byk{i}") for i, b in enumerate(by)],
-            F.col("__opid").alias("__opid_r"),
-            "__off",
-            "__nk",
-        )
-        cond = F.col("__opid") == F.col("__opid_r")
-        for i, b in enumerate(by):
-            cond = cond & F.col(b).eqNullSafe(F.col(f"__byk{i}"))
-        gdf = (
-            loc.join(rhs, cond)
-            .drop("__opid_r", *[f"__byk{i}" for i in range(len(by))])
-            .withColumn("__gidx", F.col("__lrn") - 1 + F.col("__off"))
-            .drop("__lrn", "__off")
-        )
-        # Re-chunk each key's dense index into UNIFORM supercells of
-        # chunk = max(2*reach, ceil(nk/n)) rows: a hot key splits into
-        # <= n supercells while a key smaller than two frame-widths
-        # stays whole with ZERO halo copies, and duplication is bounded
-        # by reach/chunk <= 50% regardless of the key-size distribution
-        # (per-key CELLS as targets would copy ~width/cell_size per
-        # small key — measured 10x blowup when width >> nk/n).  Because
-        # supercells are uniform index ranges, a row's target list is a
-        # closed-form sequence — no array join needed.
+        # uniform supercells of the per-key index (see the docstring);
+        # per-key CELLS as targets would copy ~width/cell_size per small
+        # key — measured 10x blowup when width >> nk/n
         lo2, hi2 = min(lo, 0), max(hi, 0)
         reach = hi2 - lo2
         chunk = F.greatest(
@@ -739,26 +800,11 @@ def scale_safe_frame(
         return copied, plan, home, ["__opid", "__pid", "__tpid", "__gidx"]
 
     ranged = df.withColumn("__pid", pid.cast("int"))
-    w_local = Window.partitionBy("__pid").orderBy(*ocols)
-    loc = ranged.withColumn("__lrn", F.row_number().over(w_local))
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_prev = Window.orderBy("__pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # n rows total — single-task here is free
-    offs = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_prev), F.lit(0)).alias("__off"),
-        "__cnt",
-    )
+    gdf, offs = _prefix_scan(ranged, [row_index], order=ocols)
     bounds = offs.select(
         F.col("__pid").alias("__tpid"),
         F.col("__off").alias("__start"),
         (F.col("__off") + F.col("__cnt") - 1).alias("__end"),
-    )
-    gdf = (
-        loc.join(F.broadcast(offs.select("__pid", "__off")), "__pid")
-        .withColumn("__gidx", F.col("__lrn") - 1 + F.col("__off"))
-        .drop("__lrn", "__off")
     )
     # copy row h into every target whose home frames reach it; widening to
     # [start+min(lo,0), end+max(hi,0)] keeps each bucket's global-index
